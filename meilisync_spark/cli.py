@@ -32,6 +32,7 @@ from meilisync_spark.sources.events import normalize_events
 from meilisync_spark.sources.parquet import load_path
 from meilisync_spark.streaming.pipeline import (
     PAYLOAD_COLS,
+    CatchUpTimeout,
     run_cdc_pipeline,
     run_settings_pipeline,
 )
@@ -76,6 +77,15 @@ def _init_ops(spark, settings) -> None:
 
 
 def cmd_start(args: argparse.Namespace) -> int:
+    try:
+        return _start(args)
+    except CatchUpTimeout as exc:
+        # --timeout cut a catch-up run short: not "sync complete"
+        print(f"error: {exc}", file=sys.stderr)
+        return 1
+
+
+def _start(args: argparse.Namespace) -> int:
     spark = get_spark("meilisync-spark-start")
     settings = _settings(args)
     _init_ops(spark, settings)
@@ -737,7 +747,11 @@ def build_parser() -> argparse.ArgumentParser:
                     help="DDL row schema for --envelope, e.g. 'id long, v double'")
     st.add_argument("--envelope-pk", dest="envelope_pk", default="id",
                     help="pk field inside the envelope payload")
-    st.add_argument("--timeout", type=float, default=120.0)
+    st.add_argument(
+        "--timeout", type=float, default=120.0,
+        help="seconds before start stops the stream; a catch-up run cut "
+        "short exits non-zero and the next start resumes from the checkpoint",
+    )
     st.set_defaults(fn=cmd_start)
 
     rf = sub.add_parser("refresh", help="rebuild the index behind a shadow swap")

@@ -23,6 +23,24 @@ rewritten every 10 seconds). The scale-safe layout, realized here:
   deployment would use; the directory-swap protocol below is the
   self-contained fallback.
 
+Write parallelism: every bucket write (bootstrap, per-batch MERGE,
+rebucket) goes through :func:`_write_buckets`, which hash-partitions on
+the bucket id into ``min(buckets written, spark.sql.shuffle.partitions)``
+tasks. A bucket's rows all land in one task, so each bucket directory
+still holds exactly one file; a task simply writes several whole
+buckets when there are more buckets than shuffle partitions. On a
+cluster (shuffle partitions ≥ buckets) that is one bucket per task; on
+a 4-core host a batch touching 64 buckets runs 4 write tasks instead of
+64, each of which pays task start, shuffle fetch and commit.
+
+Listing: reading bucket directories lists them on the driver
+(``spark.sql.sources.parallelPartitionDiscovery.threshold`` in
+:data:`meilisync_spark.session.RUNTIME_CONF`). Spark's default lists
+more than 32 paths with a Spark job — one task per directory, ~300 ms
+for 64 local directories. The layout needs a POSIX path anyway (its
+swaps are ``os.rename``), where a driver-side listing costs
+microseconds per directory.
+
 Atomicity: each bucket directory swap is a single rename (readers of a
 bucket see old-or-new, never half). The batch is not atomic *across*
 buckets — a reader scanning the whole index mid-swap can see bucket K
@@ -156,6 +174,22 @@ def read_buckets(
     return reader.parquet(*paths).drop(BUCKET_COL)
 
 
+def _write_buckets(df: DataFrame, path: str, num_buckets: int) -> None:
+    """Write ``df`` (carrying :data:`BUCKET_COL`, at most ``num_buckets``
+    distinct values) as ``path/bucket=K/`` with one file per bucket.
+
+    Hash-partitioning on the bucket id keeps every bucket in one task;
+    capping the task count at the shuffle partitions lets a task write
+    several whole buckets instead of starting one task per bucket."""
+    shuffle_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    (
+        df.repartition(max(1, min(num_buckets, shuffle_partitions)), BUCKET_COL)
+        .write.mode("overwrite")
+        .partitionBy(BUCKET_COL)
+        .parquet(path)
+    )
+
+
 def _write_meta(index_path: str, pk: str, num_buckets: int) -> None:
     if os.path.isdir(index_path):
         with open(os.path.join(index_path, META_FILE), "w") as fh:
@@ -192,12 +226,7 @@ def init_bucketed_index(
     """Bootstrap the bucketed layout from a full snapshot: one shuffle
     on the bucket id, one file per bucket directory."""
     out = df.withColumn(BUCKET_COL, bucket_expr(pk, num_buckets))
-    (
-        out.repartition(num_buckets, BUCKET_COL)
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(index_path)
-    )
+    _write_buckets(out, index_path, num_buckets)
     _write_meta(index_path, pk, num_buckets)
 
 
@@ -229,12 +258,10 @@ def rebucket_index(
     df = read_buckets(spark, index_path)
     tag = uuid.uuid4().hex[:8]
     staging = f"{index_path}_stg-{tag}"
-    (
-        df.withColumn(BUCKET_COL, bucket_expr(pk, new_num_buckets))
-        .repartition(new_num_buckets, BUCKET_COL)
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(staging)
+    _write_buckets(
+        df.withColumn(BUCKET_COL, bucket_expr(pk, new_num_buckets)),
+        staging,
+        new_num_buckets,
     )
     _write_meta(staging, pk, new_num_buckets)
     prev = f"{index_path}_prev-{tag}"
@@ -302,12 +329,7 @@ def apply_changes_bucketed(
     # stage only the touched buckets, then swap each directory atomically
     tag = uuid.uuid4().hex[:8]
     staging = f"{index_path}_tmp-{tag}"
-    (
-        merged.repartition(len(touched), BUCKET_COL)
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(staging)
-    )
+    _write_buckets(merged, staging, len(touched))
     for b in touched:
         src = os.path.join(staging, f"{BUCKET_COL}={b}")
         dst = os.path.join(index_path, f"{BUCKET_COL}={b}")

@@ -52,6 +52,14 @@ RUNTIME_CONF: dict[str, str] = {
     # ANSI off: engine follows the reference's permissive coercions
     # (e.g. delete-path pk stringification, meilisync/meili.py:137).
     "spark.sql.ansi.enabled": "false",
+    # List partition directories on the driver. Above the default of 32
+    # paths Spark starts a listing job with one task per directory: a
+    # read of a 64-bucket index (operators/bucketed.py) paid ~300 ms
+    # per micro-batch, check and refresh for it. The bucketed layout is
+    # POSIX-only (its swaps are os.rename), where the driver lists a
+    # directory in microseconds; an object-store layout would need to
+    # revisit this.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
 }
 
 

@@ -166,8 +166,8 @@ def run_ann_ingest(
                     spark, vectors_sidecar_path(index_path), compact_max_dirs
                 )
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    _start_and_await(
+        src.writeStream.foreachBatch(handle),
+        checkpoint_dir, available_now, processing_interval, timeout_sec,
     )
-    _start_and_await(writer, available_now, processing_interval, timeout_sec)
     return retrains["n"]

@@ -688,7 +688,7 @@ def run_corpus_ingest(
         else:
             rows.write.mode("append").parquet(index_path)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    _start_and_await(
+        src.writeStream.foreachBatch(handle),
+        checkpoint_dir, available_now, processing_interval, timeout_sec,
     )
-    _start_and_await(writer, available_now, processing_interval, timeout_sec)

@@ -131,12 +131,26 @@ def read_event_stream(
     return df
 
 
+class CatchUpTimeout(TimeoutError):
+    """An ``availableNow`` run was stopped at its timeout before it
+    caught up; its committed batches stay in the checkpoint."""
+
+
+def _committed_batches(checkpoint_dir: str) -> int:
+    commits = os.path.join(checkpoint_dir, "commits")
+    if not os.path.isdir(commits):
+        return 0
+    return sum(1 for name in os.listdir(commits) if name.isdigit())
+
+
 def _start_and_await(
     writer,
+    checkpoint_dir: str,
     available_now: bool,
     processing_interval: str | None,
     timeout_sec: float | None,
 ):
+    writer = writer.option("checkpointLocation", checkpoint_dir)  # T1 progress store
     if available_now:
         writer = writer.trigger(availableNow=True)  # T5 catch-up
     elif processing_interval:
@@ -146,13 +160,22 @@ def _start_and_await(
         try:
             q.awaitTermination(timeout_sec)
         finally:
-            if q.isActive:
+            cut = q.isActive
+            if cut:
                 q.stop()
         # surface foreachBatch failures instead of reporting a silent
         # "caught up" (the reference loudly retries on stream errors,
         # meilisync/source/mysql.py:127-135 — swallowing is worse)
         if q.exception() is not None:
             raise q.exception()
+        if cut and available_now:
+            # a catch-up run that did not catch up is a failure; follow
+            # mode (processingTime) keeps stop-at-timeout as its exit
+            raise CatchUpTimeout(
+                f"catch-up stopped at its {timeout_sec:g} s timeout with "
+                f"{_committed_batches(checkpoint_dir)} batches committed in "
+                f"{checkpoint_dir}; the next start resumes from there"
+            )
     elif not available_now:
         # follow mode ("tail until killed"): block forever — returning
         # here would let the caller exit and tear the stream down after
@@ -184,6 +207,9 @@ def run_cdc_pipeline(
 ):
     """Run the CDC pipeline until caught up (``available_now``) or until
     ``timeout_sec``. Returns the StreamingQuery (stopped if awaited).
+    An ``available_now`` run still behind at ``timeout_sec`` raises
+    :class:`CatchUpTimeout` after stopping; the next run resumes from the
+    checkpoint.
 
     ``num_buckets`` picks the index layout via
     :func:`~meilisync_spark.operators.bucketed.resolve_num_buckets`:
@@ -265,12 +291,10 @@ def run_cdc_pipeline(
         if post_batch is not None:  # U2 post-write hook
             post_batch(batch_df)
 
-    writer = (
-        normalized.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)  # T1 progress store
-        .outputMode("update")
+    writer = normalized.writeStream.foreachBatch(apply_batch).outputMode("update")
+    return _start_and_await(
+        writer, checkpoint_dir, available_now, processing_interval, timeout_sec
     )
-    return _start_and_await(writer, available_now, processing_interval, timeout_sec)
 
 
 def run_settings_pipeline(
@@ -431,9 +455,7 @@ def run_settings_pipeline(
             if heads:
                 progress.set(**heads)
 
-    writer = (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    writer = events.writeStream.foreachBatch(apply_batch).outputMode("update")
+    return _start_and_await(
+        writer, checkpoint_dir, available_now, processing_interval, timeout_sec
     )
-    return _start_and_await(writer, available_now, processing_interval, timeout_sec)

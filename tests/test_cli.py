@@ -41,6 +41,20 @@ def test_cli_start_check_refresh(spark, tmp_path, capsys):
     assert rc == 1
 
 
+def test_cli_start_cut_by_timeout_exits_nonzero(tmp_path, capsys):
+    rc = main([
+        "start",
+        "--events", f"{SF_SMOKE}/events.parquet",
+        "--index", str(tmp_path / "index"),
+        "--checkpoint", str(tmp_path / "ckpt"),
+        "--timeout", "0.01",
+    ])
+    assert rc == 1
+    captured = capsys.readouterr()
+    assert "sync complete" not in captured.out
+    assert "timeout" in captured.err
+
+
 def test_cli_version(capsys):
     assert main(["version"]) == 0
     assert "meilisync_spark" in json.loads(capsys.readouterr().out.strip())

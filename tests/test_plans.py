@@ -6,6 +6,7 @@ time Python UDFs sneak into relational paths."""
 
 from __future__ import annotations
 
+import os
 import re
 
 from meilisync_spark import queries as Q
@@ -365,3 +366,71 @@ def test_decontaminate_corpus_side_hashes_each_shingle_once(spark):
     # exactly one sha2-over-built-shingle expression: the corpus-side
     # Project (the eval side hashes lambda variables, not concat_ws)
     assert plan.count("sha2(cast(concat_ws") == 1
+
+
+def _group_stage_tasks(spark, group: str) -> list[list[int]]:
+    """Per job of ``group`` (job-id order), the task count of each of
+    its stages (stage-id order)."""
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
+    for jid in sorted(tracker.getJobIdsForGroup(group)):
+        info = tracker.getJobInfo(jid)
+        stages = [tracker.getStageInfo(s) for s in sorted(info.stageIds)]
+        jobs.append([s.numTasks for s in stages if s is not None])
+    return jobs
+
+
+def test_bucketed_apply_task_width_and_driver_listing(spark, tmp_path):
+    """The bucketed MERGE's fixed cost per batch: writing every bucket of
+    a 64-bucket index runs its write stage with at most
+    ``spark.sql.shuffle.partitions`` tasks (several whole buckets per
+    task, still one file per bucket), and reading 64 bucket directories
+    lists them on the driver — only the mergeSchema footer job runs,
+    no 64-task listing job."""
+    from pyspark.sql import functions as F
+
+    from meilisync_spark.operators.bucketed import (
+        BUCKET_COL,
+        apply_changes_bucketed,
+        read_buckets,
+    )
+
+    n_buckets, width = 64, 8  # fewer tasks than buckets: several per task
+    index = str(tmp_path / "index")
+    sc = spark.sparkContext
+    saved_width = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def changes(seq0):
+        return spark.range(2000).select(
+            F.col("id").alias("pk"),
+            (F.col("id") + seq0).alias("seq"),
+            F.lit("create").alias("op"),
+            F.col("id").cast("double").alias("value"),
+        )
+
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        apply_changes_bucketed(
+            spark, index, changes(0), pk="pk", payload_cols=["value"],
+            num_buckets=n_buckets,
+        )
+        sc.setJobGroup("bucketed_apply", "apply touching every bucket")
+        touched = apply_changes_bucketed(
+            spark, index, changes(10_000), pk="pk", payload_cols=["value"],
+            num_buckets=n_buckets,
+        )
+        apply_jobs = _group_stage_tasks(spark, "bucketed_apply")
+        sc.setJobGroup("bucketed_read", "read every bucket")
+        read_buckets(spark, index, range(n_buckets))
+        read_jobs = _group_stage_tasks(spark, "bucketed_read")
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.shuffle.partitions", saved_width)
+
+    assert touched == list(range(n_buckets))
+    # the write is the apply's last job; its result stage the last stage
+    assert apply_jobs[-1][-1] <= width, apply_jobs
+    assert len(read_jobs) <= 1, read_jobs
+    for b in range(n_buckets):
+        files = os.listdir(os.path.join(index, f"{BUCKET_COL}={b}"))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, (b, files)

@@ -12,6 +12,8 @@ import hashlib
 import os
 import zlib
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from meilisync_spark.config import Settings, Sync, SinkSettings
@@ -97,24 +99,54 @@ def test_bucketed_apply_touches_only_batch_buckets(spark, tmp_path):
     assert _state(spark, index) == expected
 
 
-def test_bucketed_stream_equals_full_rewrite(spark, tmp_path):
+@pytest.mark.parametrize("num_buckets", [N_BUCKETS, 64])
+def test_bucketed_stream_equals_full_rewrite(spark, tmp_path, num_buckets):
     """run_cdc_pipeline(num_buckets=N) lands on exactly the same final
     state as the full-rewrite form (the oracle-checked baseline,
     forced with num_buckets=0 now that fresh indexes bucket by
-    default)."""
+    default), over a bootstrap batch and then per-batch MERGEs.
+
+    64 buckets is more than the test session's shuffle partitions and
+    more than Spark's 32-path listing threshold: a write task then
+    carries several buckets, and each bucket directory must still hold
+    exactly one data file."""
+    events = pq.read_table(
+        os.path.join(os.path.dirname(SF_SMOKE), "sf0.01", "events.parquet")
+    ).sort_by("event_id")
+    drops = tmp_path / "drops"
+    drops.mkdir()
+    step = -(-events.num_rows // 3)
+    for i in range(3):
+        path = str(drops / f"part-{i}.parquet")
+        pq.write_table(events.slice(i * step, step), path)
+        os.utime(path, (1_700_000_000 + 2 * i, 1_700_000_000 + 2 * i))
+
     flat_index = str(tmp_path / "flat")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", flat_index,
-        str(tmp_path / "ckpt_flat"), available_now=True, num_buckets=0,
+        spark, str(drops), flat_index, str(tmp_path / "ckpt_flat"),
+        available_now=True, num_buckets=0, max_files_per_trigger=1,
     )
     flat = {r.pk: (r.value, r.k) for r in spark.read.parquet(flat_index).collect()}
 
     b_index = str(tmp_path / "bucketed")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", b_index,
-        str(tmp_path / "ckpt_b"), available_now=True, num_buckets=N_BUCKETS,
+        spark, str(drops), b_index, str(tmp_path / "ckpt_b"),
+        available_now=True, num_buckets=num_buckets, max_files_per_trigger=1,
     )
+    commits = os.listdir(tmp_path / "ckpt_b" / "commits")
+    assert len([c for c in commits if c.isdigit()]) == 3
     assert _state(spark, b_index) == flat
+
+    dirs = {
+        int(d.split("=")[1]): d for d in os.listdir(b_index)
+        if d.startswith(f"{BUCKET_COL}=")
+    }
+    assert set(dirs) == {
+        zlib.crc32(str(pk).encode()) % num_buckets for pk in flat
+    }
+    for d in dirs.values():
+        data = [f for f in os.listdir(os.path.join(b_index, d)) if f.endswith(".parquet")]
+        assert len(data) == 1, (d, data)
 
 
 def test_fresh_index_buckets_by_default(spark, tmp_path):

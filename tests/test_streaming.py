@@ -96,6 +96,35 @@ def test_multi_batch_stream_equals_sequential_folds(spark, workdir):
     assert got == expected
 
 
+def test_catch_up_cut_by_timeout_raises(spark, workdir):
+    """An availableNow run still behind at its timeout raises instead
+    of returning as if caught up; the next run resumes from the
+    checkpoint and finishes."""
+    stream_dir = _chunked_events_dir(workdir)
+    index = os.path.join(workdir, "index")
+    ckpt = os.path.join(workdir, "ckpt")
+
+    def slow(df):
+        time.sleep(4)
+        return df
+
+    with pytest.raises(TimeoutError, match="batches committed"):
+        run_cdc_pipeline(
+            spark, stream_dir, index, ckpt, max_files_per_trigger=1,
+            available_now=True, pre_batch=slow, timeout_sec=2.0,
+        )
+
+    def commits():
+        d = os.path.join(ckpt, "commits")
+        return len([c for c in os.listdir(d) if c.isdigit()]) if os.path.isdir(d) else 0
+
+    assert commits() < 3
+    run_cdc_pipeline(
+        spark, stream_dir, index, ckpt, max_files_per_trigger=1, available_now=True
+    )
+    assert commits() == 3
+
+
 def test_checkpoint_resume_no_reprocessing(spark, workdir):
     """T1/T8: restarting from the checkpoint neither loses nor
     re-applies events — adding a new file after a completed run only
