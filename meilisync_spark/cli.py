@@ -5,8 +5,10 @@ Commands mirror the reference 1:1 so a meilisync user keeps their
 muscle memory:
 
 - ``start``    — backfill-if-missing then tail the event stream
-                 (main.py:71-140): here, optional batch bootstrap then
-                 the Structured Streaming pipeline.
+                 (main.py:71-140): one call to the Structured Streaming
+                 driver; a fresh checkpoint's first batch is the
+                 backfill. Without a sync config it runs one
+                 ``full: true`` sync into ``--index``.
 - ``refresh``  — full rebuild behind a shadow path + atomic swap
                  (main.py:143-176 / meili.py:34-71).
 - ``check``    — per-sync count consistency audit (main.py:179-208).
@@ -28,15 +30,8 @@ from meilisync_spark.config import Settings, load_plugin
 from meilisync_spark.operators.check import count_check
 from meilisync_spark.operators.refresh import refresh_data
 from meilisync_spark.session import get_spark
-from meilisync_spark.sources.events import normalize_events
 from meilisync_spark.sources.parquet import load_path
-from meilisync_spark.streaming.pipeline import (
-    PAYLOAD_COLS,
-    CatchUpTimeout,
-    run_cdc_pipeline,
-    run_settings_pipeline,
-)
-from meilisync_spark.operators.compaction import compact_last_wins
+from meilisync_spark.streaming.pipeline import CatchUpTimeout, run_cdc_pipeline
 
 from pyspark.sql import functions as F
 from meilisync_spark.pin import SER as _SER
@@ -89,59 +84,33 @@ def _start(args: argparse.Namespace) -> int:
     spark = get_spark("meilisync-spark-start")
     settings = _settings(args)
     _init_ops(spark, settings)
-    index = args.index or settings.sink.index_path
-    interval = (
+    sink_format = getattr(args, "sink_format", "parquet")
+    envelope = getattr(args, "envelope", None)
+    # flags override config
+    interval = args.interval or (
         f"{settings.sink.insert_interval} seconds"
-        if settings.sink.insert_interval
-        else args.interval
+        if settings.sink.insert_interval else None
     )
-    if settings.syncs:
-        if (getattr(args, "envelope", None) or args.source_format != "parquet"
-                or getattr(args, "sink_format", "parquet") != "parquet"):
-            # the settings-driven branch reads the drop dir as fixture
-            # events and writes per-sync parquet indexes; silently
-            # ignoring --envelope/--source-format/--sink-format here
-            # would do something other than what the flag asked
-            print(
-                "error: --envelope/--source-format/--sink-format cannot be "
-                "combined with a settings file that defines syncs; run "
-                "single-index mode without --config, or drop the flags",
-                file=sys.stderr,
-            )
-            return 2
-        # config-driven multi-sync mode: route every event through its
-        # sync rule (table filter, fields map, pk, plugin chains) into
-        # one index per sync — the reference's full start loop
-        # (meilisync/main.py:71-140)
-        from meilisync_spark.progress import make_progress
-
-        pre = load_plugin(args.plugin) if args.plugin else None
-        run_settings_pipeline(
-            spark,
-            args.events,
-            settings,
-            args.checkpoint,
-            table_col=args.table_col,
-            available_now=not interval,
-            processing_interval=interval,
-            max_files_per_trigger=args.max_files,
-            num_buckets=args.buckets,
-            extra_pre=pre,
-            timeout_sec=args.timeout,
-            progress=make_progress(settings.progress),
-        )
-        names = ", ".join(
-            os.path.join(settings.sink.index_path, s.index_name) for s in settings.syncs
-        )
-        print(f"sync complete: indexes at {names}")
-        return 0
+    max_files = args.max_files or settings.sink.insert_size
     normalizer = None
-    payload_cols = None
-    if getattr(args, "envelope", None):
+    if settings.syncs and (
+        envelope or args.source_format != "parquet" or sink_format != "parquet"
+    ):
+        # a syncs config routes the drop dir as fixture events into
+        # per-sync parquet indexes; silently ignoring
+        # --envelope/--source-format/--sink-format here would do
+        # something other than what the flag asked
+        print(
+            "error: --envelope/--source-format/--sink-format cannot be "
+            "combined with a settings file that defines syncs; run "
+            "single-index mode without --config, or drop the flags",
+            file=sys.stderr,
+        )
+        return 2
+    if envelope:
         # raw-envelope drop-dir mode: the connector normalizer replaces
         # normalize_events and the payload columns come from the user's
         # DDL schema (sources/cdc_connectors.py)
-        from pyspark.sql import functions as _F
         from pyspark.sql import types as _T
 
         from meilisync_spark.sources import cdc_connectors as _cc
@@ -156,31 +125,21 @@ def _start(args: argparse.Namespace) -> int:
             "wal2json": _cc.normalize_wal2json_auto,
             "wal2json_v1": _cc.normalize_wal2json,
             "wal2json_v2": _cc.normalize_wal2json_v2,
-        }[args.envelope]
+        }[envelope]
         if not args.payload_schema:
             print("--envelope needs --payload-schema (DDL, e.g. 'id long, v double')")
             return 2
         pschema = _T.StructType.fromDDL(args.payload_schema)
-        epk = args.envelope_pk
-        payload_cols = [f.name for f in pschema.fields if f.name != epk]
+        payload_cols = [f.name for f in pschema.fields if f.name != args.envelope_pk]
 
-        def normalizer(df, _fn=norm_fn, _s=pschema, _pk=epk, _cols=payload_cols):
-            kw = {} if _fn is _cc.normalize_mongo_change_stream else {"pk": _pk}
+        def normalizer(df, sync, _fn=norm_fn, _s=pschema, _cols=payload_cols):
+            kw = {} if _fn is _cc.normalize_mongo_change_stream else {"pk": sync.pk}
             ev = _fn(df, _s, **kw)
             return ev.select(
-                "seq", "ts", "table", "op", "pk",
-                *[_F.col(f"payload.{c}").alias(c) for c in _cols],
+                "seq", "table", "op", "pk",
+                *[F.col(f"payload.{c}").alias(c) for c in _cols],
             )
 
-    # phase 1 — backfill when the index is absent (T5, main.py:86-101).
-    # A fresh index defaults to the BUCKETED layout (resolve_num_buckets:
-    # O(batch)-per-micro-batch writes, the 100-TB form) and bootstraps on
-    # the first micro-batch, as do envelope modes; the flat backfill runs
-    # only when flat is forced (--buckets 0) or the index already exists
-    # flat.
-    from meilisync_spark.operators.bucketed import resolve_num_buckets
-
-    sink_format = getattr(args, "sink_format", "parquet")
     if sink_format == "delta" and args.buckets:
         # fail-loud convention (matches --envelope + syncs-config):
         # Delta manages its own file layout (MERGE rewrites touched
@@ -189,44 +148,44 @@ def _start(args: argparse.Namespace) -> int:
         print("error: --buckets does not apply to --sink-format delta "
               "(Delta MERGE manages its own file layout)", file=sys.stderr)
         return 2
-    resolved_buckets = 0 if sink_format == "delta" else resolve_num_buckets(index, args.buckets)
-    if not os.path.exists(index) and resolved_buckets:
-        print(f"bootstrap: bucketed index ({resolved_buckets} buckets) at {index}")
-    if (not os.path.exists(index) and not resolved_buckets
-            and sink_format == "parquet" and not getattr(args, "envelope", None)):
-        # load_path (not a raw spark.read) so nanos timestamps get the
-        # same canonical conversion the streaming path applies — the
-        # index schema must be identical across both writers
-        ev = normalize_events(load_path(spark, args.events))
-        snapshot = (
-            compact_last_wins(ev, ["pk"], "seq")
-            .where(F.col("op") != "delete")
-            .select("pk", *PAYLOAD_COLS)
-        )
-        n = refresh_data(snapshot, index)
-        print(f"backfill: loaded {n} documents into {index}")
-    # phase 2 — incremental tail (T2-T4 trigger knobs)
+    from meilisync_spark.operators.bucketed import resolve_num_buckets
     from meilisync_spark.progress import make_progress
 
-    pre = load_plugin(args.plugin) if args.plugin else None
+    progress = make_progress(settings.progress)
+    table_col = args.table_col if settings.syncs else None
+    if not settings.syncs:
+        settings = Settings.for_index(
+            args.index or settings.sink.index_path,
+            pk=args.envelope_pk if envelope else "user_id",
+        )
+
+    indexes = [os.path.join(settings.sink.index_path, s.index_name) for s in settings.syncs]
+    for sync, index in zip(settings.syncs, indexes):
+        nb = resolve_num_buckets(
+            index, sync.buckets if sync.buckets is not None else args.buckets
+        )
+        if sink_format == "parquet" and nb and not os.path.exists(index):
+            print(f"bootstrap: bucketed index ({nb} buckets) at {index}")
+    # a fresh checkpoint's first batch is the backfill (T5); later
+    # batches tail the log (T2-T4 trigger knobs)
     run_cdc_pipeline(
         spark,
         args.events,
-        index,
+        settings,
         args.checkpoint,
+        table_col=table_col,
         available_now=not interval,
         processing_interval=interval,
-        max_files_per_trigger=settings.sink.insert_size or args.max_files,
-        pre_batch=pre,
-        num_buckets=0 if sink_format == "delta" else args.buckets,
-        timeout_sec=args.timeout,
+        max_files_per_trigger=max_files,
+        num_buckets=args.buckets,
         source_format=args.source_format,
         normalizer=normalizer,
-        payload_cols=payload_cols,
-        progress=make_progress(settings.progress),
+        pre_batch=load_plugin(args.plugin) if args.plugin else None,
+        timeout_sec=args.timeout,
+        progress=progress,
         sink_format=sink_format,
     )
-    print(f"sync complete: index at {index}")
+    print(f"sync complete: indexes at {', '.join(indexes)}")
     return 0
 
 

@@ -17,6 +17,7 @@ Streaming trigger/batch sizing.
 from __future__ import annotations
 
 import importlib
+import os
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -122,6 +123,16 @@ class Settings:
             progress=progress,
             debug=bool(d.get("debug", False)),
             sentry=sentry,
+        )
+
+    @classmethod
+    def for_index(cls, index_path: str, pk: str = "user_id") -> "Settings":
+        """One ``full: true`` sync (table ``users``) writing straight to
+        ``index_path`` — the shape of a ``start`` without a sync config."""
+        root, name = os.path.split(os.path.normpath(index_path))
+        return cls(
+            sink=SinkSettings(index_path=root),
+            syncs=[Sync(table="users", pk=pk, full=True, index=name)],
         )
 
     @classmethod

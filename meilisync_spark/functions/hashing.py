@@ -27,13 +27,3 @@ def portable_hash64(col: Column) -> Column:
 def duck_hash64(expr: str) -> str:
     """DuckDB side: the same hash as a SQL fragment."""
     return f"(('0x' || substring(sha256(CAST({expr} AS VARCHAR)), 1, 15))::BIGINT)"
-
-
-def portable_hash32(col: Column) -> Column:
-    """32-bit variant (for callers whose bit math must stay exact in
-    double space; the 60-bit simhash uses integer masks instead)."""
-    return F.conv(F.substring(F.sha2(col.cast("string"), 256), 1, 8), 16, 10).cast("long")
-
-
-def duck_hash32(expr: str) -> str:
-    return f"(('0x' || substring(sha256(CAST({expr} AS VARCHAR)), 1, 8))::BIGINT)"

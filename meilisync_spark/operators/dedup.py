@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from meilisync_spark.functions.hashing import duck_hash64, portable_hash64
 from meilisync_spark.operators.text import (
@@ -886,9 +887,13 @@ def connected_components(
                 "iterations — a component's diameter exceeds the cap; "
                 "raise max_iters"
             )
-        spark = nodes.sparkSession
-        labels = spark.createDataFrame(
-            sorted(labels_map.items()), "doc_id long, cluster_id long"
+        # the node id type, not a fixed long: both paths must return
+        # the same types (string ids included)
+        id_type = nodes.schema["doc_id"].dataType
+        labels = nodes.sparkSession.createDataFrame(
+            sorted(labels_map.items()),
+            T.StructType([T.StructField("doc_id", id_type),
+                          T.StructField("cluster_id", id_type)]),
         )
         n_labels = len(labels_map)
     else:

@@ -375,11 +375,3 @@ def pq_recall(emb: DataFrame, k: int = 5) -> DataFrame:
 
     books = pq_codebooks(emb)
     return _recall_against_brute(emb, pq_topk(emb, books, k), k)
-
-
-def pq_recall_clustered(emb: DataFrame, k: int = 5) -> DataFrame:
-    """pq_recall on the deterministic clustered twin corpus — the
-    positive demonstration (recall ≥ 0.8 asserted in tests)."""
-    from meilisync_spark.operators.similarity import clustered_embeddings
-
-    return pq_recall(clustered_embeddings(emb), k)

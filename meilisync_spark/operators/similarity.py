@@ -213,22 +213,6 @@ def label_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-def label_centroids_oracle_sql() -> str:
-    return f"""
-    WITH ex AS (
-        SELECT label, i AS idx,
-               CAST(floor(CAST(embedding[i+1] AS DOUBLE) * {CENTROID_SCALE}) AS BIGINT) AS xq
-        FROM embeddings, UNNEST(range(0, len(embedding))) t(i)
-    ),
-    c AS (
-        SELECT label, idx, CAST(sum(xq) AS DOUBLE) / (count(*) * {CENTROID_SCALE}) AS mean
-        FROM ex GROUP BY 1, 2
-    )
-    SELECT label, list(mean ORDER BY idx) AS centroid, count(*) AS dims
-    FROM c GROUP BY label
-    """
-
-
 def _pinned_brute(emb: DataFrame, k: int) -> DataFrame:
     """The brute-force ground truth as a driver-pinned |Q|×k frame.
     Rows that score SEVERAL ANN variants against the same corpus

@@ -2145,6 +2145,7 @@ def q_streaming_cdc_apply(spark, sf_dir):
     import shutil
     import tempfile
 
+    from meilisync_spark.config import Settings
     from meilisync_spark.streaming.pipeline import run_cdc_pipeline
 
     work = tempfile.mkdtemp(prefix="mls_stream_")
@@ -2153,7 +2154,7 @@ def q_streaming_cdc_apply(spark, sf_dir):
         run_cdc_pipeline(
             spark,
             f"{sf_dir}/events.parquet",
-            index_path,
+            Settings.for_index(index_path),
             f"{work}/checkpoint",
             available_now=True,
             # the bucket count is a per-table sizing knob: the fixture
@@ -2205,6 +2206,7 @@ def q_streaming_maxwell_apply(spark, sf_dir):
     import tempfile
 
     from meilisync_spark.sources.cdc_connectors import _RT_PAYLOAD, normalize_maxwell
+    from meilisync_spark.config import Settings
     from meilisync_spark.streaming.pipeline import run_cdc_pipeline
 
     # the roundtrip builder's envelope construction, written as raw
@@ -2240,8 +2242,8 @@ def q_streaming_maxwell_apply(spark, sf_dir):
         )
         env.write.mode("overwrite").text(drop)
 
-        def norm(df):
-            ev = normalize_maxwell(df, _RT_PAYLOAD, pk="user_id")
+        def norm(df, sync):
+            ev = normalize_maxwell(df, _RT_PAYLOAD, pk=sync.pk)
             return ev.select(
                 "seq", "ts", "table", "op", "pk",
                 F.col("payload").getField("value").alias("value"),
@@ -2249,9 +2251,9 @@ def q_streaming_maxwell_apply(spark, sf_dir):
             )
 
         run_cdc_pipeline(
-            spark, drop, index_path, f"{work}/checkpoint",
+            spark, drop, Settings.for_index(index_path), f"{work}/checkpoint",
             available_now=True, source_format="text",
-            normalizer=norm, payload_cols=["ts", "value", "k"],
+            normalizer=norm,
             num_buckets=8,  # sized to the fixture, like the row above
         )
         out = spark.read.parquet(index_path).select("pk", "ts", "value", "k")

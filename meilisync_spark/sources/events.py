@@ -56,9 +56,9 @@ def normalize_events(
     pk long, value double, k long``.
 
     ``table``/``pk_col`` parameterize routing (P3) and pk extraction:
-    the multi-sync pipeline (streaming/pipeline.py:run_settings_pipeline)
-    normalizes each sync rule's slice of the raw stream with that rule's
-    table name and configured pk (≡ ``Sync.pk``, reference
+    the streaming driver (streaming/pipeline.py:run_cdc_pipeline), by
+    default, normalizes each sync rule's slice of the raw stream with
+    that rule's table name and configured pk (≡ ``Sync.pk``, reference
     meilisync/settings.py:41 — the reference looks up ``data[sync.pk]``
     per event, meilisync/main.py:107-109).
 

@@ -273,8 +273,3 @@ def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
         # the checkpoint blocks once the frame is collected
         _SPREAD_PIN_CACHE.popitem(last=False)
     return pinned
-
-
-def get_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Source-side count (A1, meilisync/source/mysql.py:54-59)."""
-    return load_table(spark, sf_dir, name).count()

@@ -11,12 +11,18 @@ Mapping (SURVEY.md §2.9):
   ``checkpointLocation`` (offsets written after each commit, same
   write-then-commit order as main.py:110-120 ⇒ at-least-once, made
   effectively-once by the idempotent pk MERGE).
-- per-event apply (meili.py:142-151) → ``foreachBatch`` calling the
-  *batch* operators: normalize → compact (A5) → MERGE apply — the
-  same functions the oracle checks, so streaming correctness reduces
-  to batch correctness plus the harness.
-- plugin pre/post hooks (U1/U2) → optional ``DataFrame -> DataFrame``
-  transforms around the apply.
+- per-event apply (meili.py:142-151) → ONE driver,
+  :func:`run_cdc_pipeline`, with one ``foreachBatch`` body: per sync
+  rule route → normalize → fields map → plugin chain → MERGE through
+  one sink dispatch (delta, bucketed or flat), then one progress
+  publish per batch. The MERGE calls the *batch* operators the oracle
+  checks, so streaming correctness reduces to batch correctness plus
+  the harness. A single index is a one-sync ``Settings``.
+- backfill-if-missing (main.py:86-101) → a fresh checkpoint's first
+  batch: with ``full: true`` it replays the whole log into an absent
+  index, no separate snapshot phase.
+- plugin hooks (U1) → ``DataFrame -> DataFrame`` transforms chained
+  before the apply.
 
 Batch-boundary semantics note (shared with the reference): compaction
 is per-buffer, so a create followed in the SAME batch by a sparse
@@ -35,6 +41,7 @@ with file pruning; the parquet fallback swaps via the shadow path
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import tempfile
 from collections.abc import Callable
@@ -43,12 +50,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meilisync_spark.config import Settings, Sync, load_plugin
+from meilisync_spark.operators import bucketed
 from meilisync_spark.operators.apply import apply_changes
+from meilisync_spark.operators.project import ENVELOPE_COLS, apply_envelope_fields
 from meilisync_spark.operators.refresh import refresh_data
 from meilisync_spark.sources.events import normalize_events
 from meilisync_spark.sources.parquet import _nanos_timestamp_cols
-
-PAYLOAD_COLS = ["ts", "value", "k"]
 
 
 def read_event_stream(
@@ -185,122 +193,40 @@ def _start_and_await(
     return q
 
 
+def _apply_to_sink(
+    spark: SparkSession,
+    index_path: str,
+    ev: DataFrame,
+    sink_format: str,
+    num_buckets: int,
+) -> None:
+    """MERGE one sync's normalized changes into its index: Delta (one
+    transactional ``MERGE INTO``), pk-bucketed (``num_buckets`` > 0,
+    touched buckets only) or flat (full rewrite, shadow-path swap). The
+    parquet forms merge the union schema (``payload_cols=None``,
+    operators/apply.py), so a fields-map edit across restarts widens the
+    index instead of silently dropping columns."""
+    payload = [c for c in ev.columns if c not in ENVELOPE_COLS]
+    if sink_format == "delta":
+        from meilisync_spark.operators.table_format import apply_changes_delta
+
+        apply_changes_delta(spark, index_path, ev, pk="pk", payload_cols=payload)
+    elif num_buckets:
+        bucketed.apply_changes_bucketed(
+            spark, index_path, ev, pk="pk", payload_cols=None, num_buckets=num_buckets
+        )
+    else:
+        if os.path.exists(index_path):
+            base = spark.read.parquet(index_path)
+        else:
+            base = spark.createDataFrame([], ev.select("pk", *payload).schema)
+        refresh_data(apply_changes(base, ev, pk="pk", payload_cols=None), index_path)
+
+
 def run_cdc_pipeline(
     spark: SparkSession,
     events_path: str,
-    index_path: str,
-    checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
-    processing_interval: str | None = None,
-    available_now: bool = True,
-    pre_batch: Callable[[DataFrame], DataFrame] | None = None,
-    post_batch: Callable[[DataFrame], None] | None = None,
-    timeout_sec: float | None = 120.0,
-    num_buckets: int | None = None,
-    source_format: str = "parquet",
-    source_schema=None,
-    normalizer: Callable[[DataFrame], DataFrame] | None = None,
-    payload_cols: list[str] | None = None,
-    progress=None,
-    sink_format: str = "parquet",
-):
-    """Run the CDC pipeline until caught up (``available_now``) or until
-    ``timeout_sec``. Returns the StreamingQuery (stopped if awaited).
-    An ``available_now`` run still behind at ``timeout_sec`` raises
-    :class:`CatchUpTimeout` after stopping; the next run resumes from the
-    checkpoint.
-
-    ``num_buckets`` picks the index layout via
-    :func:`~meilisync_spark.operators.bucketed.resolve_num_buckets`:
-    a FRESH index defaults to the hive-bucketed layout
-    (operators/bucketed.py — each micro-batch rewrites only the pk
-    buckets it touches, O(batch) writes instead of O(index), the form
-    that survives a 100-TB index), an existing bucketed index keeps its
-    recorded count with no flag needed, a pre-existing flat index stays
-    flat, and ``num_buckets=0`` forces the flat full-rewrite form (the
-    oracle-checked baseline, still right for tiny single-file indexes).
-
-    ``sink_format="delta"`` replaces the whole parquet layout story
-    (bucketed or flat) with one transactional ``MERGE INTO`` per batch
-    (operators/table_format.py — snapshot isolation, file-pruned
-    merges; needs delta-spark on the session, loud RuntimeError
-    otherwise). Bucketing knobs are ignored there: the table format
-    does its own file pruning.
-
-    ``normalizer`` maps the raw stream onto the engine's normalized
-    event contract ``(seq, op, pk, <payload cols>)`` — defaults to
-    :func:`normalize_events` for the fixture's event-table shape; pass
-    a connector normalizer (e.g. ``normalize_maxwell`` + a payload
-    flatten) with ``source_format="text"`` to tail a raw envelope
-    drop-dir end-to-end. ``payload_cols`` names the normalized payload
-    columns the index carries (default: the fixture's
-    ``PAYLOAD_COLS``).
-    """
-    from meilisync_spark.operators.bucketed import resolve_num_buckets
-
-    if sink_format == "delta":
-        from meilisync_spark.operators.table_format import _delta_table
-
-        _delta_table()  # fail fast with install instructions, not mid-stream
-    num_buckets = resolve_num_buckets(index_path, num_buckets)
-    events = read_event_stream(
-        spark, events_path, max_files_per_trigger, source_format, source_schema
-    )
-    normalized = (normalizer or normalize_events)(events)
-    payload_cols = PAYLOAD_COLS if payload_cols is None else payload_cols
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if pre_batch is not None:  # U1 plugin chain, vectorized
-            batch_df = pre_batch(batch_df)
-        if sink_format == "delta":
-            from meilisync_spark.operators.table_format import apply_changes_delta
-
-            apply_changes_delta(
-                spark, index_path, batch_df, pk="pk", payload_cols=payload_cols
-            )
-        elif num_buckets:
-            from meilisync_spark.operators.bucketed import apply_changes_bucketed
-
-            apply_changes_bucketed(
-                spark, index_path, batch_df,
-                pk="pk", payload_cols=payload_cols, num_buckets=num_buckets,
-            )
-        else:
-            if os.path.exists(index_path):
-                base = spark.read.parquet(index_path)
-            else:
-                base = spark.createDataFrame(
-                    [], normalized.select("pk", *payload_cols).schema
-                )
-            new_state = apply_changes(base, batch_df, pk="pk", payload_cols=payload_cols)
-            # shadow-write + atomic swap so concurrent readers never see a
-            # half-written index (S13 semantics per micro-batch)
-            refresh_data(new_state.select("pk", *payload_cols), index_path)
-        if progress is not None:
-            # ops mirror (meilisync_spark/progress.py): publish the max
-            # applied seq per table AFTER the merge committed — same
-            # apply-then-record order as the reference (main.py:110-120)
-            heads = {
-                r[0]: r[1]
-                for r in batch_df.groupBy("table").agg(F.max("seq")).collect()
-                if r[1] is not None
-            }
-            if heads:
-                progress.set(**heads)
-        if post_batch is not None:  # U2 post-write hook
-            post_batch(batch_df)
-
-    writer = normalized.writeStream.foreachBatch(apply_batch).outputMode("update")
-    return _start_and_await(
-        writer, checkpoint_dir, available_now, processing_interval, timeout_sec
-    )
-
-
-def run_settings_pipeline(
-    spark: SparkSession,
-    events_path: str,
-    settings,
+    settings: Settings,
     checkpoint_dir: str,
     *,
     table_col: str | None = None,
@@ -309,67 +235,73 @@ def run_settings_pipeline(
     available_now: bool = True,
     timeout_sec: float | None = 120.0,
     num_buckets: int | None = None,
-    extra_pre: Callable[[DataFrame], DataFrame] | None = None,
+    source_format: str = "parquet",
+    source_schema=None,
+    normalizer: Callable[[DataFrame, Sync], DataFrame] | None = None,
+    pre_batch: Callable[[DataFrame], DataFrame] | None = None,
     progress=None,
+    sink_format: str = "parquet",
 ):
-    """The reference's full `start` loop: every event routed through its
-    sync rule (meilisync/main.py:107-109) — multi-table, per-sync fields
-    map, per-sync pk, ordered plugin chains, one index per sync.
+    """The reference's `start` loop (meilisync/main.py:71-140): every
+    event routed through its sync rule, applied, then its progress
+    recorded. Runs until caught up (``available_now``) or until
+    ``timeout_sec``; returns the StreamingQuery (stopped if awaited). An
+    ``available_now`` run still behind at ``timeout_sec`` raises
+    :class:`CatchUpTimeout`; the next run resumes from the checkpoint.
+    A single index is a one-sync ``settings`` (:meth:`Settings.for_index`).
 
     Per micro-batch, for each ``Sync`` in ``settings.syncs``:
 
     1. route: keep raw rows whose ``table_col`` equals ``sync.table``
-       (P3; a ``table_col`` of None means a single-table stream and the
-       rule applies to all rows);
-    2. normalize with the rule's table name + configured pk
-       (``Sync.pk``, reference settings.py:41);
-    3. project the payload through the rule's ``fields`` map (P1,
-       schemas.py:25-30);
-    4. run the ordered plugin chain — global then per-sync
-       (U1, meili.py:95-106 / settings.py:28-36), plus ``extra_pre``
-       (the CLI ``--plugin`` flag) last;
-    5. MERGE into ``{sink.index_path}/{sync.index_name}`` (routing
-       target defaulting to the table name, settings.py:58-60) —
-       layout per ``resolve_num_buckets(Sync.buckets or num_buckets)``:
-       fresh indexes bucketed by default, existing layouts kept, ``0``
+       (P3; None means a single-table stream — the filter pushes into
+       the batch scan, so each sync works on a pruned slice);
+    2. normalize with ``normalizer(raw, sync)`` onto the event contract
+       ``(seq, table, op, pk, <payload>)`` — default
+       :func:`normalize_events` with the rule's table and pk
+       (settings.py:41); a connector normalizer (e.g.
+       ``normalize_maxwell`` + a payload flatten) with
+       ``source_format="text"`` tails a raw envelope drop-dir. The
+       payload is every column but seq/table/op/pk. One unrouted sync
+       over a log without ``event_id`` normalizes once on the stream
+       instead (no batch step needs a raw row then);
+    3. project the payload through the rule's ``fields`` map (P1);
+    4. run the plugin chain — global, per-sync (U1, meili.py:95-106),
+       then ``pre_batch`` (the CLI ``--plugin``);
+    5. MERGE into ``{sink.index_path}/{sync.index_name}`` via
+       :func:`_apply_to_sink`. ``sink_format="delta"`` needs delta-spark
+       (fails fast otherwise). The parquet layout is
+       ``resolve_num_buckets(Sync.buckets or num_buckets)``: fresh
+       indexes bucketed (O(batch) writes), existing layouts kept, ``0``
        forcing flat.
 
-    Routing first means each sync's work is a pruned slice of the batch
-    (the table filter pushes into the batch scan); the per-sync MERGEs
-    are independent jobs Spark schedules back-to-back inside the batch.
+    ``Sync.full`` (main.py:86-101): for ``full: true`` the first batch
+    of a fresh checkpoint IS the backfill — the whole log into an absent
+    index; a snapshot phase would read the log twice for the same final
+    state (creates and deletes make the prior state irrelevant, and a
+    pure-update key's snapshot row equals its last update). A
+    ``full: false`` sync tails from the log head (max ``event_id``),
+    recorded once at first start beside the checkpoint; in production
+    the log's own position API gives that head.
 
-    ``Sync.full`` semantics (reference main.py:86-101: backfill only
-    when ``full`` is true and the index is missing; ``full: false``
-    starts tailing from the *current head* — history is never
-    replayed): the reference's full-snapshot-then-tail split collapses
-    here — for ``full: true`` the first ``availableNow`` batch over the
-    whole event log IS the backfill (an absent index bootstraps from
-    the batch; a separate snapshot phase would double-read the log for
-    the same final state). For ``full: false`` syncs the pipeline
-    records the log's head position (max ``event_id``) once at first
-    start — persisted beside the checkpoint so restarts keep the same
-    origin — and every batch drops that sync's events at-or-below it.
-    In production the head marker comes from the log's own position API
-    (binlog coordinates / LSN / resume token) instead of a max() scan.
-
-    ``progress`` (a :class:`meilisync_spark.progress.ProgressStore`,
-    built from ``Settings.progress`` via ``make_progress``) is the ops
-    mirror: after each batch's MERGEs commit, the latest applied
-    ``event_id`` per table is published (one tiny column-pruned
-    aggregate over the batch, |tables| rows collected). Resume truth
-    stays in checkpointLocation; the store is never read on restart.
+    ``progress`` (``make_progress(Settings.progress)``) is the ops
+    mirror, published once per batch after every MERGE committed: the
+    max raw ``event_id`` per routed table when the log has one (consumed
+    or not, so ``check`` can compare it with the log head), else the max
+    normalized ``seq`` per normalized ``table``. Resume truth stays in
+    checkpointLocation; the store is never read on restart.
     """
-    import json
+    if sink_format == "delta":
+        from meilisync_spark.operators.table_format import _delta_table
 
-    from meilisync_spark.config import load_plugin
-    from meilisync_spark.operators.project import apply_envelope_fields
-
-    chains: dict[str, list[Callable[[DataFrame], DataFrame]]] = {}
-    for sync in settings.syncs:
-        hooks = [load_plugin(p) for p in [*settings.plugins, *sync.plugins]]
-        if extra_pre is not None:
-            hooks.append(extra_pre)
-        chains[sync.table] = hooks
+        _delta_table()  # fail fast with install instructions, not mid-stream
+    normalize = normalizer or (
+        lambda raw, sync: normalize_events(raw, table=sync.table, pk_col=sync.pk)
+    )
+    extra = [pre_batch] if pre_batch is not None else []
+    chains = [
+        (sync, [*map(load_plugin, [*settings.plugins, *sync.plugins]), *extra])
+        for sync in settings.syncs
+    ]
 
     head_seq: int | None = None
     if any(not sync.full for sync in settings.syncs):
@@ -389,13 +321,22 @@ def run_settings_pipeline(
         # behavior rather than guessing an origin after the fact
 
     events = read_event_stream(
-        spark, events_path, max_files_per_trigger or settings.sink.insert_size
+        spark, events_path, max_files_per_trigger, source_format, source_schema
     )
+    by_event_id = "event_id" in events.columns
+    if len(chains) == 1 and not table_col and not by_event_id:
+        # nothing in the batch needs a raw row (no routing, no raw
+        # position to publish): normalize once on the stream — planning
+        # a connector normalizer costs hundreds of ms of driver time,
+        # which a per-batch normalize would pay on every batch
+        events = normalize(events, settings.syncs[0])
+        normalize = lambda ev, sync: ev  # noqa: E731
 
     def apply_batch(raw: DataFrame, batch_id: int) -> None:
-        for sync in settings.syncs:
+        applied = []
+        for sync, hooks in chains:
             sub = raw.where(F.col(table_col) == sync.table) if table_col else raw
-            ev = normalize_events(sub, table=sync.table, pk_col=sync.pk)
+            ev = normalize(sub, sync)
             index_path = os.path.join(settings.sink.index_path, sync.index_name)
             if not sync.full and head_seq is not None:
                 # full:false — tail only: history at/below the recorded
@@ -407,53 +348,30 @@ def run_settings_pipeline(
                 if not os.path.exists(index_path) and ev.isEmpty():
                     continue
             ev = apply_envelope_fields(ev, sync.fields)
-            for hook in chains[sync.table]:
+            for hook in hooks:
                 ev = hook(ev)
-            payload = [c for c in ev.columns if c not in ("seq", "table", "op", "pk")]
-            # payload_cols=None → union-schema MERGE (operators/apply.py):
-            # a fields-map edit across restarts (the config-level ALTER
-            # TABLE) widens the index with typed NULLs or keeps base-only
-            # columns, instead of silently dropping them
-            from meilisync_spark.operators.bucketed import resolve_num_buckets
-
-            nb = resolve_num_buckets(
+            nb = 0 if sink_format == "delta" else bucketed.resolve_num_buckets(
                 index_path, sync.buckets if sync.buckets is not None else num_buckets
             )
-            if nb:
-                from meilisync_spark.operators.bucketed import apply_changes_bucketed
-
-                apply_changes_bucketed(
-                    spark, index_path, ev.drop("table"),
-                    pk="pk", payload_cols=None, num_buckets=nb,
-                )
-            else:
-                if os.path.exists(index_path):
-                    base = spark.read.parquet(index_path)
-                else:
-                    base = spark.createDataFrame([], ev.select("pk", *payload).schema)
-                new_state = apply_changes(
-                    base, ev.drop("table"), pk="pk", payload_cols=None
-                )
-                refresh_data(new_state, index_path)
-        if progress is not None:
-            # publish AFTER every sync's merge committed (same
-            # apply-then-record order as the reference, main.py:110-120
-            # — a crash between the two re-applies, never skips)
-            if table_col:
-                head_rows = (
-                    raw.where(F.col(table_col).isin(list(chains)))
-                    .groupBy(table_col)
-                    .agg(F.max("event_id").alias("h"))
-                    .collect()
-                )
-                heads = {r[0]: r["h"] for r in head_rows if r["h"] is not None}
-            else:
-                h = raw.agg(F.max("event_id")).first()[0]
-                heads = (
-                    {s.table: h for s in settings.syncs} if h is not None else {}
-                )
-            if heads:
-                progress.set(**heads)
+            _apply_to_sink(spark, index_path, ev.drop("table"), sink_format, nb)
+            applied.append(ev)
+        if progress is None:
+            return
+        # publish AFTER every sync's merge committed (same
+        # apply-then-record order as the reference, main.py:110-120 — a
+        # crash between the two re-applies, never skips)
+        if not by_event_id:
+            rows = [r for ev in applied
+                    for r in ev.groupBy("table").agg(F.max("seq")).collect()]
+        elif table_col:
+            rows = (raw.where(F.col(table_col).isin(settings.tables))
+                    .groupBy(table_col).agg(F.max("event_id")).collect())
+        else:
+            h = raw.agg(F.max("event_id")).first()[0]
+            rows = [(t, h) for t in settings.tables]
+        heads = {t: h for t, h in rows if h is not None}
+        if heads:
+            progress.set(**heads)
 
     writer = events.writeStream.foreachBatch(apply_batch).outputMode("update")
     return _start_and_await(

@@ -15,6 +15,8 @@ from meilisync_spark.session import get_spark
 from meilisync_spark.sources.parquet import TABLES, table_path
 
 SF_SMOKE = "/root/testdata/sf0.001"
+# normalize_events's payload: every output column but seq/table/op/pk
+PAYLOAD_COLS = ["ts", "value", "k"]
 SF_CORRECT = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 

@@ -98,6 +98,7 @@ def test_kafka_frame_streams_debezium_end_to_end(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from meilisync_spark.config import Settings
     from meilisync_spark.streaming.pipeline import run_cdc_pipeline
 
     payload_schema = T.StructType(
@@ -129,16 +130,15 @@ def test_kafka_frame_streams_debezium_end_to_end(spark, tmp_path):
         krow(2, "u", {"id": 1, "v": 1.0}, {"id": 1, "v": 1.5}),
     ])
 
-    def norm(df):
+    def norm(df, _sync=None):
         ev = normalize_debezium(df, payload_schema, pk="id")
-        return ev.select("seq", "ts", "table", "op", "pk",
-                         F.col("payload.v").alias("v"))
+        return ev.select("seq", "table", "op", "pk", F.col("payload.v").alias("v"))
 
     index = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
-    kw = dict(source_format="parquet", normalizer=norm, payload_cols=["v"],
+    kw = dict(source_format="parquet", normalizer=norm,
               available_now=True, max_files_per_trigger=1)
-    run_cdc_pipeline(spark, str(drop), index, ckpt, **kw)
+    run_cdc_pipeline(spark, str(drop), Settings.for_index(index), ckpt, **kw)
     assert {(r.pk, r.v) for r in spark.read.parquet(index).collect()} == {
         (1, 1.5), (2, 2.0)}
 
@@ -152,7 +152,7 @@ def test_kafka_frame_streams_debezium_end_to_end(spark, tmp_path):
         krow(3, "d", {"id": 2, "v": 2.0}, None),
         krow(4, "u", {"id": 1, "v": 1.5}, {"id": 1, "v": 9.0}),
     ])
-    run_cdc_pipeline(spark, str(drop), index, ckpt, **kw)
+    run_cdc_pipeline(spark, str(drop), Settings.for_index(index), ckpt, **kw)
     assert {(r.pk, r.v) for r in spark.read.parquet(index).collect()} == {(1, 9.0)}
 
 

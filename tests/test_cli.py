@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from meilisync_spark.cli import main
 from tests.conftest import SF_SMOKE
 
@@ -428,9 +430,10 @@ def test_cli_start_wal2json_envelope_drop_dir(tmp_path):
 
 
 def test_cli_start_flat_backfill_when_forced(spark, tmp_path, capsys):
-    """--buckets 0 keeps the classic flat path: phase-1 backfill then
-    tail, no bucket layout written."""
-    from meilisync_spark.operators.bucketed import read_meta
+    """--buckets 0 keeps the flat full-rewrite layout: the first batch
+    of the fresh checkpoint is the backfill, no bucket layout written,
+    and the index holds the same rows as a default (bucketed) start."""
+    from meilisync_spark.operators.bucketed import read_buckets, read_meta
 
     index = str(tmp_path / "flat")
     rc = main([
@@ -441,27 +444,94 @@ def test_cli_start_flat_backfill_when_forced(spark, tmp_path, capsys):
         "--buckets", "0",
     ])
     assert rc == 0
-    out = capsys.readouterr().out
-    assert "backfill: loaded" in out and "sync complete" in out
+    assert "sync complete" in capsys.readouterr().out
     assert read_meta(index) is None
 
+    b_index = str(tmp_path / "bucketed")
+    rc = main([
+        "start",
+        "--events", f"{SF_SMOKE}/events.parquet",
+        "--index", b_index,
+        "--checkpoint", str(tmp_path / "ckpt_b"),
+    ])
+    assert rc == 0
+    cols = ["pk", "ts", "value", "k"]
+    flat = spark.read.parquet(index).select(*cols).collect()
+    assert flat
+    assert sorted(flat) == sorted(read_buckets(spark, b_index).select(*cols).collect())
 
-def test_cli_check_reports_progress_lag(spark, tmp_path, capsys):
-    """check --config with a configured progress store and --events
-    reports applied-position-vs-head lag per sync (the ops-mirror
-    consumer): after a caught-up start, lag is 0; a table with no
-    published position reports unknown."""
+
+def test_cli_start_max_files_flag_overrides_insert_size(spark, tmp_path):
+    """Flags override config: --max-files 1 wins over sink.insert_size,
+    so a 3-file drop dir commits 3 batches, not 1."""
+    import duckdb
+
+    drops = tmp_path / "drops"
+    drops.mkdir()
+    con = duckdb.connect()
+    for i in range(3):
+        path = drops / f"part-{i}.parquet"
+        con.sql(f"COPY (SELECT * FROM '{SF_SMOKE}/events.parquet' "
+                f"WHERE event_id % 3 = {i}) TO '{path}' (FORMAT PARQUET)")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    cfg = tmp_path / "config.yml"
+    cfg.write_text("sink:\n  insert_size: 5\n")
+    ckpt = tmp_path / "ckpt"
+    rc = main([
+        "start", "--events", str(drops), "--index", str(tmp_path / "index"),
+        "--checkpoint", str(ckpt), "--config", str(cfg), "--max-files", "1",
+    ])
+    assert rc == 0
+    assert len([c for c in os.listdir(ckpt / "commits") if c.isdigit()]) == 3
+
+
+@pytest.mark.parametrize("mode", ["config", "single_index"])
+def test_cli_check_reports_progress_lag(spark, tmp_path, capsys, mode):
+    """check with a configured progress store and --events reports
+    applied-position-vs-head lag per sync (the ops-mirror consumer):
+    after a caught-up start, lag is 0 — in config mode, and in
+    single-index mode over a log whose last event is a `view` (a kind
+    the sync does not consume, but whose position it has passed)."""
     import duckdb
 
     sink_root = str(tmp_path / "indexes")
     progress_path = str(tmp_path / "progress.json")
+    progress_cfg = [
+        "progress:",
+        "  type: file",
+        f"  path: {progress_path}",
+    ]
+    con = duckdb.connect()
+    if mode == "single_index":
+        events = str(tmp_path / "events.parquet")
+        src = f"'{SF_SMOKE}/events.parquet'"
+        con.sql(f"COPY (SELECT * FROM {src} UNION ALL "
+                f"(SELECT event_id + 1, ts, user_id, 'view', value, props "
+                f"FROM {src} ORDER BY event_id DESC LIMIT 1)) "
+                f"TO '{events}' (FORMAT PARQUET)")
+        cfg = tmp_path / "progress.yml"
+        cfg.write_text("\n".join(progress_cfg))
+        index = str(tmp_path / "index")
+        rc = main([
+            "start", "--events", events, "--index", index,
+            "--checkpoint", str(tmp_path / "ckpt"), "--config", str(cfg),
+        ])
+        assert rc == 0
+        capsys.readouterr()
+        rc = main([
+            "check", "--source", index, "--index", index, "--table", "users",
+            "--config", str(cfg), "--events", events,
+        ])
+        out = capsys.readouterr().out
+        assert rc == 0
+        assert "users: applied=" in out and "lag=0" in out, out
+        return
+
     cfg = tmp_path / "config.yml"
     cfg.write_text("\n".join([
         "sink:",
         f"  index_path: {sink_root}",
-        "progress:",
-        "  type: file",
-        f"  path: {progress_path}",
+        *progress_cfg,
         "sync:",
         "  - table: users",
         "    pk: user_id",
@@ -479,7 +549,6 @@ def test_cli_check_reports_progress_lag(spark, tmp_path, capsys):
     # sources dir for the count audit: the index itself (counts match)
     sources = str(tmp_path / "sources")
     os.makedirs(sources)
-    con = duckdb.connect()
     con.sql(f"COPY (SELECT * FROM '{sink_root}/users/**/*.parquet') "
             f"TO '{sources}/users.parquet' (FORMAT PARQUET)")
     con.sql(f"COPY (SELECT * FROM '{sink_root}/users/**/*.parquet') "
@@ -488,9 +557,7 @@ def test_cli_check_reports_progress_lag(spark, tmp_path, capsys):
     cfg2.write_text("\n".join([
         "sink:",
         f"  index_path: {sink_root}",
-        "progress:",
-        "  type: file",
-        f"  path: {progress_path}",
+        *progress_cfg,
         "sync:",
         "  - table: users",
         "    index: users_flat.parquet",

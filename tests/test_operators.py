@@ -185,6 +185,26 @@ def test_cc_driver_and_distributed_identical(spark, monkeypatch):
         run(4)
 
 
+def test_connected_components_string_ids_both_paths(spark, monkeypatch):
+    """The in-process path under CC_DRIVER_CAP_PAIRS keeps the node id
+    type: string doc_ids come back as strings, with the same labels and
+    schema as the distributed path."""
+    from meilisync_spark.operators import dedup as D
+
+    nodes = spark.createDataFrame([(c,) for c in "abcdef"], "doc_id string")
+    pairs = spark.createDataFrame(
+        [("b", "a"), ("b", "c"), ("e", "d")], "doc_a string, doc_b string"
+    )
+    driver = D.connected_components(nodes, pairs)
+    monkeypatch.setattr(D, "CC_DRIVER_CAP_PAIRS", 1)
+    dist = D.connected_components(nodes, pairs)
+    want = {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f"}
+    assert {r.doc_id: r.cluster_id for r in driver.collect()} == want
+    assert {r.doc_id: r.cluster_id for r in dist.collect()} == want
+    assert driver.schema == dist.schema
+    assert dict(driver.dtypes) == {"doc_id": "string", "cluster_id": "string"}
+
+
 def test_connected_components_empty_pairs(spark):
     """Round-12 internals change (round 1 fused into an edge
     aggregation; isolated nodes anti-join the final labels): an EMPTY

@@ -27,12 +27,8 @@ from meilisync_spark.operators.compaction import compact_last_wins
 from meilisync_spark.operators.project import apply_envelope_fields
 from meilisync_spark.sources.events import normalize_events
 from meilisync_spark.sources.parquet import load_table
-from meilisync_spark.streaming.pipeline import (
-    PAYLOAD_COLS,
-    run_cdc_pipeline,
-    run_settings_pipeline,
-)
-from tests.conftest import SF_SMOKE
+from meilisync_spark.streaming.pipeline import run_cdc_pipeline
+from tests.conftest import PAYLOAD_COLS, SF_SMOKE
 
 N_BUCKETS = 8
 
@@ -123,14 +119,14 @@ def test_bucketed_stream_equals_full_rewrite(spark, tmp_path, num_buckets):
 
     flat_index = str(tmp_path / "flat")
     run_cdc_pipeline(
-        spark, str(drops), flat_index, str(tmp_path / "ckpt_flat"),
+        spark, str(drops), Settings.for_index(flat_index), str(tmp_path / "ckpt_flat"),
         available_now=True, num_buckets=0, max_files_per_trigger=1,
     )
     flat = {r.pk: (r.value, r.k) for r in spark.read.parquet(flat_index).collect()}
 
     b_index = str(tmp_path / "bucketed")
     run_cdc_pipeline(
-        spark, str(drops), b_index, str(tmp_path / "ckpt_b"),
+        spark, str(drops), Settings.for_index(b_index), str(tmp_path / "ckpt_b"),
         available_now=True, num_buckets=num_buckets, max_files_per_trigger=1,
     )
     commits = os.listdir(tmp_path / "ckpt_b" / "commits")
@@ -162,7 +158,7 @@ def test_fresh_index_buckets_by_default(spark, tmp_path):
 
     index = str(tmp_path / "auto")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(index),
         str(tmp_path / "ckpt_a"), available_now=True,
     )
     meta = read_meta(index)
@@ -171,7 +167,7 @@ def test_fresh_index_buckets_by_default(spark, tmp_path):
     # same final state as the forced-flat baseline
     flat_index = str(tmp_path / "flat0")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", flat_index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(flat_index),
         str(tmp_path / "ckpt_f"), available_now=True, num_buckets=0,
     )
     flat = {r.pk: (r.value, r.k) for r in spark.read.parquet(flat_index).collect()}
@@ -180,7 +176,7 @@ def test_fresh_index_buckets_by_default(spark, tmp_path):
 
     # restart with no flag keeps the recorded layout (meta intact)
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(index),
         str(tmp_path / "ckpt_a"), available_now=True,
     )
     assert read_meta(index)["num_buckets"] == DEFAULT_NUM_BUCKETS
@@ -189,7 +185,7 @@ def test_fresh_index_buckets_by_default(spark, tmp_path):
     # a pre-existing flat index never silently converts
     assert resolve_num_buckets(flat_index, None) == 0
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", flat_index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(flat_index),
         str(tmp_path / "ckpt_f"), available_now=True,
     )
     assert read_meta(flat_index) is None
@@ -219,7 +215,7 @@ def test_settings_pipeline_routes_two_syncs(spark, tmp_path):
             Sync(full=True, table="accounts", pk="event_id", index="acct_idx"),
         ],
     )
-    run_settings_pipeline(
+    run_cdc_pipeline(
         spark, events_path, settings, str(tmp_path / "ckpt"),
         table_col="tbl", available_now=True,
     )
@@ -269,13 +265,13 @@ def test_plugin_chain_order(spark, tmp_path):
         syncs=[Sync(full=True, table="users", pk="user_id",
                     plugins=["tests.plugin_hooks.add_one_value"])],
     )
-    run_settings_pipeline(
+    run_cdc_pipeline(
         spark, events_path, settings, str(tmp_path / "ckpt"), available_now=True,
     )
 
     plain = str(tmp_path / "plain")
     run_cdc_pipeline(
-        spark, events_path, plain, str(tmp_path / "ckpt2"), available_now=True
+        spark, events_path, Settings.for_index(plain), str(tmp_path / "ckpt2"), available_now=True
     )
     expected = {
         r.pk: (None if r.value is None else r.value * 2 + 1)
@@ -298,12 +294,12 @@ def test_settings_pipeline_bucketed_mode(spark, tmp_path):
         Sync(full=True, table="users", pk="user_id"),
         Sync(full=True, table="accounts", pk="event_id", index="acct_idx"),
     ]
-    run_settings_pipeline(
+    run_cdc_pipeline(
         spark, events_path,
         Settings(sink=SinkSettings(index_path=flat_root), syncs=syncs),
         str(tmp_path / "ckpt_f"), table_col="tbl", available_now=True,
     )
-    run_settings_pipeline(
+    run_cdc_pipeline(
         spark, events_path,
         Settings(sink=SinkSettings(index_path=b_root), syncs=syncs),
         str(tmp_path / "ckpt_b"), table_col="tbl", available_now=True,
@@ -341,7 +337,7 @@ def test_settings_pipeline_checkpoint_resume(spark, tmp_path):
         syncs=[Sync(full=True, table="users", pk="user_id")],
     )
     ckpt = str(tmp_path / "ckpt")
-    run_settings_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
     partial = {
         r.pk: (r.value, r.k)
         for r in spark.read.parquet(os.path.join(sink_root, "users")).collect()
@@ -351,7 +347,7 @@ def test_settings_pipeline_checkpoint_resume(spark, tmp_path):
         f"COPY (SELECT * FROM '{SF_SMOKE}/events.parquet' WHERE event_id > {cut} "
         f"ORDER BY event_id) TO '{stream_dir}/part2.parquet' (FORMAT PARQUET)"
     )
-    run_settings_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
     final = {
         r.pk: (r.value, r.k)
         for r in spark.read.parquet(os.path.join(sink_root, "users")).collect()
@@ -591,7 +587,7 @@ def test_settings_pipeline_fields_drift_across_restarts(spark, tmp_path):
         sink=SinkSettings(index_path=sink_root),
         syncs=[Sync(full=True, table="users", pk="user_id", fields={"ts": None, "value": None})],
     )
-    run_settings_pipeline(spark, stream_dir, narrow, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, narrow, ckpt, available_now=True)
     idx = os.path.join(sink_root, "users")
     data_cols = [c for c in spark.read.parquet(idx).columns if c != "bucket"]
     assert sorted(data_cols) == ["pk", "ts", "value"]
@@ -605,7 +601,7 @@ def test_settings_pipeline_fields_drift_across_restarts(spark, tmp_path):
         sink=SinkSettings(index_path=sink_root),
         syncs=[Sync(full=True, table="users", pk="user_id")],  # full payload: ts, value, k
     )
-    run_settings_pipeline(spark, stream_dir, wide, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, wide, ckpt, available_now=True)
     out = spark.read.parquet(idx).drop("bucket")
     assert sorted(out.columns) == ["k", "pk", "ts", "value"]
     rows = {r.pk: r for r in out.collect()}
@@ -648,7 +644,7 @@ def test_per_sync_bucket_count(spark, tmp_path):
         Sync(full=True, table="users", pk="user_id", buckets=4),
         Sync(full=True, table="accounts", pk="event_id", index="acct_idx"),  # inherits 8
     ]
-    run_settings_pipeline(
+    run_cdc_pipeline(
         spark, events_path,
         Settings(sink=SinkSettings(index_path=b_root), syncs=syncs()),
         str(tmp_path / "ckpt_b"), table_col="tbl", available_now=True,
@@ -657,7 +653,7 @@ def test_per_sync_bucket_count(spark, tmp_path):
     assert read_meta(os.path.join(b_root, "users"))["num_buckets"] == 4
     assert read_meta(os.path.join(b_root, "acct_idx"))["num_buckets"] == 8
 
-    run_settings_pipeline(
+    run_cdc_pipeline(
         spark, events_path,
         Settings(sink=SinkSettings(index_path=flat_root), syncs=syncs()),
         str(tmp_path / "ckpt_f"), table_col="tbl", available_now=True,
@@ -701,7 +697,7 @@ def test_full_false_tails_from_head_not_history(spark, tmp_path):
         ],
     )
     ckpt = str(tmp_path / "ckpt")
-    run_settings_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
     # history skipped: the tail sync produced nothing, the full one all
     assert not os.path.exists(os.path.join(sink_root, "tail_idx"))
     full_1 = {
@@ -714,7 +710,7 @@ def test_full_false_tails_from_head_not_history(spark, tmp_path):
         f"COPY (SELECT * FROM '{SF_SMOKE}/events.parquet' WHERE event_id > {cut} "
         f"ORDER BY event_id) TO '{stream_dir}/part2.parquet' (FORMAT PARQUET)"
     )
-    run_settings_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, settings, ckpt, available_now=True)
 
     # the tail sync saw exactly the post-head events
     raw = spark.read.parquet(f"{SF_SMOKE}/events.parquet").where(
@@ -796,7 +792,7 @@ def test_settings_pipeline_publishes_progress_mirror(spark, tmp_path):
         ],
     )
     store = FileProgress(str(tmp_path / "progress.json"))
-    run_settings_pipeline(
+    run_cdc_pipeline(
         spark, events_path, settings, str(tmp_path / "ckpt"),
         table_col="tbl", available_now=True, progress=store,
     )
@@ -847,7 +843,7 @@ def test_cdc_pipeline_publishes_progress_mirror(spark, tmp_path):
 
     store = FileProgress(str(tmp_path / "p.json"))
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", str(tmp_path / "idx"),
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(str(tmp_path / "idx")),
         str(tmp_path / "ckpt"), available_now=True, progress=store,
     )
     ev = normalize_events(load_table(spark, SF_SMOKE, "events"))
@@ -964,7 +960,7 @@ def test_delta_sink_pipeline_fails_fast_without_package(spark, tmp_path):
         pass
     with pytest.raises(RuntimeError, match="delta-spark"):
         run_cdc_pipeline(
-            spark, f"{SF_SMOKE}/events.parquet", str(tmp_path / "idx"),
+            spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(str(tmp_path / "idx")),
             str(tmp_path / "ckpt"), available_now=True, sink_format="delta",
         )
 
@@ -977,13 +973,13 @@ def test_delta_stream_equals_full_rewrite(spark, tmp_path):
     pytest.importorskip("delta")
     flat_index = str(tmp_path / "flat")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", flat_index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(flat_index),
         str(tmp_path / "ckpt_flat"), available_now=True, num_buckets=0,
     )
     flat = {r.pk: (r.value, r.k) for r in spark.read.parquet(flat_index).collect()}
     d_index = str(tmp_path / "delta")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", d_index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(d_index),
         str(tmp_path / "ckpt_d"), available_now=True, sink_format="delta",
     )
     got = {r.pk: (r.value, r.k)
@@ -1008,7 +1004,7 @@ def test_single_file_flat_index_stays_flat(spark, tmp_path):
     )
     assert resolve_num_buckets(idx, None) == 0
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", idx,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(idx),
         str(tmp_path / "ckpt"), available_now=True,
     )
     assert read_meta(idx) is None  # stayed flat

@@ -14,10 +14,11 @@ from pyspark.sql import functions as F
 
 from meilisync_spark.operators.apply import apply_changes
 from meilisync_spark.operators.compaction import compact_last_wins
+from meilisync_spark.config import Settings
 from meilisync_spark.sources.events import normalize_events
 from meilisync_spark.sources.parquet import load_table
-from meilisync_spark.streaming.pipeline import PAYLOAD_COLS, run_cdc_pipeline
-from tests.conftest import SF_SMOKE
+from meilisync_spark.streaming.pipeline import run_cdc_pipeline
+from tests.conftest import PAYLOAD_COLS, SF_SMOKE
 
 
 @pytest.fixture()
@@ -52,7 +53,7 @@ def test_single_batch_stream_equals_batch_apply(spark, workdir):
     run_cdc_pipeline(
         spark,
         f"{SF_SMOKE}/events.parquet",
-        index,
+        Settings.for_index(index),
         os.path.join(workdir, "ckpt"),
         available_now=True,
     )
@@ -79,7 +80,7 @@ def test_multi_batch_stream_equals_sequential_folds(spark, workdir):
     run_cdc_pipeline(
         spark,
         stream_dir,
-        index,
+        Settings.for_index(index),
         os.path.join(workdir, "ckpt"),
         max_files_per_trigger=1,
         available_now=True,
@@ -110,7 +111,7 @@ def test_catch_up_cut_by_timeout_raises(spark, workdir):
 
     with pytest.raises(TimeoutError, match="batches committed"):
         run_cdc_pipeline(
-            spark, stream_dir, index, ckpt, max_files_per_trigger=1,
+            spark, stream_dir, Settings.for_index(index), ckpt, max_files_per_trigger=1,
             available_now=True, pre_batch=slow, timeout_sec=2.0,
         )
 
@@ -120,7 +121,7 @@ def test_catch_up_cut_by_timeout_raises(spark, workdir):
 
     assert commits() < 3
     run_cdc_pipeline(
-        spark, stream_dir, index, ckpt, max_files_per_trigger=1, available_now=True
+        spark, stream_dir, Settings.for_index(index), ckpt, max_files_per_trigger=1, available_now=True
     )
     assert commits() == 3
 
@@ -139,14 +140,14 @@ def test_checkpoint_resume_no_reprocessing(spark, workdir):
 
     index = os.path.join(workdir, "index")
     ckpt = os.path.join(workdir, "ckpt")
-    run_cdc_pipeline(spark, stream_dir, index, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, Settings.for_index(index), ckpt, available_now=True)
     partial = {r.pk: (r.value, r.k) for r in spark.read.parquet(index).collect()}
 
     # resume with the held-back chunk now present
     back = os.path.join(stream_dir, os.path.basename(held))
     shutil.move(os.path.join(staged, os.path.basename(held)), back)
     os.utime(back, None)
-    run_cdc_pipeline(spark, stream_dir, index, ckpt, available_now=True)
+    run_cdc_pipeline(spark, stream_dir, Settings.for_index(index), ckpt, available_now=True)
     final = {r.pk: (r.value, r.k) for r in spark.read.parquet(index).collect()}
 
     # full-log batch reference
@@ -190,12 +191,12 @@ def test_json_event_stream_equals_parquet(spark, workdir, duck):
     ])
     j_index = os.path.join(workdir, "idx_json")
     run_cdc_pipeline(
-        spark, json_dir, j_index, os.path.join(workdir, "ckpt_j"),
+        spark, json_dir, Settings.for_index(j_index), os.path.join(workdir, "ckpt_j"),
         available_now=True, source_format="json", source_schema=schema,
     )
     p_index = os.path.join(workdir, "idx_parquet")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", p_index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(p_index),
         os.path.join(workdir, "ckpt_p"), available_now=True,
     )
     got_j = {r.pk: (r.value, r.k, r.ts) for r in spark.read.parquet(j_index).collect()}
@@ -215,12 +216,12 @@ def test_orc_event_stream_equals_parquet(spark, workdir):
     load_table(spark, SF_SMOKE, "events").write.orc(orc_dir)
     o_index = os.path.join(workdir, "idx_orc")
     run_cdc_pipeline(
-        spark, orc_dir, o_index, os.path.join(workdir, "ckpt_o"),
+        spark, orc_dir, Settings.for_index(o_index), os.path.join(workdir, "ckpt_o"),
         available_now=True, source_format="orc",
     )
     p_index = os.path.join(workdir, "idx_parquet2")
     run_cdc_pipeline(
-        spark, f"{SF_SMOKE}/events.parquet", p_index,
+        spark, f"{SF_SMOKE}/events.parquet", Settings.for_index(p_index),
         os.path.join(workdir, "ckpt_p2"), available_now=True,
     )
     got_o = {r.pk: (r.value, r.k, r.ts) for r in spark.read.parquet(o_index).collect()}
@@ -259,16 +260,15 @@ def test_maxwell_drop_dir_tails_end_to_end(spark, tmp_path):
         mxw(3, "update", 1, 1.5),
     ]) + "\n")
 
-    def norm(df):
-        ev = normalize_maxwell(df, payload_schema, pk="id")
-        return ev.select("seq", "ts", "table", "op", "pk",
-                         F.col("payload.v").alias("v"))
+    def norm(df, sync):
+        ev = normalize_maxwell(df, payload_schema, pk=sync.pk)
+        return ev.select("seq", "table", "op", "pk", F.col("payload.v").alias("v"))
 
     index = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
-    kw = dict(source_format="text", normalizer=norm, payload_cols=["v"],
+    kw = dict(source_format="text", normalizer=norm,
               available_now=True, max_files_per_trigger=1)
-    run_cdc_pipeline(spark, str(drop), index, ckpt, **kw)
+    run_cdc_pipeline(spark, str(drop), Settings.for_index(index, pk="id"), ckpt, **kw)
     assert {(r.pk, r.v) for r in spark.read.parquet(index).collect()} == {
         (1, 1.5), (2, 2.0)}
 
@@ -277,5 +277,5 @@ def test_maxwell_drop_dir_tails_end_to_end(spark, tmp_path):
         mxw(4, "delete", 2, 2.0),
         mxw(5, "update", 1, 9.0),
     ]) + "\n")
-    run_cdc_pipeline(spark, str(drop), index, ckpt, **kw)
+    run_cdc_pipeline(spark, str(drop), Settings.for_index(index, pk="id"), ckpt, **kw)
     assert {(r.pk, r.v) for r in spark.read.parquet(index).collect()} == {(1, 9.0)}
