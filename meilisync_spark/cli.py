@@ -27,7 +27,7 @@ import sys
 
 from meilisync_spark import __version__
 from meilisync_spark.config import Settings, load_plugin
-from meilisync_spark.operators.check import count_check
+from meilisync_spark.operators.check import count_check, read_index
 from meilisync_spark.operators.refresh import refresh_data
 from meilisync_spark.session import get_spark
 from meilisync_spark.sources.parquet import load_path
@@ -210,8 +210,8 @@ def cmd_check(args: argparse.Namespace) -> int:
             return 2
         for sync in settings.syncs:
             src = spark.read.parquet(os.path.join(src_root, f"{sync.table}.parquet"))
-            idx = spark.read.parquet(
-                os.path.join(settings.sink.index_path, sync.index_name)
+            idx = read_index(
+                spark, os.path.join(settings.sink.index_path, sync.index_name)
             )
             pairs[sync.table] = (src, idx)
     else:
@@ -219,7 +219,7 @@ def cmd_check(args: argparse.Namespace) -> int:
             print("check needs --source and --index (or --config + --sources)")
             return 2
         src = spark.read.parquet(args.source)
-        idx = spark.read.parquet(args.index)
+        idx = read_index(spark, args.index)
         pairs[args.table] = (src, idx)
     rows = count_check(pairs).collect()
     ok = all(r.consistent for r in rows)

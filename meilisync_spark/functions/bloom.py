@@ -5,7 +5,8 @@ existence question per batch band: "does the stored band index contain
 any row with my (band_idx, band_hash)?" For a steady-state trickle the
 answer is almost always NO — the batch is new text — yet the probe
 still opens and scans every bb= bucket the batch touches (measured 7 s
-of the 12 s staged batch at 500k docs, INGEST_STAGE_PROBE.json). A
+of the 12 s staged batch at 500k docs; round-9 ingest stage probe,
+script and output at git 1e8543b). A
 Bloom filter over the index's keys gives the NO answers without
 touching the index at all: only bloom-POSITIVE bands proceed to the
 real (exact) probe, and the bb= pruning shrinks to their buckets.
@@ -211,8 +212,8 @@ def size_for(n_keys: int, fpp: float = 0.01,
     (m = -n ln p / ln²2), clamped to [floor, cap]. The 1 GiB cap bounds
     driver/broadcast memory — past it the filter runs saturated-but-
     correct and the caller's fpp threshold stops asking for growth it
-    can't have (SCALE.md: at that point the honest answer is sharding
-    the filter with the index, one sidecar per key range)."""
+    can't have (past that point the sidecar converts to the sharded
+    form, functions/bloom_sharded.py)."""
     wanted = int(-n_keys * math.log(fpp) / (math.log(2) ** 2)) if n_keys else 0
     bits = floor_bits
     while bits < wanted and bits < cap_bits:

@@ -321,8 +321,8 @@ def bpe_train_fast(
     production 32k-merge vocab the per-merge job latency alone (~0.13
     s) is hours. The indexed in-process learner
     (:func:`_train_merges_indexed`) touches only words containing the
-    winning pair per merge — minutes for 32k merges (SCALE.md, BPE
-    trainer row). The trained-vocab frame is then rebuilt
+    winning pair per merge — minutes for 32k merges (SCALE.md, Text /
+    multimodal). The trained-vocab frame is then rebuilt
     DISTRIBUTED — merges broadcast in a mapInPandas closure over the
     vocab frame — so nothing vocab-sized ships driver→cluster.
 
@@ -436,8 +436,10 @@ def bpe_apply_merges_fast(
     O(passes × len), INDEPENDENT of |merges| — while the fold twin
     (:func:`bpe_apply_merges`) builds one Catalyst aggregate per merge
     plus an eager pin job every ``BPE_PIN_EVERY``, which is the right
-    shape only for small merge lists (BPE_PIN_PROBE.json measures the
-    crossover).
+    shape only for small merge lists: at 512 merges over 20k words the
+    fold took 65-72 s at every ``pin_every`` in {4, 16, 64, 256} and this
+    encoder 0.94 s (round-7 BPE pin probe; script and output at
+    git 1e8543b).
 
     Equivalence: on ALIAS-FREE merge lists (no output string produced
     by two distinct merges — :func:`merges_aliased` returns []) this

@@ -5,16 +5,28 @@ sink index's ``number_of_documents`` per sync rule and logs
 consistent/inconsistent. (It compares only counts, not contents —
 SURVEY.md Q6; we keep that contract and add an optional content hash.)
 
-Spark realization: one row per sync rule via a full-outer join of two
-count aggregates, so a missing index shows up as NULL rather than a
-crash (the reference treats a missing index as count 0 via
-get_index 404-tolerance, meilisync/meili.py:77-84).
+Spark realization: one row per sync rule via a cross join of two
+count aggregates. A missing index counts 0 (:func:`read_index`), as in
+the reference's get_index 404-tolerance (meilisync/meili.py:77-84) and
+the bucketed sink, which removes an index left with no live rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def read_index(spark: SparkSession, path: str) -> DataFrame:
+    """The index at ``path`` for counting; an absent path is an empty
+    index (an empty frame), not an error."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.range(0)
 
 
 def count_check(pairs: dict[str, tuple[DataFrame, DataFrame]]) -> DataFrame:
@@ -25,8 +37,6 @@ def count_check(pairs: dict[str, tuple[DataFrame, DataFrame]]) -> DataFrame:
     per-sync log lines (meilisync/main.py:196-206).
     """
     if not pairs:
-        from pyspark.sql import SparkSession
-
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
         return spark.createDataFrame(
             [], "table string, source_count long, index_count long, consistent boolean"

@@ -336,14 +336,15 @@ def shingle_rows(docs: DataFrame, n: int, words: str | None = None) -> DataFrame
     """(doc_id, _sh) — one row per word n-gram shingle, the string
     built per GENERATED row inside whole-stage codegen.
 
-    This is the second half of the explode rebuild
-    (SHINGLE_CODEGEN_MICROBENCH, round 12): the first half moved the
-    HASH below the explode; the shingle STRING build itself was still
-    the interpreted higher-order ``transform(sequence, i ->
-    concat_ws(' ', slice(w, i, n)))`` (FOLD_MICROBENCH put it at 41%
-    of the old stage). Exploding the INDEX instead and building each
-    shingle with ``concat_ws(' ', slice(w, i, n))`` per generated row
-    keeps the whole tokenize → shingle → hash chain inside one
+    This is the second half of the explode rebuild (round-12 shingle
+    codegen microbenchmark; script and output at git 1e8543b): the
+    first half moved the HASH below the explode; the shingle STRING
+    build itself was still the interpreted higher-order
+    ``transform(sequence, i -> concat_ws(' ', slice(w, i, n)))`` (the
+    round-11 fold microbenchmark put it at 41% of the old stage).
+    Exploding the INDEX instead and building each shingle with
+    ``concat_ws(' ', slice(w, i, n))`` per generated row keeps the
+    whole tokenize → shingle → hash chain inside one
     WholeStageCodegen span — measured 2.06× on the minhash shape and
     1.73× on the decon shape at 200k docs (min-of-3 interleaved), with
     byte-identical strings (same expression per index, so every
@@ -381,8 +382,8 @@ def shingle_rows(docs: DataFrame, n: int, words: str | None = None) -> DataFrame
 def minhash_signatures(docs: DataFrame, words: str | None = None) -> DataFrame:
     """doc_id + 16-permutation minhash signature.
 
-    Shape chosen for CPU, validated by measurement (FOLD_MICROBENCH
-    r11, SCALE.md §Round-11/§Round-12): explode the shingles, hash
+    Shape chosen for CPU, validated by measurement (SCALE.md,
+    MinHash/LSH; rounds 11-12 at git 1e8543b): explode the shingles, hash
     per ROW inside whole-stage codegen, and rebuild the 16-slot
     signature as 16 ``min()`` aggregates under a map-side-combined
     ``groupBy(doc_id)``. Spark's higher-order array functions are
@@ -774,12 +775,15 @@ def incremental_neardup_oracle_sql() -> str:
 CC_MAX_ITERS = 25
 
 # Pair count at or under which the propagation loop runs in-process
-# over ONE bounded collect of the pair list (≈2M pairs × 2 longs —
-# tens of MB on the driver, the same collect-under-cap policy as
-# kmeans.TRAIN_DRIVER_CAP_ROWS / bpe's word-table cap). Near-dup pair
-# graphs are sparse by construction (the LSH band guard bounds fanout),
-# but a 100-TB corpus can still exceed this — the distributed loop
-# below is the over-cap path and the semantics reference.
+# over ONE bounded collect of the pair list (the same collect-under-cap
+# policy as kmeans.TRAIN_DRIVER_CAP_ROWS / bpe's word-table cap). At the
+# cap the Python driver holds 1.1-1.6 GB: tracemalloc peak of 2^21
+# collected Rows (656 MB) plus _cc_driver's adjacency and label dicts,
+# 1,147 MB for 8-doc clusters (2.4M nodes) and 1,568 MB for disjoint
+# pairs (4.2M nodes). Near-dup pair graphs are sparse by construction
+# (the LSH band guard bounds fanout), but a 100-TB corpus can still
+# exceed this — the distributed loop below is the over-cap path and the
+# semantics reference.
 CC_DRIVER_CAP_PAIRS = 1 << 21
 
 
@@ -1386,7 +1390,7 @@ def decontaminate(docs: DataFrame, corpus: DataFrame | None = None) -> DataFrame
     bounded by contamination volume, not corpus size). So the corpus
     side is now :func:`shingle_rows` (index explode + codegen string
     build + codegen hash — 1.73× on this stage's shape at 200k docs,
-    SHINGLE_CODEGEN_MICROBENCH) with no ``array_distinct`` and no
+    round-12 shingle codegen microbenchmark) with no ``array_distinct`` and no
     interpreted per-element hash; the matched multiset of
     (corpus_doc, eval_doc, sh) triples is identical to the old
     distinct-both-sides join's set, so ``countDistinct`` returns

@@ -1032,8 +1032,8 @@ def add_to_index(spark, index_path: str, emb: DataFrame, *, dedup: bool = True) 
         # each cluster= directory gets ONE new file per batch, not one
         # per (write task, directory) — the same small-files /
         # file-open amplification fixed on the corpus-ingest appends
-        # (INGEST_STAGE_PROBE.json: the unclustered form spent 24 s of
-        # a 40 s batch opening ~8k tiny files)
+        # (round-9 ingest stage probe, git 1e8543b: the unclustered
+        # form spent 24 s of a 40 s batch opening ~8k tiny files)
         (
             new.select("vec_id", "codes", "cluster")
             .repartition(F.col("cluster"))

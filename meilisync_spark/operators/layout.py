@@ -1,12 +1,13 @@
 """Parquet layout doctor — detect scan-parallelism pathologies before
 they serialize a cluster.
 
-Round 8's headline diagnosis (SCALE.md "Round-8 scale changes"): a big
-single-row-group parquet file is UNSPLITTABLE — Spark plans byte-range
-splits, but a scan task only reads row groups whose start offset falls
-in its range, so one ~1M-row group means ONE real scan task however
-many partitions were planned, and Catalyst fuses pushed-down filters
-into that serial task. The engine self-defends (`sources/parquet.py::
+Round 8's headline diagnosis (SCALE.md, input layout; the round-8
+write-up is in SCALE.md at git 1e8543b): a big single-row-group
+parquet file is UNSPLITTABLE — Spark plans byte-range splits, but a
+scan task only reads row groups whose start offset falls in its range,
+so one ~1M-row group means ONE real scan task however many partitions
+were planned, and Catalyst fuses pushed-down filters into that serial
+task. The engine self-defends (`sources/parquet.py::
 spread` pins such files), but the RIGHT fix is the data layout — this
 module is the audit that tells an operator which files to rewrite.
 

@@ -6,8 +6,9 @@ per micro-batch — the bucket-key clustering already collapsed the
 (task × directory) explosion, but a long run still ages linearly:
 500 batches × 256 touched ``hb=``/``bb=`` directories ≈ 10⁵ small
 files, and the probe stages that open those directories
-(``band_index_open_prune`` measured 2.0 → 11.6 s from 500k → 2M docs,
-INGEST_STAGE_PROBE*.json) pay for every one of them at listing time.
+(``band_index_open_prune`` measured 2.0 → 11.6 s from 500k → 2M docs
+by the round-9 ingest stage probe, script and output at git 1e8543b)
+pay for every one of them at listing time.
 
 Why not the table-level rewrite on a cadence? ``compact_table``
 (operators/refresh.py) is O(table) per invocation, so calling it every

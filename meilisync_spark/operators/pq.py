@@ -363,15 +363,3 @@ def pq_codes(emb: DataFrame) -> DataFrame:
     return pq_encode(emb, books).select(
         "vec_id", F.array_join("codes", ",").alias("codes_csv")
     )
-
-
-def pq_recall(emb: DataFrame, k: int = 5) -> DataFrame:
-    """(q_id, n_hits, n_brute, recall) — ADC top-k vs exact brute-force
-    cosine ground truth on the SAME corpus. On the clustered twin this
-    measures what 32× compression keeps; on the raw near-orthogonal
-    fixture it honestly shows what it costs (distances between
-    unrelated vectors compress poorly — that is the real trade)."""
-    from meilisync_spark.operators.similarity import _recall_against_brute
-
-    books = pq_codebooks(emb)
-    return _recall_against_brute(emb, pq_topk(emb, books, k), k)

@@ -115,9 +115,10 @@ BLOOM_TARGET_FPP = 5e-4
 # Threshold-driven conversion to the SHARDED sidecar BELOW the 1 GiB
 # cap (VERDICT r11 #3): the in-memory LoggedBloom probe's per-batch
 # cost grows with bitmap size (broadcast ship + k=7 random bit reads
-# missing cache — INGEST_STAGE_PROBE_2M measured warm touched_hb
+# missing cache — the ingest stage probe measured warm touched_hb
 # 0.59 s at the 2 MiB/500k-doc state vs 1.52 s at 8 MiB/2M), while the
-# sharded/memmap form's line is flat (BLOOM_CAPCROSS_PROBE). Convert
+# sharded/memmap form's line is flat (the Bloom cap-crossing probe;
+# both scripts and outputs at git 1e8543b). Convert
 # once the filter's RIGHT size for its key count reaches 2^26 bits
 # (8 MiB ≈ 2M hash keys at target fpp) — the exact size where the tax
 # was measured — instead of only at cap saturation, so steady-state
@@ -630,7 +631,8 @@ def run_corpus_ingest(
                 # nearly every bb= directory (a 5k-doc batch carries
                 # 40k band hashes ≈ all 256 buckets), so a 32-task
                 # write opens ~32x256 ≈ 8k tiny files — measured 24 s
-                # of the 40 s batch constant (INGEST_STAGE_PROBE.json)
+                # of the 40 s batch constant (round-9 ingest stage
+                # probe, git 1e8543b)
                 # and a file-count explosion that compounds per batch.
                 # Hash-clustering by bb makes it one file per touched
                 # directory; the extra exchange is O(batch) band rows.

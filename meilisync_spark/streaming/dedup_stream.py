@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from meilisync_spark.streaming.pipeline import read_event_stream
+from meilisync_spark.streaming.pipeline import _start_and_await, read_event_stream
 
 REDELIVERY_MOD = 7
 DEDUP_WATERMARK = "1 hour"
@@ -68,19 +68,10 @@ def run_stream_dedup(
     timeout_sec: float = 180.0,
 ) -> None:
     stream = read_event_stream(spark, events_path, max_files_per_trigger)
-    q = (
+    writer = (
         dedup_events(with_redelivery(stream), watermark)
         .writeStream.format("parquet")
         .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if q.exception() is not None:
-        raise q.exception()
+    _start_and_await(writer, checkpoint_dir, True, None, timeout_sec)

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from meilisync_spark.streaming.pipeline import read_event_stream
+from meilisync_spark.streaming.pipeline import _start_and_await, read_event_stream
 
 JOIN_HORIZON = "30 minutes"
 
@@ -75,19 +75,10 @@ def run_stream_stream_join(
         .where(F.col("event_type") == "view")
         .withWatermark("ts", watermark)
     )
-    q = (
+    writer = (
         purchase_view_pairs(purchases, views)
         .writeStream.format("parquet")
         .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if q.exception() is not None:
-        raise q.exception()
+    _start_and_await(writer, checkpoint_dir, True, None, timeout_sec)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meilisync_spark.operators.refresh import refresh_data
-from meilisync_spark.streaming.pipeline import read_event_stream
+from meilisync_spark.streaming.pipeline import _start_and_await, read_event_stream
 
 import os
 
@@ -56,16 +56,6 @@ def _merge_keyed(spark: SparkSession, batch_df: DataFrame, path: str, keys: list
     else:
         new_state = batch_df
     refresh_data(new_state, path)
-
-
-def _await(q, timeout_sec: float) -> None:
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if q.exception() is not None:
-        raise q.exception()
 
 
 def run_windowed_stats(
@@ -108,14 +98,10 @@ def run_windowed_stats(
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
         _merge_keyed(spark, batch_df, out_path, ["hour_start", "event_type"])
 
-    q = (
-        agg.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _start_and_await(
+        agg.writeStream.foreachBatch(upsert).outputMode("update"),
+        checkpoint_dir, True, None, timeout_sec,
     )
-    _await(q, timeout_sec)
 
 
 def run_session_windows(
@@ -166,14 +152,10 @@ def run_session_windows(
     def overwrite(batch_df: DataFrame, _batch_id: int) -> None:
         refresh_data(batch_df, out_path)
 
-    q = (
-        agg.writeStream.foreachBatch(overwrite)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _start_and_await(
+        agg.writeStream.foreachBatch(overwrite).outputMode("complete"),
+        checkpoint_dir, True, None, timeout_sec,
     )
-    _await(q, timeout_sec)
 
 
 USER_TOTALS_SCHEMA = "user_id long, n_events long, total_cents long, last_event_id long"
@@ -228,11 +210,7 @@ def run_user_totals(
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
         _merge_keyed(spark, batch_df, out_path, ["user_id"])
 
-    q = (
-        updated.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _start_and_await(
+        updated.writeStream.foreachBatch(upsert).outputMode("update"),
+        checkpoint_dir, True, None, timeout_sec,
     )
-    _await(q, timeout_sec)

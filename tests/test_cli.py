@@ -880,3 +880,42 @@ def test_cli_maintain(spark, tmp_path, capsys):
     assert stats["dirs_compacted"] > 0 and stats["healed"] == 0
     assert M.table_file_count(path) < n_before
     assert spark.read.parquet(path).count() == before_rows
+
+
+def test_cli_check_never_materialized_index_counts_zero(spark, tmp_path, capsys):
+    """A log of only `view` events leaves no index on disk (an empty
+    bucketed index is removed); `check` reads the absent index as
+    empty — `index=0` — in single-index and config mode alike."""
+    import duckdb
+
+    con = duckdb.connect()
+    events = str(tmp_path / "events.parquet")
+    con.sql(f"COPY (SELECT event_id, ts, user_id, 'view' AS event_type, value, props "
+            f"FROM '{SF_SMOKE}/events.parquet' ORDER BY event_id LIMIT 1) "
+            f"TO '{events}' (FORMAT PARQUET)")
+    sources = tmp_path / "sources"
+    sources.mkdir()
+    source = str(sources / "users.parquet")
+    con.sql(f"COPY (SELECT 1::BIGINT AS user_id WHERE false) TO '{source}' (FORMAT PARQUET)")
+    index = str(tmp_path / "index")
+    rc = main(["start", "--events", events, "--index", index,
+               "--checkpoint", str(tmp_path / "ckpt")])
+    assert rc == 0 and not os.path.exists(index)
+    capsys.readouterr()
+
+    rc = main(["check", "--source", source, "--index", index, "--table", "users"])
+    assert rc == 0
+    assert "users: source=0 index=0 consistent" in capsys.readouterr().out
+
+    cfg = tmp_path / "config.yml"
+    cfg.write_text("\n".join([
+        "sink:",
+        f"  index_path: {tmp_path / 'indexes'}",
+        "sync:",
+        "  - table: users",
+        "    pk: user_id",
+        "    full: true",
+    ]))
+    rc = main(["check", "--config", str(cfg), "--sources", str(sources)])
+    assert rc == 0
+    assert "users: source=0 index=0 consistent" in capsys.readouterr().out

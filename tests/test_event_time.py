@@ -8,7 +8,9 @@ import os
 import time
 
 import duckdb
+import pytest
 
+from meilisync_spark.streaming.pipeline import CatchUpTimeout
 from meilisync_spark.streaming.windowed import run_user_totals, run_windowed_stats
 from tests.conftest import SF_SMOKE
 
@@ -54,6 +56,16 @@ def test_windowed_stats_multibatch_equals_batch(spark, duck, tmp_path):
         ).fetchall()
     }
     assert got == expected
+
+
+def test_windowed_stats_cut_by_timeout_raises(spark, tmp_path):
+    """A catch-up run stopped at its timeout fails loudly instead of
+    leaving a partial state table for the caller to read as final."""
+    with pytest.raises(CatchUpTimeout):
+        run_windowed_stats(
+            spark, f"{SF_SMOKE}/events.parquet", str(tmp_path / "state"),
+            str(tmp_path / "ckpt"), timeout_sec=0.01,
+        )
 
 
 def test_user_totals_multibatch_equals_batch(spark, duck, tmp_path):

@@ -202,7 +202,7 @@ def test_fingerprint_source_overlap_detects_partial_reuse(spark):
 
 
 def test_minhash_explode_rebuild_bit_identical_to_fold(spark):
-    """Round-12 perf lever (SCALE.md §Round-11): the explode+codegen
+    """Round-12 perf lever (SCALE.md, MinHash/LSH): the explode+codegen
     signature build must be BIT-IDENTICAL to the HOF fold it replaces
     — same base hash, same permutations, same min — across repeated
     shingles, sub-threshold docs (filtered by both), and single-shingle
