@@ -446,8 +446,9 @@ def cmd_pipeline(args: argparse.Namespace) -> int:
 def cmd_rebucket(args: argparse.Namespace) -> int:
     """Offline capacity operation for the bucketed index layout (one
     full shuffle + atomic directory swap; see operators/bucketed.py)."""
-    from meilisync_spark.operators.bucketed import read_meta, rebucket_index
+    from meilisync_spark.operators.bucketed import _sweep_stale, read_meta, rebucket_index
 
+    _sweep_stale(args.index)  # an earlier crashed rebucket may have parked it
     if not os.path.isdir(args.index):
         # a typo'd path must not look like a successful maintenance run
         print(f"error: no index at {args.index}", file=sys.stderr)

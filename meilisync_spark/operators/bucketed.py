@@ -46,8 +46,15 @@ bucket see old-or-new, never half). The batch is not atomic *across*
 buckets — a reader scanning the whole index mid-swap can see bucket K
 new and bucket J old. The reference has the same property: its sink
 applies per-event writes with no cross-document transaction
-(meilisync/meili.py:121-151). Crash recovery: stale ``_tmp-*``/
-``_old-*`` staging dirs are swept on the next batch.
+(meilisync/meili.py:121-151).
+
+Crash recovery: every index writer (bootstrap, per-batch MERGE,
+rebucket, operators/refresh.py) swaps through :func:`_swap_in`, and
+:func:`_sweep_stale` runs before every write with one contract: a
+parked directory whose live path is absent is restored; every other
+leftover is reaped. A crash anywhere leaves each bucket new or old,
+and the replayed batch (Spark never committed it) re-applies
+idempotently on top.
 
 Reference parity: S9/S10/S11 apply semantics are inherited unchanged —
 the per-bucket MERGE is operators/apply.py:apply_changes.
@@ -89,7 +96,11 @@ def resolve_num_buckets(index_path: str, requested: int | None) -> int:
     - a fresh index defaults to :data:`DEFAULT_NUM_BUCKETS` — the
       O(batch)-per-micro-batch layout is the only one that survives a
       100-TB index, so new indexes get it without opt-in.
+
+    An absent path is swept first: a crash may have parked the index.
     """
+    if not os.path.lexists(index_path):
+        _sweep_stale(index_path)
     if requested is not None:
         return max(requested, 0)
     meta = read_meta(index_path)
@@ -111,38 +122,51 @@ def bucket_expr(pk: str, num_buckets: int) -> Column:
     return (F.crc32(F.col(pk).cast("string")) % num_buckets).cast("int")
 
 
-def _sweep_stale(index_path: str) -> None:
-    """Remove staging leftovers from a crashed previous batch, and roll
-    back an interrupted :func:`rebucket_index` swap.
+def _drop(path: str) -> None:
+    """Remove ``path`` if present. A symlink or file is unlinked
+    (``rmtree(ignore_errors=True)`` silently skips both); a symlink's
+    target is reaped by :func:`_sweep_stale` once nothing points at it."""
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.lexists(path):
+        os.unlink(path)
 
-    Rebucket parks the live layout under ``{index}_prev-<tag>`` for the
-    instant between "old layout moved aside" and "new layout moved in".
-    A crash in that window leaves the index path absent — which the
-    absent-path-means-empty contract would otherwise read as an empty
-    index and silently bootstrap over. Restoring the parked copy first
-    makes the crash equivalent to "the rebucket never happened"; the
-    half-written ``_stg-*`` staging is then garbage. A ``_prev-*`` that
-    coexists with a live index path is the leftover of a *completed*
-    swap (crash after the rename-in) and is safe to drop."""
-    parent, name = os.path.split(index_path.rstrip("/"))
+
+def _swap_in(staged: str, live: str, parked: str) -> None:
+    """The one park/move-in step: park ``live`` (if present) as
+    ``parked`` (``{index}_old-<tag>[-K]``), rename ``staged`` (if
+    present) in, drop the parked copy."""
+    if os.path.lexists(live):
+        os.rename(live, parked)
+    if os.path.lexists(staged):
+        os.rename(staged, live)
+    _drop(parked)
+
+
+def _sweep_stale(index_path: str) -> None:
+    """Crash recovery for every writer of ``index_path`` (single writer,
+    like the reference's start loop): a parked ``{index}_old-<tag>``
+    (bucket K: ``-K``) whose live path is absent is restored; every
+    other leftover (``_old-``, ``_stg-``, ``_tmp-``, ``_lnk-``, a
+    ``_v-`` the index symlink does not point at) is reaped."""
+    index_path = index_path.rstrip("/")
+    parent, name = os.path.split(index_path)
+    parent = parent or "."
     if not os.path.isdir(parent):
         return
-    prevs = sorted(
-        e for e in os.listdir(parent) if e.startswith(f"{name}_prev-")
-    )
-    if prevs and not os.path.exists(index_path):
-        # single-writer contract ⇒ at most one interrupted swap; roll
-        # it back before anything can mistake "absent" for "empty"
-        os.rename(os.path.join(parent, prevs[0]), index_path)
-        prevs = prevs[1:]
-    for entry in os.listdir(parent):
-        if (
-            entry.startswith(f"{name}_tmp-")
-            or entry.startswith(f"{name}_old-")
-            or entry.startswith(f"{name}_stg-")
-            or entry in prevs
-        ):
-            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+    ours = []
+    for entry in sorted(os.listdir(parent)):  # a whole index sorts before its buckets
+        kind, _, rest = entry[len(name) + 1:].partition("-")
+        if entry.startswith(f"{name}_") and kind in ("old", "stg", "tmp", "lnk", "v"):
+            ours.append((os.path.join(parent, entry), kind, rest.partition("-")[2]))
+    for path, kind, bucket in ours:
+        live = os.path.join(index_path, f"{BUCKET_COL}={bucket}") if bucket else index_path
+        if kind == "old" and not os.path.lexists(live):
+            os.rename(path, live)
+    target = os.path.realpath(index_path) if os.path.islink(index_path) else None
+    for path, _, _ in ours:
+        if os.path.lexists(path) and os.path.realpath(path) != target:
+            _drop(path)
 
 
 def read_buckets(
@@ -223,11 +247,17 @@ def _check_layout(index_path: str, pk: str, num_buckets: int) -> None:
 def init_bucketed_index(
     df: DataFrame, index_path: str, pk: str, num_buckets: int = DEFAULT_NUM_BUCKETS
 ) -> None:
-    """Bootstrap the bucketed layout from a full snapshot: one shuffle
-    on the bucket id, one file per bucket directory."""
-    out = df.withColumn(BUCKET_COL, bucket_expr(pk, num_buckets))
-    _write_buckets(out, index_path, num_buckets)
-    _write_meta(index_path, pk, num_buckets)
+    """Write ``df`` as the whole layout at ``index_path``: one shuffle on
+    the bucket id, one file per bucket directory, staged with
+    ``_meta.json`` inside, then :func:`_swap_in`. No rows, no index."""
+    tag = uuid.uuid4().hex[:8]
+    staging = f"{index_path}_stg-{tag}"
+    _write_buckets(
+        df.withColumn(BUCKET_COL, bucket_expr(pk, num_buckets)), staging, num_buckets
+    )
+    _write_meta(staging, pk, num_buckets)
+    _drop_if_empty(staging)
+    _swap_in(staging, index_path, f"{index_path}_old-{tag}")
 
 
 def rebucket_index(
@@ -238,36 +268,21 @@ def rebucket_index(
     more of them).
 
     Deliberately O(index) — one full shuffle on the new bucket id into a
-    staged directory, then a directory-level swap (reader sees old
-    layout or new layout, never a mix; same staging protocol as the
-    per-batch apply). This is the offline maintenance operation; the
+    staged directory, then the whole-directory park/move-in step of
+    :func:`init_bucketed_index` (readers see the old layout or the new
+    one, never a mix). This is the offline maintenance operation; the
     per-batch path stays O(batch). At 100 TB this is a planned job, not
     something a micro-batch ever triggers implicitly — hence the loud
     ValueError on mismatch instead of auto-rebucketing.
 
-    Crash safety: the new layout is staged under ``_stg-<tag>`` and the
-    live one parked under ``_prev-<tag>`` — both outside the namespace
-    a concurrent-crash sweep deletes — so a crash at ANY point leaves
-    either the old layout live, or the old layout parked where the next
-    :func:`_sweep_stale` rolls it back. The previous two-rename dance
-    staged under ``_tmp-``/``_old-``, which the sweep itself reaps: a
-    crash between the renames lost the entire index."""
+    Crash recovery is the module's one contract: a parked directory
+    whose live path is absent is restored; every other leftover is
+    reaped (the closing sweep reaps a compacted index's old version)."""
+    _sweep_stale(index_path)
     if not os.path.isdir(index_path):
         raise FileNotFoundError(f"no index at {index_path}")
+    init_bucketed_index(read_buckets(spark, index_path), index_path, pk, new_num_buckets)
     _sweep_stale(index_path)
-    df = read_buckets(spark, index_path)
-    tag = uuid.uuid4().hex[:8]
-    staging = f"{index_path}_stg-{tag}"
-    _write_buckets(
-        df.withColumn(BUCKET_COL, bucket_expr(pk, new_num_buckets)),
-        staging,
-        new_num_buckets,
-    )
-    _write_meta(staging, pk, new_num_buckets)
-    prev = f"{index_path}_prev-{tag}"
-    os.rename(index_path, prev)
-    os.rename(staging, index_path)
-    shutil.rmtree(prev, ignore_errors=True)
 
 
 def apply_changes_bucketed(
@@ -298,21 +313,22 @@ def apply_changes_bucketed(
     # localCheckpoint: the batch is read twice (bucket list + merge) and
     # must not recompute from the stream source
     changes = changes.localCheckpoint(eager=True, storageLevel=_SER)
+    touched = sorted(
+        r[BUCKET_COL] for r in changes.select(BUCKET_COL).distinct().collect()
+    )
+    if not any(os.path.isdir(os.path.join(index_path, f"{BUCKET_COL}={b}")) for b in touched):
+        # also the state a delete-everything batch leaves when it
+        # crashes before its own _drop_if_empty: meta, no bucket
+        _drop_if_empty(index_path)
 
     if not os.path.exists(index_path):
         cols = change_payload if payload_cols is None else payload_cols
         base = spark.createDataFrame([], changes.select(pk, *cols).schema)
         first = apply_changes(base, changes.drop(BUCKET_COL), pk=pk, payload_cols=cols)
         init_bucketed_index(first, index_path, pk, num_buckets)
-        _drop_if_empty(index_path)
-        return sorted(
-            r[BUCKET_COL] for r in changes.select(BUCKET_COL).distinct().collect()
-        )
+        return touched
 
     _check_layout(index_path, pk, num_buckets)
-    touched = sorted(
-        r[BUCKET_COL] for r in changes.select(BUCKET_COL).distinct().collect()
-    )
     if not touched:
         return []
 
@@ -326,21 +342,19 @@ def apply_changes_bucketed(
         base, changes.drop(BUCKET_COL), pk=pk, payload_cols=payload_cols
     ).withColumn(BUCKET_COL, bucket_expr(pk, num_buckets))
 
-    # stage only the touched buckets, then swap each directory atomically
+    # stage only the touched buckets, then swap each directory in; a
+    # bucket whose rows were all deleted has no staged directory and
+    # simply disappears
     tag = uuid.uuid4().hex[:8]
-    staging = f"{index_path}_tmp-{tag}"
+    staging = f"{index_path}_stg-{tag}"
     _write_buckets(merged, staging, len(touched))
     for b in touched:
-        src = os.path.join(staging, f"{BUCKET_COL}={b}")
-        dst = os.path.join(index_path, f"{BUCKET_COL}={b}")
-        old = f"{index_path}_old-{tag}-{b}"
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        # a bucket whose rows were all deleted simply disappears
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
+        _swap_in(
+            os.path.join(staging, f"{BUCKET_COL}={b}"),
+            os.path.join(index_path, f"{BUCKET_COL}={b}"),
+            f"{index_path}_old-{tag}-{b}",
+        )
+    _drop(staging)
     _drop_if_empty(index_path)
     return touched
 
@@ -351,8 +365,9 @@ def _drop_if_empty(index_path: str) -> None:
     so a leftover marker-only directory would be unreadable). Absent
     path == empty index — the same contract as the reference's
     missing-index-is-count-0 (meilisync/meili.py:77-84); the next batch
-    simply bootstraps again."""
+    simply bootstraps again. A compacted index is a symlink: it is
+    unlinked, and the sweep reaps the version directory."""
     if os.path.isdir(index_path) and not any(
         e.startswith(f"{BUCKET_COL}=") for e in os.listdir(index_path)
     ):
-        shutil.rmtree(index_path, ignore_errors=True)
+        _drop(index_path)

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from meilisync_spark.operators.refresh import _cache_once, write_version
 from meilisync_spark.pin import SER as _SER
 from meilisync_spark.operators.pq import (
     N_QUERIES,
@@ -645,7 +646,7 @@ def ivfpq_persisted_recall(spark, emb: DataFrame, k: int = 5,
                 b = ivfpq_persist_index(ce, p)
                 np.save(os.path.join(p, PQ_BOOKS_FILE), b)
 
-            _cache_once(cache_dir, _build, done_file=PQ_BOOKS_FILE)
+            _cache_once(cache_dir, _build, PQ_BOOKS_FILE)
             books = np.load(os.path.join(cache_dir, PQ_BOOKS_FILE))
             topk = ivfpq_persisted_topk(spark, ce, cache_dir, k, books=books)
         else:
@@ -964,6 +965,7 @@ def add_to_index(spark, index_path: str, emb: DataFrame, *, dedup: bool = True) 
     agg = emb.groupBy("vec_id").agg(
         F.min("embedding").alias("embedding"),
         F.max("embedding").alias("_mx"),
+        (F.count(F.lit(1)) - F.count("embedding")).alias("_nnull"),
     )
     conflict = F.col("embedding") != F.col("_mx")
     okdim = F.size("embedding") == expect_dim
@@ -971,6 +973,7 @@ def add_to_index(spark, index_path: str, emb: DataFrame, *, dedup: bool = True) 
     valid = (
         agg.observe(
             obs_val,
+            F.sum("_nnull").alias("n_null"),  # else dropped unseen: size(NULL) = -1
             F.sum(F.when(conflict, 1).otherwise(0)).alias("n_conflict"),
             F.slice(
                 F.sort_array(F.collect_set(F.when(conflict, F.col("vec_id")))),
@@ -1000,6 +1003,8 @@ def add_to_index(spark, index_path: str, emb: DataFrame, *, dedup: bool = True) 
         .localCheckpoint(True, storageLevel=_SER)
     )
     got_val = obs_val.get
+    if int(got_val["n_null"] or 0):
+        raise ValueError(f"{int(got_val['n_null'])} new vectors have a NULL embedding")
     if int(got_val["n_conflict"] or 0):
         raise ValueError(
             f"vec_ids {[int(v) for v in got_val['conflict_ids']]} appear "
@@ -1109,8 +1114,8 @@ def read_index_vectors(spark, index_path: str) -> DataFrame:
 def rebuild_index(emb: DataFrame, index_path: str, *, kcells: int | None = None) -> None:
     """Retrain both quantizers on ``emb`` and atomically swap the
     served index to the fresh build — the drift answer for the
-    add-after-train lifecycle. Same pattern as
-    :func:`meilisync_spark.operators.refresh.refresh_data` (reference:
+    add-after-train lifecycle. The swap is
+    :func:`meilisync_spark.operators.refresh.write_version` (reference:
     the shadow-index swap, meilisync/meili.py:34-71): train into a
     versioned directory, repoint the ``index_path`` symlink via a
     single atomic rename — readers (and concurrent
@@ -1118,28 +1123,7 @@ def rebuild_index(emb: DataFrame, index_path: str, *, kcells: int | None = None)
     resolve old-or-new, never a half-written index. A legacy
     real-directory index migrates to the symlink layout on its first
     rebuild."""
-    import os
-    import shutil
-    import uuid
-
-    from meilisync_spark.operators.refresh import _sweep_stale
-
-    tag = uuid.uuid4().hex[:8]
-    version = f"{index_path.rstrip('/')}_v-{tag}"
-    prev = os.path.realpath(index_path) if os.path.islink(index_path) else None
-    _sweep_stale(index_path, keep={prev} if prev else set())
-    save_index(emb, version, kcells=kcells)
-    if os.path.islink(index_path) or not os.path.exists(index_path):
-        staged = f"{index_path.rstrip('/')}_lnk-{tag}"
-        os.symlink(version, staged)
-        os.rename(staged, index_path)
-    else:
-        old = f"{index_path.rstrip('/')}_old-{tag}"
-        os.rename(index_path, old)
-        os.symlink(version, index_path)
-        shutil.rmtree(old, ignore_errors=True)
-    if prev and os.path.realpath(index_path) != prev:
-        shutil.rmtree(prev, ignore_errors=True)
+    write_version(index_path, lambda version: save_index(emb, version, kcells=kcells))
 
 
 def retrain_due(spark, index_path: str, *, max_growth: float = 0.5) -> bool:
@@ -1216,43 +1200,11 @@ def ivfpq_incremental_recall(spark, emb: DataFrame, k: int = 5,
     return out
 
 
-def _cache_once(cache_dir: str, build_fn, done_file: str = ANN_META_FILE) -> None:
-    """Run ``build_fn(path)`` into ``cache_dir`` exactly once: train
-    into a private tmp sibling, then atomically rename into place —
-    concurrent builders race safely (one rename wins, losers discard
-    their copy), and a partially-written dir can never be mistaken for
-    a finished artifact (``done_file`` is the completeness witness,
-    written by ``build_fn`` as its last step or by ``save_index``)."""
-    import os
-    import shutil
-    import tempfile
-
-    if os.path.exists(os.path.join(cache_dir, done_file)):
-        return
-    parent = os.path.dirname(cache_dir) or "."
-    tmp = tempfile.mkdtemp(prefix=os.path.basename(cache_dir) + ".tmp.", dir=parent)
-    try:
-        built = os.path.join(tmp, "built")
-        build_fn(built)
-        try:
-            os.rename(built, cache_dir)
-        except OSError:
-            # a concurrent builder winning the rename is the only
-            # benign cause — verify a finished artifact actually exists
-            # before swallowing; an unrelated failure (permissions,
-            # EXDEV) would otherwise surface later as a confusing
-            # missing-path error inside query_index
-            if not os.path.exists(os.path.join(cache_dir, done_file)):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def _build_served_cache(ce: DataFrame, cache_dir: str, *,
                         kcells: int | None = None) -> None:
     """Build :func:`save_index` output at ``cache_dir`` exactly once
     (atomic tmp-sibling rename — see :func:`_cache_once`)."""
-    _cache_once(cache_dir, lambda p: save_index(ce, p, kcells=kcells))
+    _cache_once(cache_dir, lambda p: save_index(ce, p, kcells=kcells), ANN_META_FILE)
 
 
 def ann_query_served(spark, emb: DataFrame, cache_dir: str, k: int = 5) -> DataFrame:

@@ -7,21 +7,21 @@ shadow index, ``swap_indexes``, drop tmp.
 
 Spark realization: write the full snapshot to a *versioned* directory
 (``{index}_v-<tag>``), then atomically repoint the ``index`` symlink at
-it (symlink replacement via ``rename`` is a single atomic syscall on
-POSIX). Readers resolve the symlink at open time and see exactly one
-complete version — old or new, never half, never "no index" (the
-two-rename dance this replaces had a gap where the path didn't exist,
-and a crash between renames stranded the index under a random suffix).
-The previous version directory is removed after the repoint: a reader
-that resolved the symlink *before* the swap and is still mid-scan can
-lose files — the single-writer/short-scan contract of a plain-parquet
-sink; a production deployment uses a table format
-(``CREATE OR REPLACE TABLE`` — snapshot-isolated) where this whole
-module is one SQL statement. Stale ``_v-*``/``_tmp-*``/``_old-*``
-leftovers from a crashed writer are swept on the next refresh.
+it (a symlink staged under ``{index}_lnk-<tag>`` renamed over the old
+one: a single atomic syscall on POSIX). Readers resolve the symlink at
+open time and see exactly one complete version — old or new, never
+half, never "no index". The previous version directory is removed
+after the repoint: a reader that resolved the symlink *before* the swap
+and is still mid-scan can lose files — the single-writer/short-scan
+contract of a plain-parquet sink; a production deployment uses a table
+format (``CREATE OR REPLACE TABLE`` — snapshot-isolated) where this
+whole module is one SQL statement.
 
-On a real deployment with a table format this is ``CREATE OR REPLACE
-TABLE`` / ``INSERT OVERWRITE`` (snapshot-isolated swap).
+Crash recovery is operators/bucketed.py's one contract, applied by the
+same sweep before every write: a parked directory whose live path is
+absent is restored; every other leftover is reaped. A legacy
+real-directory index migrates to the symlink layout through the same
+park/move-in step.
 
 Scale notes: the bulk write is a plain partitioned parquet write — no
 shuffle unless the caller asks to repartition by the pk bucket (do, for
@@ -32,34 +32,34 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from meilisync_spark.operators.bucketed import _swap_in, _sweep_stale
 
-def _sweep_stale(index_path: str, keep: set[str]) -> None:
-    """Remove version/staging leftovers from crashed earlier writers —
-    everything matching this index's suffix convention except ``keep``
-    (single-writer contract; the reference's start loop is likewise one
-    process per config)."""
-    parent, name = os.path.split(index_path.rstrip("/"))
-    if not os.path.isdir(parent or "."):
-        return
-    for entry in os.listdir(parent or "."):
-        full = os.path.join(parent, entry)
-        if os.path.realpath(full) in keep:
-            continue
-        if (
-            entry.startswith(f"{name}_v-")
-            or entry.startswith(f"{name}_tmp-")
-            or entry.startswith(f"{name}_old-")
-            or entry.startswith(f"{name}_lnk-")
-        ):
-            if os.path.islink(full):
-                os.unlink(full)
-            else:
-                shutil.rmtree(full, ignore_errors=True)
+
+def write_version(index_path: str, write: Callable[[str], None]) -> str:
+    """The one repoint (also ``ivfpq.rebuild_index``'s): sweep,
+    ``write(version)`` a fresh ``{index}_v-<tag>``, point the index
+    symlink at it, drop the superseded version (≡ drop tmp,
+    meili.py:69). Returns the version path."""
+    index_path = index_path.rstrip("/")
+    _sweep_stale(index_path)
+    tag = uuid.uuid4().hex[:8]
+    version = f"{index_path}_v-{tag}"  # ≡ "{index}_tmp" (meili.py:37)
+    write(version)
+    staged = f"{index_path}_lnk-{tag}"
+    os.symlink(os.path.basename(version), staged)  # a sibling: resolves from any cwd
+    if os.path.islink(index_path):
+        prev = os.path.realpath(index_path)
+        os.rename(staged, index_path)
+        shutil.rmtree(prev, ignore_errors=True)
+    else:
+        _swap_in(staged, index_path, f"{index_path}_old-{tag}")
+    return version
 
 
 def refresh_data(
@@ -67,44 +67,45 @@ def refresh_data(
     index_path: str,
     bucket_by: str | None = None,
     num_buckets: int | None = None,
-    partition_by: Sequence[str] | None = None,
 ) -> int:
     """Rebuild the index table at ``index_path`` from ``df`` via a
     versioned write + atomic symlink repoint. Returns the number of
     rows loaded (the reference returns the inserted count,
-    meilisync/meili.py:71). ``partition_by`` writes the version with a
-    hive partition layout (used by :func:`compact_table` to preserve
-    the ``hb=``/``bucket=`` directory schemes the streaming appliers
-    prune on)."""
-    tag = uuid.uuid4().hex[:8]
-    version = f"{index_path}_v-{tag}"  # ≡ "{index}_tmp" (meili.py:37)
-    prev_target = os.path.realpath(index_path) if os.path.islink(index_path) else None
-    _sweep_stale(index_path, keep={prev_target} if prev_target else set())
+    meilisync/meili.py:71)."""
     if bucket_by and num_buckets:
         df = df.repartition(num_buckets, bucket_by)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(version)
+    version = write_version(index_path, df.write.mode("overwrite").parquet)
     # count from the written files so the returned number is what
     # readers will actually see
-    n = df.sparkSession.read.parquet(version).count()
-    if os.path.islink(index_path) or not os.path.exists(index_path):
-        # normal path: stage a symlink, rename over the old one — a
-        # single atomic syscall; readers see old-or-new, never neither
-        staged = f"{index_path}_lnk-{tag}"
-        os.symlink(version, staged)
-        os.rename(staged, index_path)
-    else:
-        # legacy real-directory layout: migrate to the symlink layout
-        # (one non-atomic swap, then every later refresh is atomic)
-        old = f"{index_path}_old-{tag}"
-        os.rename(index_path, old)
-        os.symlink(version, index_path)
-        shutil.rmtree(old, ignore_errors=True)
-    if prev_target and os.path.realpath(index_path) != prev_target:
-        shutil.rmtree(prev_target, ignore_errors=True)  # ≡ drop tmp (meili.py:69)
-    return n
+    return df.sparkSession.read.parquet(version).count()
+
+
+def _cache_once(cache_dir: str, build_fn: Callable[[str], None], done_file: str) -> None:
+    """Run ``build_fn(path)`` into ``cache_dir`` exactly once: build
+    into a private tmp sibling, then atomically rename into place —
+    concurrent builders race safely (one rename wins, losers discard
+    their copy), and a partially-written dir can never be mistaken for
+    a finished artifact (``done_file`` is the completeness witness,
+    written by ``build_fn`` as its last step; ANN caches, ivfpq.py)."""
+    if os.path.exists(os.path.join(cache_dir, done_file)):
+        return
+    parent = os.path.dirname(cache_dir) or "."
+    tmp = tempfile.mkdtemp(prefix=os.path.basename(cache_dir) + ".tmp.", dir=parent)
+    try:
+        built = os.path.join(tmp, "built")
+        build_fn(built)
+        try:
+            os.rename(built, cache_dir)
+        except OSError:
+            # a concurrent builder winning the rename is the only
+            # benign cause — verify a finished artifact actually exists
+            # before swallowing; an unrelated failure (permissions,
+            # EXDEV) would otherwise surface later as a confusing
+            # missing-path error inside query_index
+            if not os.path.exists(os.path.join(cache_dir, done_file)):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def read_index(spark: SparkSession, index_path: str) -> DataFrame:
@@ -176,24 +177,19 @@ def compact_table(
         if f.endswith(".parquet")
     )
     n_files = max(1, -(-total // target_file_bytes))
-    # sidecar metadata rides along with the rewrite: the bucket layout
+    # sidecar metadata rides along with the rewrite, inside the version
+    # so the repoint publishes it with the data: the bucket layout
     # record (_meta.json) AND the ANN index's quantizer halves
     # (_ann_meta.json — losing it would leave the compacted code
     # partitions unservable: no codebooks, no centroid routing)
-    sidecars: dict[str, str] = {}
-    for name in ("_meta.json", "_ann_meta.json"):
-        p = os.path.join(real, name)
-        if os.path.isfile(p):
-            with open(p) as fh:
-                sidecars[name] = fh.read()
-    if pcols:
-        refresh_data(
-            df.repartition(n_files, *pcols), index_path, partition_by=pcols
-        )
-    else:
-        refresh_data(df.coalesce(n_files), index_path)
-    real = os.path.realpath(index_path)
-    for name, body in sidecars.items():
-        with open(os.path.join(real, name), "w") as fh:
-            fh.write(body)
+    sidecars = [n for n in ("_meta.json", "_ann_meta.json") if os.path.isfile(os.path.join(real, n))]
+    out = df.repartition(n_files, *pcols) if pcols else df.coalesce(n_files)
+
+    def write(version: str) -> None:
+        writer = out.write.mode("overwrite")
+        (writer.partitionBy(*pcols) if pcols else writer).parquet(version)
+        for name in sidecars:
+            shutil.copy(os.path.join(real, name), version)
+
+    real = write_version(index_path, write)
     return sum(f.endswith(".parquet") for _, _, fs in os.walk(real) for f in fs)

@@ -9,7 +9,7 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from meilisync_spark.session import get_spark
 from meilisync_spark.sources.parquet import TABLES, table_path

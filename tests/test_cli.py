@@ -919,3 +919,87 @@ def test_cli_check_never_materialized_index_counts_zero(spark, tmp_path, capsys)
     rc = main(["check", "--config", str(cfg), "--sources", str(sources)])
     assert rc == 0
     assert "users: source=0 index=0 consistent" in capsys.readouterr().out
+
+
+def test_cli_start_killed_mid_batch_resumes_to_oracle(spark, tmp_path):
+    """A real SIGKILL of a `start` process while its second micro-batch
+    is applied, then a re-run of `start` on the same checkpoint: the
+    index equals the DuckDB oracle (last change per key) over the whole
+    wal2json log. The --plugin hook marks batch 2; the kill takes the
+    process group, so Spark's JVM dies with it."""
+    import random
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    import duckdb
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    rng = random.Random(7)
+    live, changes, lsn = set(), [], 0
+    for f in range(4):
+        msgs = []
+        for _ in range(3):
+            rows = []
+            for _ in range(50):
+                pk = min(int(rng.paretovariate(1.2)), 100)
+                op = rng.choice(["update", "update", "delete"]) if pk in live else "insert"
+                v = round(rng.random() * 100, 2)
+                live.symmetric_difference_update({pk} if op != "update" else set())
+                changes.append((len(changes), pk, op, v))
+                if op == "delete":
+                    rows.append({"kind": "delete", "schema": "public", "table": "users",
+                                 "oldkeys": {"keynames": ["id"], "keytypes": ["bigint"],
+                                             "keyvalues": [pk]}})
+                else:
+                    rows.append({"kind": op, "schema": "public", "table": "users",
+                                 "columnnames": ["id", "v"],
+                                 "columntypes": ["bigint", "double precision"],
+                                 "columnvalues": [pk, v]})
+            lsn += 16
+            msgs.append({"change": rows, "nextlsn": f"0/{lsn:X}",
+                         "timestamp": "2023-11-14 22:13:20+00"})
+        path = drop / f"wal-{f}.jsonl"
+        path.write_text("\n".join(json.dumps(m) for m in msgs) + "\n")
+        os.utime(path, (1_700_000_000 + 2 * f, 1_700_000_000 + 2 * f))
+
+    index, ckpt = str(tmp_path / "index"), tmp_path / "ckpt"
+    args = [
+        "start", "--events", str(drop), "--index", index,
+        "--checkpoint", str(ckpt), "--max-files", "1",
+        "--source-format", "text", "--envelope", "wal2json",
+        "--payload-schema", "id long, v double",
+    ]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    with open(tmp_path / "start.log", "w") as log:
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "meilisync_spark.cli", *args,
+             "--plugin", "tests.plugin_hooks.mark_second_batch"],
+            cwd=tmp_path, env=env, stdout=log, stderr=subprocess.STDOUT,
+            start_new_session=True,
+        )
+        try:
+            deadline = time.monotonic() + 300
+            while not (tmp_path / "batch2.marker").exists():
+                assert proc.poll() is None, (tmp_path / "start.log").read_text()[-3000:]
+                assert time.monotonic() < deadline, "batch 2 never started"
+                time.sleep(0.05)
+        finally:
+            os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait()
+    assert len([c for c in os.listdir(ckpt / "commits") if c.isdigit()]) < 4
+
+    assert main(args) == 0
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ch (ord INT, pk BIGINT, op VARCHAR, v DOUBLE)")
+    con.executemany("INSERT INTO ch VALUES (?, ?, ?, ?)", changes)
+    oracle = set(con.sql(
+        "SELECT pk, v FROM (SELECT *, row_number() OVER "
+        "(PARTITION BY pk ORDER BY ord DESC) AS rn FROM ch) "
+        "WHERE rn = 1 AND op <> 'delete'"
+    ).fetchall())
+    assert oracle
+    assert {(r.pk, r.v) for r in spark.read.parquet(index).select("pk", "v").collect()} == oracle

@@ -306,6 +306,38 @@ def test_add_to_index_dim_mismatch_fails(spark, tmp_path):
     )
 
 
+def test_add_to_index_null_embedding_raises(spark, tmp_path):
+    """A NULL embedding is neither a conflict nor a wrong dim in SQL's
+    three-valued logic (size(NULL) = -1), yet the add guard filters it
+    out: the batch must raise before anything is written instead of
+    dropping the row silently."""
+    import os
+
+    import pytest
+
+    from meilisync_spark.operators.ivfpq import add_to_index, save_index
+    from meilisync_spark.operators.similarity import clustered_embeddings
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    index = str(tmp_path / "ann")
+    save_index(clustered_embeddings(emb).localCheckpoint(False), index)
+
+    def files():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), index), os.path.getsize(os.path.join(d, f)))
+            for d, _, fs in os.walk(index) for f in fs
+        )
+
+    before = files()
+    batch = spark.createDataFrame(
+        [(888_001, [0.0625] * 64), (888_002, None)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="NULL embedding"):
+        add_to_index(spark, index, batch)
+    assert files() == before
+
+
 def test_streaming_ann_ingest_drop_dir(spark, tmp_path):
     """run_ann_ingest tails a vector drop dir: two batch files of
     held-out twin vectors fold into the served index (one micro-batch

@@ -147,3 +147,106 @@ def test_compact_table_preserves_bucketed_cdc_layout(spark, tmp_path):
     got = {(r.pk, r.val) for r in spark.read.parquet(index).drop("bucket").collect()}
     expected = (before - {(0, "v0")}) | {(0, "v0-new"), (999, "fresh")}
     assert got == expected
+
+
+def test_compacted_bucketed_index_survives_deleting_every_row(spark, tmp_path):
+    """After compact_table the bucketed index is a symlink. A batch that
+    deletes every row must leave an absent index (unlink the link; the
+    sweep reaps its version dir), not a link to a marker-only directory
+    that the next batch cannot read (UNABLE_TO_INFER_SCHEMA)."""
+    from meilisync_spark.operators.bucketed import (
+        apply_changes_bucketed,
+        init_bucketed_index,
+        read_buckets,
+    )
+    from meilisync_spark.operators.refresh import compact_table
+
+    index = str(tmp_path / "idx")
+    schema = "pk int, seq long, op string, val string"
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "pk int, val string")
+    init_bucketed_index(base, index, pk="pk", num_buckets=4)
+    compact_table(spark, index, target_file_bytes=1 << 30)
+    assert os.path.islink(index)
+    deletes = spark.createDataFrame([(i, 100 + i, "delete", None) for i in range(20)], schema)
+    apply_changes_bucketed(spark, index, deletes, pk="pk", num_buckets=4)
+    assert not os.path.lexists(index)  # absent path == empty index
+    create = spark.createDataFrame([(7, 200, "create", "back")], schema)
+    apply_changes_bucketed(spark, index, create, pk="pk", num_buckets=4)
+    assert {(r.pk, r.val) for r in read_buckets(spark, index).collect()} == {(7, "back")}
+    assert os.listdir(tmp_path) == ["idx"]  # the orphaned version dir is reaped
+
+
+def test_rebucket_compacted_index_leaves_no_orphans(spark, tmp_path):
+    """rebucket_index over a compacted (symlinked) index parks the link,
+    not a directory: afterwards the index is a real directory with the
+    new layout, and neither the parked link nor the version directory
+    it pointed at is left beside it."""
+    from meilisync_spark.operators.bucketed import (
+        init_bucketed_index,
+        read_buckets,
+        read_meta,
+        rebucket_index,
+    )
+    from meilisync_spark.operators.refresh import compact_table
+
+    index = str(tmp_path / "idx")
+    rows = {(i, f"v{i}") for i in range(50)}
+    init_bucketed_index(
+        spark.createDataFrame(sorted(rows), "pk int, val string"), index, pk="pk", num_buckets=4
+    )
+    compact_table(spark, index, target_file_bytes=1 << 30)
+    assert os.path.islink(index)
+    rebucket_index(spark, index, pk="pk", new_num_buckets=8)
+    assert not os.path.islink(index)
+    assert read_meta(index) == {"num_buckets": 8, "pk": "pk"}
+    assert {(r.pk, r.val) for r in read_buckets(spark, index).collect()} == rows
+    assert os.listdir(tmp_path) == ["idx"]
+
+
+def test_compact_crash_after_repoint_keeps_layout_meta(spark, tmp_path, monkeypatch):
+    """compact_table publishes the layout record with the data: a crash
+    just after the symlink repoint leaves a bucketed index that still
+    has its _meta.json, so the next batch keeps the bucketed path
+    instead of reading the hive layout as a flat index."""
+    import pytest
+
+    from meilisync_spark.operators.bucketed import init_bucketed_index, read_meta
+    from meilisync_spark.operators.refresh import compact_table
+
+    index = str(tmp_path / "idx")
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(40)], "pk int, val string")
+    init_bucketed_index(base, index, pk="pk", num_buckets=8)
+    compact_table(spark, index, target_file_bytes=1 << 30)
+    real_rename = os.rename
+
+    def rename(src, dst):
+        real_rename(src, dst)
+        if dst == index:
+            raise OSError("crash just after the repoint")
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="after the repoint"):
+        compact_table(spark, index, target_file_bytes=1 << 30)
+    monkeypatch.undo()
+    assert read_meta(index) == {"num_buckets": 8, "pk": "pk"}
+
+
+def test_version_symlink_resolves_from_a_relative_index_path(tmp_path, monkeypatch):
+    """The index symlink names its version as a sibling, so an index
+    given as a relative path (``refresh --index sub/index``) resolves
+    instead of dangling (the link's target is read relative to the
+    link's own directory, not the cwd)."""
+    from meilisync_spark.operators.refresh import write_version
+
+    monkeypatch.chdir(tmp_path)
+    os.makedirs("sub")
+    for body in ("v1", "v2"):
+        def write(version, body=body):
+            os.makedirs(version)
+            with open(os.path.join(version, "data"), "w") as fh:
+                fh.write(body)
+
+        write_version("sub/index", write)
+        with open("sub/index/data") as fh:
+            assert fh.read() == body
+    assert len(os.listdir("sub")) == 2  # the link and its one live version

@@ -513,9 +513,9 @@ def test_rebucket_and_layout_guard(spark, tmp_path):
 
 def test_rebucket_crash_window_rolls_back_not_bootstraps(spark, tmp_path):
     """A crash between rebucket's park-old and move-in-new renames must
-    NOT lose the index: the parked _prev-* copy is restored by the next
-    batch's sweep (the old protocol parked under _old-*, which the sweep
-    itself deleted — total silent index loss + fresh bootstrap)."""
+    NOT lose the index: the parked _old-* copy is restored by the next
+    batch's sweep instead of the absent path reading as empty (total
+    silent index loss + fresh bootstrap)."""
     import shutil
 
     index = str(tmp_path / "index")
@@ -528,7 +528,7 @@ def test_rebucket_crash_window_rolls_back_not_bootstraps(spark, tmp_path):
 
     # reconstruct the mid-swap crash state: old layout parked, index
     # path absent, staging half-written
-    os.rename(index, index + "_prev-deadbeef")
+    os.rename(index, index + "_old-deadbeef")
     os.makedirs(index + "_stg-deadbeef/bucket=0")
 
     delta = spark.createDataFrame(
@@ -538,15 +538,15 @@ def test_rebucket_crash_window_rolls_back_not_bootstraps(spark, tmp_path):
     got = {r.pk: r.value for r in read_buckets(spark, index).collect()}
     assert got == {**before, 1: 99.0}  # rolled back, then merged — nothing lost
     leftovers = [
-        e for e in os.listdir(tmp_path) if "_prev-" in e or "_stg-" in e
+        e for e in os.listdir(tmp_path) if "_old-" in e or "_stg-" in e
     ]
     assert leftovers == []
 
-    # crash AFTER the swap completed: live index + stale _prev copy →
+    # crash AFTER the swap completed: live index + stale _old copy →
     # the sweep drops the stale copy and leaves the live index alone
-    shutil.copytree(index, index + "_prev-cafecafe")
+    shutil.copytree(index, index + "_old-cafecafe")
     apply_changes_bucketed(spark, index, delta, pk="pk", num_buckets=4)
-    assert not os.path.exists(index + "_prev-cafecafe")
+    assert not os.path.exists(index + "_old-cafecafe")
     assert {r.pk: r.value for r in read_buckets(spark, index).collect()} == {
         **before, 1: 99.0
     }
@@ -1009,3 +1009,245 @@ def test_single_file_flat_index_stays_flat(spark, tmp_path):
     )
     assert read_meta(idx) is None  # stayed flat
     assert spark.read.parquet(idx).count() > 1  # merged, not dropped
+
+
+class _Crash(Exception):
+    """An injected crash: the process 'dies' at this point."""
+
+
+def _crash_fs(m, op, pick, nth, crash, after=False):
+    """Make the ``nth`` call of ``os.<op>`` whose (src, dst) satisfies
+    ``pick`` crash: instead of the call, or just after it (``after``)."""
+    real = getattr(os, op)
+    hits = []
+
+    def call(src, dst, *args, **kwargs):
+        hit = pick(str(src), str(dst)) and len(hits) < nth
+        if hit:
+            hits.append(dst)
+        if hit and len(hits) == nth and not after:
+            crash(f"os.{op} -> {dst}")
+        out = real(src, dst, *args, **kwargs)
+        if hit and len(hits) == nth:
+            crash(f"after os.{op} -> {dst}")
+        return out
+
+    m.setattr(os, op, call)
+
+
+def _bucket_park(src, dst):  # index/bucket=K -> {index}_old-<tag>-K
+    return os.path.basename(src).startswith("bucket=") and "_old-" in dst
+
+
+def _bucket_move_in(src, dst):  # staging/bucket=K -> index/bucket=K
+    return (os.path.basename(src).startswith("bucket=")
+            and os.path.basename(dst).startswith("bucket="))
+
+
+def _arm(m, point, index, crash):
+    """Install the crash named ``point`` (see the parametrize below)."""
+    from meilisync_spark.operators import bucketed
+    from meilisync_spark.progress import FileProgress
+
+    if point.startswith("bucket_"):
+        pick = _bucket_park if "_park_" in point else _bucket_move_in
+        _crash_fs(m, "rename", pick, 1 if point.endswith("first") else 3, crash)
+    elif point.startswith("bootstrap_"):
+        real_meta = bucketed._write_meta
+
+        def write_meta(path, pk, n):
+            if point == "bootstrap_after_meta":
+                real_meta(path, pk, n)
+            crash("_write_meta")
+
+        m.setattr(bucketed, "_write_meta", write_meta)
+    elif point.endswith("progress_set"):
+        real_set = FileProgress.set
+        calls = []
+
+        def set_(self, **heads):
+            calls.append(heads)
+            if len(calls) == 2 and point == "before_progress_set":
+                crash("progress.set")
+            real_set(self, **heads)
+            if len(calls) == 2:
+                crash("after progress.set")
+
+        m.setattr(FileProgress, "set", set_)
+    elif point == "rebucket_park":
+        _crash_fs(m, "rename", lambda src, dst: src == index, 1, crash, after=True)
+    else:  # refresh_legacy_move_in: whatever moves into the parked-away path
+        def into_absent(src, dst):
+            return dst == index and not os.path.lexists(index)
+
+        for op in ("rename", "symlink"):
+            _crash_fs(m, op, into_absent, 1, crash)
+
+
+def _crash_flow(spark, root, parts, point, crash_at=None):
+    """Run the flow of crash point ``point`` over the 3-file log
+    ``parts``; with ``crash_at`` set, the step under test crashes there
+    and is re-run. Returns (layout meta, index rows, leftover kinds
+    beside the index, progress store, crashes fired)."""
+    import shutil
+
+    from meilisync_spark.operators.bucketed import read_meta, rebucket_index
+    from meilisync_spark.progress import FileProgress
+
+    drops = root / "drops"
+    drops.mkdir(parents=True)
+    index = str(root / "idx" / "index")
+    os.makedirs(os.path.dirname(index))
+    store = FileProgress(str(root / "progress.json"))
+    flat = point == "refresh_legacy_move_in"
+    fired = []
+
+    def drop(*ids):
+        for i in ids:
+            path = drops / f"part-{i}.parquet"
+            shutil.copy(parts[i], path)
+            os.utime(path, (1_700_000_000 + 2 * i, 1_700_000_000 + 2 * i))
+
+    def stream():
+        run_cdc_pipeline(
+            spark, str(drops), Settings.for_index(index), str(root / "ckpt"),
+            available_now=True, max_files_per_trigger=1, progress=store,
+            num_buckets=0 if flat else None,
+        )
+
+    def crash(what):
+        fired.append(what)
+        raise _Crash(what)
+
+    def step_under_test(step):
+        with pytest.MonkeyPatch.context() as m:
+            if crash_at:
+                _arm(m, crash_at, index, crash)
+            try:
+                step()
+            except Exception:
+                if not fired:
+                    raise
+        if fired:
+            step()  # restart: the same batch (or rebucket) again
+
+    if point == "rebucket_park":
+        drop(0, 1)
+        stream()
+        step_under_test(lambda: rebucket_index(spark, index, "pk", 16))
+        drop(2)
+        stream()
+    elif flat:
+        drop(0)
+        stream()
+        # a legacy flat index: a real directory, not a version symlink
+        target = os.path.realpath(index)
+        os.unlink(index)
+        os.rename(target, index)
+        drop(1, 2)
+        step_under_test(stream)
+    else:
+        drop(0, 1, 2)
+        step_under_test(stream)
+    rows = {
+        r.pk: (r.value, r.k)
+        for r in spark.read.parquet(index).select("pk", "value", "k").collect()
+    }
+    kinds = sorted({e[len("index"):].split("-")[0] for e in os.listdir(os.path.dirname(index))})
+    return read_meta(index), rows, kinds, store.get(), fired
+
+
+@pytest.fixture(scope="module")
+def crash_log(spark, tmp_path_factory):
+    """The crash-point test's log: sf0.01 events (150 keys) in 3 files.
+    The first key of each of the 64 buckets lives only in file 0, so
+    every bucket a later batch rewrites also holds rows that batch does
+    not carry: a bucket lost in a crash window cannot be rebuilt from
+    the replayed batch alone. Returns the files and a function giving
+    the crash-free result of a point's flow (run once per flow)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    root = tmp_path_factory.mktemp("crash_log")
+    events = pq.read_table(
+        os.path.join(os.path.dirname(SF_SMOKE), "sf0.01", "events.parquet")
+    ).sort_by("event_id")
+    first = {}
+    for key in sorted(set(events.column("user_id").to_pylist())):
+        first.setdefault(zlib.crc32(str(key).encode()) % 64, key)
+    only_first = pc.is_in(events["user_id"], value_set=pa.array(list(first.values())))
+    n = events.num_rows
+    third = pa.array([j * 3 // n for j in range(n)])  # 0, 1, 2 by log position
+    parts = []
+    for i in range(3):
+        keep = pc.and_(pc.invert(only_first), pc.equal(third, i))
+        if i == 0:
+            keep = pc.or_(only_first, keep)
+        parts.append(str(root / f"log-{i}.parquet"))
+        pq.write_table(events.filter(keep), parts[-1])
+
+    free = {}
+
+    def crash_free(point):
+        flow = point if point in ("rebucket_park", "refresh_legacy_move_in") else "stream"
+        if flow not in free:
+            free[flow] = _crash_flow(spark, root / flow, parts, point)[:4]
+        return free[flow]
+
+    return parts, crash_free
+
+
+@pytest.mark.parametrize("point", [
+    "bucket_park_first", "bucket_park_middle",
+    "bucket_move_in_first", "bucket_move_in_middle",
+    "bootstrap_before_meta", "bootstrap_after_meta",
+    "before_progress_set", "after_progress_set",
+    "rebucket_park", "refresh_legacy_move_in",
+])
+def test_crash_at_every_point_resumes_to_crash_free_index(spark, tmp_path, crash_log, point):
+    """A crash at any point of a batch — either rename of a bucket's
+    park/move-in step (first bucket, a middle one), the bootstrap before
+    or after ``_meta.json``, before or after the progress publish (i.e.
+    before Spark's commit), the rebucket park, refresh's legacy
+    dir-to-symlink move-in — then a restart of the same batch or step
+    ends in exactly the index, layout, leftover set and progress of a
+    crash-free run over the same log. The restart relies on the one
+    sweep: a parked directory whose live path is absent is restored;
+    every other leftover is reaped."""
+    parts, crash_free = crash_log
+    meta, rows, kinds, progress = crash_free(point)
+    *got, fired = _crash_flow(spark, tmp_path, parts, point, crash_at=point)
+    assert fired, f"crash point {point} never reached"
+    assert rows and progress
+    assert got == [meta, rows, kinds, progress]
+
+
+def test_delete_everything_crash_before_drop_replays(spark, tmp_path, monkeypatch):
+    """A batch that deletes every row and crashes after its bucket swaps
+    but before it drops the now-empty index leaves a directory holding
+    only _meta.json. The replayed batch must read that as an empty
+    index, not fail to infer a schema from it."""
+    from meilisync_spark.operators import bucketed
+
+    index = str(tmp_path / "index")
+    schema = "pk long, seq long, op string, value double"
+    creates = spark.createDataFrame([(pk, pk, "create", 1.0) for pk in range(8)], schema)
+    apply_changes_bucketed(spark, index, creates, pk="pk", num_buckets=4)
+    deletes = spark.createDataFrame([(pk, 10 + pk, "delete", None) for pk in range(8)], schema)
+    real_drop = bucketed._drop_if_empty
+
+    def drop_if_empty(path):
+        if path == index:
+            raise _Crash("before _drop_if_empty")
+        real_drop(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(bucketed, "_drop_if_empty", drop_if_empty)
+        with pytest.raises(_Crash):
+            apply_changes_bucketed(spark, index, deletes, pk="pk", num_buckets=4)
+    assert [e for e in os.listdir(index) if e.startswith(f"{BUCKET_COL}=")] == []
+    apply_changes_bucketed(spark, index, deletes, pk="pk", num_buckets=4)
+    assert not os.path.exists(index)
+    one = spark.createDataFrame([(0, 20, "create", 1.0)], schema)
+    apply_changes_bucketed(spark, index, one, pk="pk", num_buckets=4)
+    assert {r.pk for r in read_buckets(spark, index).collect()} == {0}
