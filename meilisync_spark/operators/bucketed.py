@@ -146,9 +146,11 @@ def _swap_in(staged: str, live: str, parked: str) -> None:
 def _sweep_stale(index_path: str) -> None:
     """Crash recovery for every writer of ``index_path`` (single writer,
     like the reference's start loop): a parked ``{index}_old-<tag>``
-    (bucket K: ``-K``) whose live path is absent is restored; every
-    other leftover (``_old-``, ``_stg-``, ``_tmp-``, ``_lnk-``, a
-    ``_v-`` the index symlink does not point at) is reaped."""
+    (bucket K: ``-K``; older releases parked a rebucketed index as
+    ``_prev-<tag>``) whose live path is absent is restored; every other
+    leftover (``_old-``, ``_prev-``, ``_stg-``, ``_tmp-``, ``_lnk-``, a
+    ``_v-`` the index symlink does not point at) is reaped. The dash is
+    part of the name: a sibling index called ``{index}_old`` is not ours."""
     index_path = index_path.rstrip("/")
     parent, name = os.path.split(index_path)
     parent = parent or "."
@@ -156,12 +158,12 @@ def _sweep_stale(index_path: str) -> None:
         return
     ours = []
     for entry in sorted(os.listdir(parent)):  # a whole index sorts before its buckets
-        kind, _, rest = entry[len(name) + 1:].partition("-")
-        if entry.startswith(f"{name}_") and kind in ("old", "stg", "tmp", "lnk", "v"):
+        kind, dash, rest = entry[len(name) + 1:].partition("-")
+        if entry.startswith(f"{name}_") and dash and kind in ("old", "prev", "stg", "tmp", "lnk", "v"):
             ours.append((os.path.join(parent, entry), kind, rest.partition("-")[2]))
     for path, kind, bucket in ours:
         live = os.path.join(index_path, f"{BUCKET_COL}={bucket}") if bucket else index_path
-        if kind == "old" and not os.path.lexists(live):
+        if kind in ("old", "prev") and not os.path.lexists(live):
             os.rename(path, live)
     target = os.path.realpath(index_path) if os.path.islink(index_path) else None
     for path, _, _ in ours:

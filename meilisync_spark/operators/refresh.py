@@ -164,15 +164,15 @@ def compact_table(
     format it is OPTIMIZE/rewrite_data_files. Unpartitioned layouts use
     coalesce (not repartition): merging files needs no shuffle, only
     fewer write tasks reading more input splits each."""
-    real = os.path.realpath(index_path)
-    pcols = _partition_cols(real)
+    src = os.path.realpath(index_path)
+    pcols = _partition_cols(src)
     # mergeSchema: bucketed CDC indexes are drift-safe via per-bucket
     # schema union (read_buckets does the same) — compaction must not
     # drop a column that only newer buckets carry
     df = spark.read.option("mergeSchema", "true").parquet(index_path)
     total = sum(
         os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(real)
+        for root, _, files in os.walk(src)
         for f in files
         if f.endswith(".parquet")
     )
@@ -182,14 +182,14 @@ def compact_table(
     # record (_meta.json) AND the ANN index's quantizer halves
     # (_ann_meta.json — losing it would leave the compacted code
     # partitions unservable: no codebooks, no centroid routing)
-    sidecars = [n for n in ("_meta.json", "_ann_meta.json") if os.path.isfile(os.path.join(real, n))]
+    sidecars = [n for n in ("_meta.json", "_ann_meta.json") if os.path.isfile(os.path.join(src, n))]
     out = df.repartition(n_files, *pcols) if pcols else df.coalesce(n_files)
 
     def write(version: str) -> None:
         writer = out.write.mode("overwrite")
         (writer.partitionBy(*pcols) if pcols else writer).parquet(version)
         for name in sidecars:
-            shutil.copy(os.path.join(real, name), version)
+            shutil.copy(os.path.join(src, name), version)
 
-    real = write_version(index_path, write)
-    return sum(f.endswith(".parquet") for _, _, fs in os.walk(real) for f in fs)
+    version = write_version(index_path, write)
+    return sum(f.endswith(".parquet") for _, _, fs in os.walk(version) for f in fs)

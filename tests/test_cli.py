@@ -927,6 +927,7 @@ def test_cli_start_killed_mid_batch_resumes_to_oracle(spark, tmp_path):
     index equals the DuckDB oracle (last change per key) over the whole
     wal2json log. The --plugin hook marks batch 2; the kill takes the
     process group, so Spark's JVM dies with it."""
+    import contextlib
     import random
     import signal
     import subprocess
@@ -988,7 +989,8 @@ def test_cli_start_killed_mid_batch_resumes_to_oracle(spark, tmp_path):
                 assert time.monotonic() < deadline, "batch 2 never started"
                 time.sleep(0.05)
         finally:
-            os.killpg(proc.pid, signal.SIGKILL)
+            with contextlib.suppress(ProcessLookupError):  # the child may be gone already
+                os.killpg(proc.pid, signal.SIGKILL)
             proc.wait()
     assert len([c for c in os.listdir(ckpt / "commits") if c.isdigit()]) < 4
 

@@ -552,6 +552,48 @@ def test_rebucket_crash_window_rolls_back_not_bootstraps(spark, tmp_path):
     }
 
 
+def test_prev_park_of_an_older_rebucket_is_restored(spark, tmp_path):
+    """Older releases parked a rebucketed index as ``{index}_prev-<tag>``.
+    A crash they left in that window (index path absent, new layout
+    staged) is restored by the sweep like any parked directory, not
+    read as an empty index and bootstrapped from one batch."""
+    index = str(tmp_path / "index")
+    schema = "pk long, seq long, op string, value double"
+    b0 = spark.createDataFrame([(pk, pk, "create", float(pk)) for pk in range(40)], schema)
+    apply_changes_bucketed(spark, index, b0, pk="pk", num_buckets=4)
+    before = {r.pk: r.value for r in read_buckets(spark, index).collect()}
+    os.rename(index, index + "_prev-deadbeef")
+    os.makedirs(index + "_stg-deadbeef/bucket=0")
+
+    delta = spark.createDataFrame([(1, 1000, "update", 99.0)], schema)
+    apply_changes_bucketed(spark, index, delta, pk="pk", num_buckets=4)
+    assert {r.pk: r.value for r in read_buckets(spark, index).collect()} == {**before, 1: 99.0}
+    assert os.listdir(tmp_path) == ["index"]
+
+
+def test_sweep_spares_sibling_indexes_named_like_leftovers(spark, tmp_path):
+    """Leftover names carry a dash after their kind. Sibling indexes
+    that share the sink directory and are named ``{index}_old``,
+    ``{index}_v`` etc. are not leftovers: a batch on ``index`` keeps
+    them, and an absent ``index`` is not restored from ``index_old``."""
+    from meilisync_spark.operators.bucketed import DEFAULT_NUM_BUCKETS, resolve_num_buckets
+
+    index = str(tmp_path / "index")
+    siblings = [f"index_{kind}" for kind in ("old", "prev", "stg", "tmp", "lnk", "v")]
+    for name in siblings:
+        os.makedirs(tmp_path / name)
+        (tmp_path / name / "keep").write_text(name)
+    assert resolve_num_buckets(index, None) == DEFAULT_NUM_BUCKETS
+    assert not os.path.lexists(index)
+
+    schema = "pk long, seq long, op string, value double"
+    for seq in (1, 2):  # bootstrap, then a per-batch MERGE
+        batch = spark.createDataFrame([(pk, seq, "create", 1.0) for pk in range(8)], schema)
+        apply_changes_bucketed(spark, index, batch, pk="pk", num_buckets=4)
+    assert sorted(os.listdir(tmp_path)) == sorted(["index", *siblings])
+    assert all((tmp_path / name / "keep").read_text() == name for name in siblings)
+
+
 def test_cli_rebucket_missing_index_is_an_error(tmp_path, capsys):
     from meilisync_spark.cli import main
 
