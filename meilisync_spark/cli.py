@@ -8,7 +8,9 @@ muscle memory:
                  (main.py:71-140): one call to the Structured Streaming
                  driver; a fresh checkpoint's first batch is the
                  backfill. Without a sync config it runs one
-                 ``full: true`` sync into ``--index``.
+                 ``full: true`` sync into ``--index``; with one, each
+                 sync takes its table's slice of the log (an envelope
+                 names its table, a fixture log needs ``--table-col``).
 - ``refresh``  — full rebuild behind a shadow path + atomic swap
                  (main.py:143-176 / meili.py:34-71).
 - ``check``    — per-sync count consistency audit (main.py:179-208).
@@ -84,8 +86,7 @@ def _start(args: argparse.Namespace) -> int:
     spark = get_spark("meilisync-spark-start")
     settings = _settings(args)
     _init_ops(spark, settings)
-    sink_format = getattr(args, "sink_format", "parquet")
-    envelope = getattr(args, "envelope", None)
+    sink_format, envelope = args.sink_format, args.envelope
     # flags override config
     interval = args.interval or (
         f"{settings.sink.insert_interval} seconds"
@@ -93,23 +94,9 @@ def _start(args: argparse.Namespace) -> int:
     )
     max_files = args.max_files or settings.sink.insert_size
     normalizer = None
-    if settings.syncs and (
-        envelope or args.source_format != "parquet" or sink_format != "parquet"
-    ):
-        # a syncs config routes the drop dir as fixture events into
-        # per-sync parquet indexes; silently ignoring
-        # --envelope/--source-format/--sink-format here would do
-        # something other than what the flag asked
-        print(
-            "error: --envelope/--source-format/--sink-format cannot be "
-            "combined with a settings file that defines syncs; run "
-            "single-index mode without --config, or drop the flags",
-            file=sys.stderr,
-        )
-        return 2
     if envelope:
         # raw-envelope drop-dir mode: the connector normalizer replaces
-        # normalize_events and the payload columns come from the user's
+        # classify_events and the payload columns come from the user's
         # DDL schema (sources/cdc_connectors.py)
         from pyspark.sql import types as _T
 
@@ -131,20 +118,16 @@ def _start(args: argparse.Namespace) -> int:
             return 2
         pschema = _T.StructType.fromDDL(args.payload_schema)
         payload_cols = [f.name for f in pschema.fields if f.name != args.envelope_pk]
+        kw = {} if norm_fn is _cc.normalize_mongo_change_stream else {"pk": args.envelope_pk}
 
-        def normalizer(df, sync, _fn=norm_fn, _s=pschema, _cols=payload_cols):
-            kw = {} if _fn is _cc.normalize_mongo_change_stream else {"pk": sync.pk}
-            ev = _fn(df, _s, **kw)
-            return ev.select(
-                "seq", "table", "op", "pk",
-                *[F.col(f"payload.{c}").alias(c) for c in _cols],
-            )
+        def normalizer(df):
+            return norm_fn(df, pschema, **kw).select(
+                "seq", "table", "op", "pk", *[f"payload.{c}" for c in payload_cols])
 
     if sink_format == "delta" and args.buckets:
-        # fail-loud convention (matches --envelope + syncs-config):
-        # Delta manages its own file layout (MERGE rewrites touched
-        # files under snapshot isolation) — silently dropping the flag
-        # would let a user believe the table is pk-bucketed
+        # fail loud: Delta manages its own file layout (MERGE rewrites
+        # touched files under snapshot isolation) — silently dropping
+        # the flag would let a user believe the table is pk-bucketed
         print("error: --buckets does not apply to --sink-format delta "
               "(Delta MERGE manages its own file layout)", file=sys.stderr)
         return 2
@@ -152,8 +135,11 @@ def _start(args: argparse.Namespace) -> int:
     from meilisync_spark.progress import make_progress
 
     progress = make_progress(settings.progress)
-    table_col = args.table_col if settings.syncs else None
+    # a syncs config routes by source table: an envelope carries its
+    # own, a fixture log names its raw column with --table-col
+    table_col = args.table_col or ("table" if envelope else None)
     if not settings.syncs:
+        table_col = None
         settings = Settings.for_index(
             args.index or settings.sink.index_path,
             pk=args.envelope_pk if envelope else "user_id",
@@ -683,14 +669,15 @@ def build_parser() -> argparse.ArgumentParser:
     st.add_argument("--max-files", type=int, help="files per micro-batch")
     st.add_argument("--plugin", help="dotted path to a DataFrame->DataFrame pre hook")
     st.add_argument("--table-col", help="raw column carrying the source table name "
-                                        "(multi-sync routing)")
+                                        "(multi-sync routing of a fixture log; "
+                                        "envelopes carry their own table)")
     st.add_argument("--buckets", type=int,
                     help="pk-bucket count for the index (each batch rewrites only "
                          "touched buckets). Default: fresh indexes are bucketed at "
                          "64, existing layouts keep their recorded form; 0 forces "
                          "the flat full-rewrite layout")
     st.add_argument("--source-format", dest="source_format", default="parquet",
-                    choices=["parquet", "orc", "json", "csv", "text"],
+                    choices=["parquet", "orc", "text"],
                     help="event-log format; 'text' = raw envelope lines")
     st.add_argument("--sink-format", dest="sink_format", default="parquet",
                     choices=["parquet", "delta"],
@@ -702,11 +689,13 @@ def build_parser() -> argparse.ArgumentParser:
                              "wal2json", "wal2json_v1", "wal2json_v2"],
                     help="normalize raw CDC envelopes instead of fixture events "
                          "(use with --source-format text; wal2json "
-                         "auto-detects format v1 vs v2 per row)")
+                         "auto-detects format v1 vs v2 per row); with "
+                         "--config each sync takes its table's changes")
     st.add_argument("--payload-schema", dest="payload_schema",
                     help="DDL row schema for --envelope, e.g. 'id long, v double'")
     st.add_argument("--envelope-pk", dest="envelope_pk", default="id",
-                    help="pk field inside the envelope payload")
+                    help="pk field inside the envelope payload (a sync whose "
+                         "pk names another payload field is keyed by it)")
     st.add_argument(
         "--timeout", type=float, default=120.0,
         help="seconds before start stops the stream; a catch-up run cut "

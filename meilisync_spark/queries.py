@@ -2242,8 +2242,8 @@ def q_streaming_maxwell_apply(spark, sf_dir):
         )
         env.write.mode("overwrite").text(drop)
 
-        def norm(df, sync):
-            ev = normalize_maxwell(df, _RT_PAYLOAD, pk=sync.pk)
+        def norm(df):
+            ev = normalize_maxwell(df, _RT_PAYLOAD, pk="user_id")
             return ev.select(
                 "seq", "ts", "table", "op", "pk",
                 F.col("payload").getField("value").alias("value"),

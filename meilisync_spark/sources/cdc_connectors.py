@@ -152,8 +152,6 @@ def normalize_debezium(
     payload_schema: T.StructType,
     *,
     pk: str = "id",
-    value_col: str = "value",
-    tables: list[str] | None = None,
 ) -> DataFrame:
     """Kafka Debezium envelope → the engine's normalized event schema
     ``(seq, ts, table, op, pk, payload struct)``.
@@ -164,9 +162,9 @@ def normalize_debezium(
       postgres.py:96-98, deliberately not replicated).
     - payload: ``after`` for create/update, ``before`` for delete (the
       delete path only needs the pk — meilisync/meili.py:136-137).
-    - routing (P3): optional ``tables`` filter ≡ binlog ``only_tables``
-      (mysql.py:92) — applied before decode so Kafka's predicate
-      pushdown can skip whole messages.
+    - routing (P3): ``table`` is ``source.table``; the pipeline routes
+      each sync its table's rows (≡ binlog ``only_tables``,
+      mysql.py:92).
     - ``seq`` (the last-wins total order, A5): the source's log
       position — postgres ``source.lsn``, else mysql ``source.pos``,
       else the Kafka partition offset when the frame carries one
@@ -176,7 +174,7 @@ def normalize_debezium(
       same-key changes in one millisecond would make last-wins
       arbitrary.
     """
-    v = F.from_json(F.col(value_col).cast("string"), debezium_value_schema(payload_schema))
+    v = F.from_json(F.col("value").cast("string"), debezium_value_schema(payload_schema))
     p = v.getField("payload")
     op_src = p.getField("op")
     op: Column = F.lit(None).cast("string")
@@ -188,7 +186,7 @@ def normalize_debezium(
     if "offset" in df.columns:  # kafka frame
         seq_candidates.append(F.col("offset"))
     seq_candidates.append(p.getField("ts_ms"))
-    out = df.select(
+    return df.select(
         F.coalesce(*seq_candidates).alias("seq"),
         F.timestamp_millis(p.getField("ts_ms")).alias("ts"),
         source.getField("table").alias("table"),
@@ -196,9 +194,6 @@ def normalize_debezium(
         payload.getField(pk).alias("pk"),
         payload.alias("payload"),
     ).where(F.col("op").isNotNull())
-    if tables:
-        out = out.where(F.col("table").isin(*tables))
-    return out
 
 
 # Maxwell type → EventType. bootstrap-insert is Maxwell's snapshot
@@ -245,8 +240,6 @@ def normalize_maxwell(
     payload_schema: T.StructType,
     *,
     pk: str = "id",
-    value_col: str = "value",
-    tables: list[str] | None = None,
 ) -> DataFrame:
     """Maxwell envelope → the engine's normalized event schema
     ``(seq, ts, table, op, pk, payload struct)`` — the same contract as
@@ -294,7 +287,7 @@ def normalize_maxwell(
     # per row by construction, and the substituted filter carries one
     # parse, not three.
     parsed = F.from_json(
-        F.col(value_col).cast("string"), maxwell_value_schema(payload_schema)
+        F.col("value").cast("string"), maxwell_value_schema(payload_schema)
     )
     kafka_offset = F.col("offset") if "offset" in df.columns else None
 
@@ -324,14 +317,11 @@ def normalize_maxwell(
         )
 
     bound = F.element_at(F.transform(F.array(parsed), _build), 1)
-    out = (
+    return (
         df.select(bound.alias("_norm"))
         .select("_norm.*")
         .where(F.col("op").isNotNull())
     )
-    if tables:
-        out = out.where(F.col("table").isin(*tables))
-    return out
 
 
 # Canal flat-message type → EventType (type is uppercase in canal-json)
@@ -374,8 +364,6 @@ def normalize_canal(
     payload_schema: T.StructType,
     *,
     pk: str = "id",
-    value_col: str = "value",
-    tables: list[str] | None = None,
 ) -> DataFrame:
     """Canal flat-message envelope → the engine's normalized event
     schema ``(seq, ts, table, op, pk, payload struct)``.
@@ -405,7 +393,7 @@ def normalize_canal(
     # per message, and the DML filter's alias substitution duplicated
     # the parse again. The keep-flag rides the bound struct so the
     # filter reads a struct field of the single parse.
-    parsed = F.from_json(F.col(value_col).cast("string"), canal_value_schema())
+    parsed = F.from_json(F.col("value").cast("string"), canal_value_schema())
     kafka_offset = F.col("offset") if "offset" in df.columns else None
 
     def _build(v):
@@ -446,7 +434,7 @@ def normalize_canal(
             for f in payload_schema.fields
         ]
     )
-    out = exploded.select(
+    return exploded.select(
         (F.col("_msg_seq") * F.lit(CANAL_BATCH_SHIFT) + F.col("_pos")).alias("seq"),
         "ts",
         "table",
@@ -454,9 +442,6 @@ def normalize_canal(
         typed.getField(pk).alias("pk"),
         typed.alias("payload"),
     )
-    if tables:
-        out = out.where(F.col("table").isin(*tables))
-    return out
 
 
 # wal2json change kind → EventType: exactly the three kinds the
@@ -552,8 +537,6 @@ def normalize_wal2json(
     payload_schema: T.StructType,
     *,
     pk: str = "id",
-    value_col: str = "value",
-    tables: list[str] | None = None,
 ) -> DataFrame:
     """Raw wal2json envelope → the engine's normalized event schema
     ``(seq, ts, table, op, pk, payload struct)`` — the direct parser
@@ -569,8 +552,9 @@ def normalize_wal2json(
       delete; other kinds (``truncate``, logical ``message``) dropped
       (P5). The reference ``return``s out of the whole message when it
       meets an unconfigured table, silently discarding the REST of that
-      transaction's changes (quirk Q2, postgres.py:95-96); here routing
-      filters per-change and continues — deliberately not replicated.
+      transaction's changes (quirk Q2, postgres.py:95-96); here every
+      change comes out tagged with its own ``table`` and the pipeline
+      routes per change — deliberately not replicated.
     - payload: ``columnnames``/``columnvalues`` zipped into a map and
       re-typed against ``payload_schema`` with per-field Catalyst casts
       (no UDF). Deletes fall back to ``oldkeys`` when columnvalues are
@@ -592,7 +576,7 @@ def normalize_wal2json(
     - ``ts``: the commit ``timestamp`` string (include-timestamp), cast
       with full microsecond + zone-offset fidelity.
     """
-    v = F.from_json(F.col(value_col).cast("string"), wal2json_value_schema())
+    v = F.from_json(F.col("value").cast("string"), wal2json_value_schema())
     lsn_seq = _lsn_to_long(v.getField("nextlsn"))
     ts = v.getField("timestamp").cast("timestamp")
     base_candidates = [lsn_seq]
@@ -637,7 +621,7 @@ def normalize_wal2json(
         ).cast("int")
     )
     seq = F.col("_msg_seq") * F.lit(WAL2JSON_CHANGE_SHIFT) + checked_pos
-    out = (
+    return (
         exploded.where(op.isNotNull())
         .select(
             seq.alias("seq"),
@@ -648,9 +632,6 @@ def normalize_wal2json(
             typed.alias("payload"),
         )
     )
-    if tables:
-        out = out.where(F.col("table").isin(*tables))
-    return out
 
 
 # wal2json format version 2 action → EventType. v2 additionally emits
@@ -702,8 +683,6 @@ def normalize_wal2json_v2(
     payload_schema: T.StructType,
     *,
     pk: str = "id",
-    value_col: str = "value",
-    tables: list[str] | None = None,
 ) -> DataFrame:
     """wal2json format-version-2 envelope → the engine's normalized
     event schema ``(seq, ts, table, op, pk, payload struct)``.
@@ -729,7 +708,7 @@ def normalize_wal2json_v2(
     # it into ~10 separate parses), the INNER one binds the assembled
     # row_map (otherwise re-expanded, from_json included, once per
     # payload field by alias substitution inside the typed struct).
-    parsed = F.from_json(F.col(value_col).cast("string"), wal2json_v2_value_schema())
+    parsed = F.from_json(F.col("value").cast("string"), wal2json_v2_value_schema())
     kafka_offset = F.col("offset") if "offset" in df.columns else None
 
     def _as_map(cols: Column) -> Column:
@@ -790,14 +769,11 @@ def normalize_wal2json_v2(
         return F.element_at(F.transform(F.array(row_map), _typed), 1)
 
     bound = F.element_at(F.transform(F.array(parsed), _build), 1)
-    out = (
+    return (
         df.select(bound.alias("_norm"))
         .select("_norm.*")
         .where(F.col("op").isNotNull())
     )
-    if tables:
-        out = out.where(F.col("table").isin(*tables))
-    return out
 
 
 def normalize_wal2json_auto(
@@ -805,8 +781,6 @@ def normalize_wal2json_auto(
     payload_schema: T.StructType,
     *,
     pk: str = "id",
-    value_col: str = "value",
-    tables: list[str] | None = None,
 ) -> DataFrame:
     """Per-row wal2json format dispatch: v1 messages carry a ``change``
     array, v2 messages carry ``action`` — a user pointing the drop-dir
@@ -816,15 +790,9 @@ def normalize_wal2json_auto(
     on its own rows (the filter sits under the parse), and both
     branches emit the same ``lsn·2^12``-packed seq domain so the union
     totally orders consistently."""
-    marker = F.get_json_object(F.col(value_col).cast("string"), "$.action")
-    v1 = normalize_wal2json(
-        df.where(marker.isNull()), payload_schema,
-        pk=pk, value_col=value_col, tables=tables,
-    )
-    v2 = normalize_wal2json_v2(
-        df.where(marker.isNotNull()), payload_schema,
-        pk=pk, value_col=value_col, tables=tables,
-    )
+    marker = F.get_json_object(F.col("value").cast("string"), "$.action")
+    v1 = normalize_wal2json(df.where(marker.isNull()), payload_schema, pk=pk)
+    v2 = normalize_wal2json_v2(df.where(marker.isNotNull()), payload_schema, pk=pk)
     return v1.unionByName(v2)
 
 
@@ -1311,9 +1279,6 @@ def mongo_change_stream_schema(payload_schema: T.StructType) -> T.StructType:
 def normalize_mongo_change_stream(
     df: DataFrame,
     payload_schema: T.StructType,
-    *,
-    value_col: str = "value",
-    tables: list[str] | None = None,
 ) -> DataFrame:
     """Mongo change-stream envelope → the engine's normalized event
     schema ``(seq, ts, table, op, pk, payload struct)`` — completing
@@ -1337,11 +1302,12 @@ def normalize_mongo_change_stream(
       Mongo's own total order (t = epoch seconds, i = intra-second
       counter); the Kafka partition offset, when the frame carries
       one, is appended as a tiebreak-free fallback.
-    - routing (P3): optional ``tables`` filter on ``ns.coll`` ≡ the
-      reference's per-sync collection routing.
+    - routing (P3): ``table`` is ``ns.coll``; the pipeline routes each
+      sync its collection's rows, ≡ the reference's per-sync collection
+      routing.
     """
     v = F.from_json(
-        F.col(value_col).cast("string"), mongo_change_stream_schema(payload_schema)
+        F.col("value").cast("string"), mongo_change_stream_schema(payload_schema)
     )
     op_src = v.getField("operationType")
     op: Column = F.lit(None).cast("string")
@@ -1358,7 +1324,7 @@ def normalize_mongo_change_stream(
     ]
     if "offset" in df.columns:  # kafka frame
         seq_candidates.append(F.col("offset"))
-    out = df.select(
+    return df.select(
         F.coalesce(*seq_candidates).alias("seq"),
         F.timestamp_seconds(ct.getField("t")).alias("ts"),
         v.getField("ns").getField("coll").alias("table"),
@@ -1367,6 +1333,3 @@ def normalize_mongo_change_stream(
         v.getField("documentKey").getField("_id").cast("string").alias("pk"),
         payload.alias("payload"),
     ).where(F.col("op").isNotNull())
-    if tables:
-        out = out.where(F.col("table").isin(*tables))
-    return out

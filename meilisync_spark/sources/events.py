@@ -43,24 +43,26 @@ def _op_expr(op_map: dict[str, str]) -> Column:
     return expr
 
 
-def normalize_events(
+def classify_events(
     events: DataFrame,
     op_map: dict[str, str] | None = None,
-    table: str = "users",
+    table: str | Column = "users",
     sparse_updates: bool = True,
-    pk_col: str = "user_id",
+    pk_col: str | Column = "user_id",
 ) -> DataFrame:
-    """events table → normalized CDC envelope.
+    """events table → normalized CDC frame, one row per event.
 
     Output schema: ``seq long, ts timestamp, table string, op string,
-    pk long, value double, k long``.
+    pk long, value double, k long``. Kinds absent from ``op_map`` stay
+    as ``op`` NULL rows: their positions still count towards the log
+    head, and the consumer drops them (P5) —
+    :func:`normalize_events` here, ``run_cdc_pipeline`` on the stream.
 
-    ``table``/``pk_col`` parameterize routing (P3) and pk extraction:
-    the streaming driver (streaming/pipeline.py:run_cdc_pipeline), by
-    default, normalizes each sync rule's slice of the raw stream with
-    that rule's table name and configured pk (≡ ``Sync.pk``, reference
-    meilisync/settings.py:41 — the reference looks up ``data[sync.pk]``
-    per event, meilisync/main.py:107-109).
+    ``table``/``pk_col`` parameterize routing (P3) and pk extraction: a
+    name (or a literal table) for a one-table log; a column expression
+    when each row's table picks its sync rule's pk (≡ ``Sync.pk``,
+    reference meilisync/settings.py:41 — the reference looks up
+    ``data[sync.pk]`` per event, meilisync/main.py:107-109).
 
     ``sparse_updates=True`` models partial-update payloads (Q4/S10 in
     SURVEY.md: Mongo updates carry only ``updatedFields``): update
@@ -70,19 +72,15 @@ def normalize_events(
     (meilisync/meili.py:132-135).
     """
     op_map = DEFAULT_OP_MAP if op_map is None else op_map
-    out = (
-        events
-        .where(F.col("event_type").isin(*op_map.keys()))  # P5: op-kind filter
-        .select(
-            F.col("event_id").alias("seq"),
-            F.col("ts"),
-            F.lit(table).alias("table"),  # P3: routing target
-            _op_expr(op_map).alias("op"),  # P4: op classification
-            F.col(pk_col).alias("pk"),
-            F.col("value"),
-            # F3: dynamic JSON payload → typed column
-            F.from_json(F.col("props"), PROPS_SCHEMA).getField("k").alias("k"),
-        )
+    out = events.select(
+        F.col("event_id").alias("seq"),
+        F.col("ts"),
+        (table if isinstance(table, Column) else F.lit(table)).alias("table"),  # P3
+        _op_expr(op_map).alias("op"),  # P4: op classification
+        (F.col(pk_col) if isinstance(pk_col, str) else pk_col).alias("pk"),
+        F.col("value"),
+        # F3: dynamic JSON payload → typed column
+        F.from_json(F.col("props"), PROPS_SCHEMA).getField("k").alias("k"),
     )
     if sparse_updates:
         out = out.withColumn(
@@ -92,6 +90,23 @@ def normalize_events(
             ).otherwise(F.col("value")),
         )
     return out
+
+
+def normalize_events(
+    events: DataFrame,
+    op_map: dict[str, str] | None = None,
+    table: str = "users",
+    sparse_updates: bool = True,
+    pk_col: str = "user_id",
+) -> DataFrame:
+    """:func:`classify_events` restricted to the consumed op kinds (P5);
+    the ``event_type`` filter sits under the projection, so it pushes
+    down to the parquet scan."""
+    op_map = DEFAULT_OP_MAP if op_map is None else op_map
+    return classify_events(
+        events.where(F.col("event_type").isin(*op_map.keys())),
+        op_map, table, sparse_updates, pk_col,
+    )
 
 
 # DuckDB oracle fragment mirroring normalize_events exactly (kept next

@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from meilisync_spark.operators.ivfpq import add_to_index
-from meilisync_spark.streaming.pipeline import _start_and_await
+from meilisync_spark.streaming.pipeline import _start_and_await, read_event_stream
 
 
 def run_ann_ingest(
@@ -103,21 +103,7 @@ def run_ann_ingest(
                 "training corpus (seed_index_vectors) so a retrain can cover "
                 "the originally-trained vectors — PQ codes are lossy"
             )
-    schema = spark.read.parquet(vectors_path).schema
-    if os.path.isfile(vectors_path):
-        # file source needs a directory basePath — stage a one-symlink
-        # dir (absolute target: a relative one would resolve against
-        # the staging dir and dangle)
-        import tempfile
-
-        staging = tempfile.mkdtemp(prefix="mls_ann_src_")
-        target = os.path.abspath(vectors_path)
-        os.symlink(target, os.path.join(staging, os.path.basename(target)))
-        vectors_path = staging
-    stream = spark.readStream.schema(schema).option("latestFirst", "false")
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = stream.parquet(vectors_path)
+    src = read_event_stream(spark, vectors_path, max_files_per_trigger)
 
     heal_partition_dirs(index_path)
     if retrain_max_growth is not None:

@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,7 +61,7 @@ from meilisync_spark.operators.dedup import (
     normalize_text,
 )
 from meilisync_spark.operators.text import quality_keep
-from meilisync_spark.streaming.pipeline import _start_and_await
+from meilisync_spark.streaming.pipeline import _start_and_await, read_event_stream
 from meilisync_spark.pin import SER as _SER
 
 DOC_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
@@ -173,9 +174,8 @@ def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
       files) or a remote path we cannot inspect stays fatal."""
     try:
         return spark.read.parquet(path)
-    except Exception as e:  # AnalysisException, but import-stable
-        get_cls = getattr(e, "getErrorClass", None)
-        cls = (get_cls() if callable(get_cls) else None) or ""
+    except Exception as e:
+        cls = (e.getCondition() if isinstance(e, AnalysisException) else None) or ""
         msg = str(e)
         if "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return None
@@ -483,21 +483,7 @@ def run_corpus_ingest(
         heal_partition_dirs,
     )
 
-    schema = spark.read.parquet(docs_path).schema
-    if os.path.isfile(docs_path):
-        # file source needs a directory basePath — stage a one-symlink
-        # dir (absolute target: a relative one would resolve against
-        # the staging dir and dangle)
-        import tempfile
-
-        staging = tempfile.mkdtemp(prefix="mls_ingest_src_")
-        target = os.path.abspath(docs_path)
-        os.symlink(target, os.path.join(staging, os.path.basename(target)))
-        docs_path = staging
-    stream = spark.readStream.schema(schema).option("latestFirst", "false")
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = stream.parquet(docs_path)
+    src = read_event_stream(spark, docs_path, max_files_per_trigger)
 
     bands_path = index_path.rstrip("/") + "_bands"
     # LoggedBloom sidecar prefixes: <prefix>_bloom.bin + <prefix>_bloom_log/

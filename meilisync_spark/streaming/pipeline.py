@@ -12,12 +12,13 @@ Mapping (SURVEY.md §2.9):
   write-then-commit order as main.py:110-120 ⇒ at-least-once, made
   effectively-once by the idempotent pk MERGE).
 - per-event apply (meili.py:142-151) → ONE driver,
-  :func:`run_cdc_pipeline`, with one ``foreachBatch`` body: per sync
-  rule route → normalize → fields map → plugin chain → MERGE through
-  one sink dispatch (delta, bucketed or flat), then one progress
-  publish per batch. The MERGE calls the *batch* operators the oracle
-  checks, so streaming correctness reduces to batch correctness plus
-  the harness. A single index is a one-sync ``Settings``.
+  :func:`run_cdc_pipeline`: the log is normalized once, on the stream,
+  into one routed frame; the ``foreachBatch`` body slices it per sync
+  rule → fields map → plugin chain → MERGE through one sink dispatch
+  (delta, bucketed or flat), then one progress publish per batch. The
+  MERGE calls the *batch* operators the oracle checks, so streaming
+  correctness reduces to batch correctness plus the harness. A single
+  index is a one-sync ``Settings``.
 - backfill-if-missing (main.py:86-101) → a fresh checkpoint's first
   batch: with ``full: true`` it replays the whole log into an absent
   index, no separate snapshot phase.
@@ -50,12 +51,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from meilisync_spark.config import Settings, Sync, load_plugin
+from meilisync_spark.config import Settings, load_plugin
 from meilisync_spark.operators import bucketed
 from meilisync_spark.operators.apply import apply_changes
 from meilisync_spark.operators.project import ENVELOPE_COLS, apply_envelope_fields
 from meilisync_spark.operators.refresh import refresh_data
-from meilisync_spark.sources.events import normalize_events
+from meilisync_spark.sources.events import classify_events
 from meilisync_spark.sources.parquet import _nanos_timestamp_cols
 
 
@@ -66,9 +67,9 @@ def read_event_stream(
     source_format: str = "parquet",
     schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Streaming scan of an append-only CDC event directory (S4-S6's
-    Spark form; in production this is Kafka/Debezium — the file source
-    keeps the harness hermetic). File order = arrival order.
+    """Streaming scan of an append-only drop directory (a CDC log is
+    S4-S6's Spark form; in production Kafka/Debezium). File order =
+    arrival order.
 
     ``source_format``: parquet (default), orc, json, csv, or text — a
     CDC drop directory is often newline-JSON in practice.
@@ -80,42 +81,51 @@ def read_event_stream(
     (sources/cdc_connectors.py: Debezium/Maxwell/Canal/Mongo) consume,
     so an envelope drop-dir tails end-to-end without Kafka.
 
-    A single-file path is staged into a one-symlink directory (the file
-    source requires a directory basePath). The staging dir is
-    DETERMINISTIC in the source path — ``mls_src_<sha1(abspath)>`` —
-    because the checkpoint records committed files under that basePath:
-    a random per-run dir would poison every restart with
-    "Wrong basePath" the moment the query resumes from its checkpoint.
-    Nanos parquet timestamps get the same floor-to-micros conversion
-    the batch loader applies.
+    A single file is staged by :func:`_source_dir`. Nanos parquet
+    timestamps are floored to micros, as the batch loader does.
     """
+    reader = spark.readStream.option("latestFirst", "false")  # seq follows file order
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return _load_events(spark, reader, events_path, source_format, schema)
+
+
+def _source_dir(path: str) -> str:
+    """The directory a file source reads for ``path``: the path itself,
+    or for a single file a one-symlink staging directory (the file
+    source requires a directory basePath). The staging dir is
+    DETERMINISTIC in the source path — ``mls_src_<uid>_<sha1(abspath)>``
+    — because the checkpoint records committed files under that
+    basePath: a random per-run dir would fail every restart with "Wrong
+    basePath" the moment the query resumes from its checkpoint."""
+    if not os.path.isfile(path):
+        return path
+    # keyed by uid so users on a shared host can't collide with (or
+    # pre-plant symlinks in) each other's staging dirs; mode 0700 for
+    # the same reason
+    tag = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:16]
+    staging = os.path.join(tempfile.gettempdir(), f"mls_src_{os.getuid()}_{tag}")
+    os.makedirs(staging, mode=0o700, exist_ok=True)
+    link = os.path.join(staging, os.path.basename(path))
+    try:
+        # absolute target: a relative one would resolve against the
+        # staging dir and dangle
+        os.symlink(os.path.abspath(path), link)
+    except FileExistsError:
+        # concurrent starter won the race, or a prior run left the
+        # link: both point at the same target by construction (the dir
+        # name is a hash of the target path) — verify and reuse
+        if os.path.realpath(link) != os.path.realpath(path):
+            raise RuntimeError(
+                f"staging link {link} points at {os.path.realpath(link)}, not {path}"
+            )
+    return staging
+
+
+def _load_events(spark, reader, events_path, source_format, schema) -> DataFrame:
+    """The log through ``reader`` (``spark.read`` or ``spark.readStream``):
+    one schema, staging and timestamp rule for the stream and a batch read."""
     nanos = _nanos_timestamp_cols(events_path) if source_format == "parquet" else []
-    if os.path.isfile(events_path):
-        # keyed by uid so users on a shared host can't collide with (or
-        # pre-plant symlinks in) each other's staging dirs; mode 0700
-        # for the same reason
-        tag = hashlib.sha1(os.path.abspath(events_path).encode()).hexdigest()[:16]
-        staging = os.path.join(
-            tempfile.gettempdir(), f"mls_src_{os.getuid()}_{tag}"
-        )
-        os.makedirs(staging, mode=0o700, exist_ok=True)
-        link = os.path.join(staging, os.path.basename(events_path))
-        try:
-            # absolute target: a relative one would resolve against the
-            # staging dir and dangle
-            os.symlink(os.path.abspath(events_path), link)
-        except FileExistsError:
-            # concurrent starter won the race, or a prior run left the
-            # link: both point at the same target by construction (the
-            # dir name is a hash of the target path) — verify and reuse
-            if os.path.realpath(link) != os.path.realpath(events_path):
-                raise RuntimeError(
-                    f"staging link {link} points at "
-                    f"{os.path.realpath(link)}, not {events_path}"
-                )
-        src_dir = staging
-    else:
-        src_dir = events_path
     if schema is None:
         if source_format == "parquet":
             schema = spark.read.parquet(events_path).schema
@@ -125,14 +135,10 @@ def read_event_stream(
             schema = T.StructType([T.StructField("value", T.StringType())])
         else:
             raise ValueError(f"{source_format} event stream needs an explicit schema")
-    reader = spark.readStream.schema(schema).format(source_format)
+    reader = reader.schema(schema).format(source_format)
     if source_format == "csv":
         reader = reader.option("header", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # file-source lists oldest-first so seq order follows file order
-    reader = reader.option("latestFirst", "false")
-    df = reader.load(src_dir)
+    df = reader.load(_source_dir(events_path))
     for col in nanos:
         if isinstance(df.schema[col].dataType, T.LongType):
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
@@ -237,7 +243,7 @@ def run_cdc_pipeline(
     num_buckets: int | None = None,
     source_format: str = "parquet",
     source_schema=None,
-    normalizer: Callable[[DataFrame, Sync], DataFrame] | None = None,
+    normalizer: Callable[[DataFrame], DataFrame] | None = None,
     pre_batch: Callable[[DataFrame], DataFrame] | None = None,
     progress=None,
     sink_format: str = "parquet",
@@ -250,20 +256,24 @@ def run_cdc_pipeline(
     :class:`CatchUpTimeout`; the next run resumes from the checkpoint.
     A single index is a one-sync ``settings`` (:meth:`Settings.for_index`).
 
+    One normalized frame per query, planned once on the stream (the
+    reference's ``Event{type, table, data, progress}``):
+    ``normalizer(raw)`` maps every raw row onto ``(seq, table, op, pk,
+    <payload>)``, possibly keeping unconsumed kinds as ``op`` NULL rows.
+    The default is :func:`classify_events`, keyed per table by its sync
+    rule's pk (settings.py:41); a connector normalizer (e.g.
+    ``normalize_maxwell`` plus a payload flatten) with
+    ``source_format="text"`` tails a raw envelope drop-dir. Routing
+    (P3): with ``table_col`` set, ``table`` is each row's source table
+    (the default normalizer reads that raw column); without it the log
+    is one table's, and every row is labelled with the syncs' table.
+
     Per micro-batch, for each ``Sync`` in ``settings.syncs``:
 
-    1. route: keep raw rows whose ``table_col`` equals ``sync.table``
-       (P3; None means a single-table stream — the filter pushes into
-       the batch scan, so each sync works on a pruned slice);
-    2. normalize with ``normalizer(raw, sync)`` onto the event contract
-       ``(seq, table, op, pk, <payload>)`` — default
-       :func:`normalize_events` with the rule's table and pk
-       (settings.py:41); a connector normalizer (e.g.
-       ``normalize_maxwell`` + a payload flatten) with
-       ``source_format="text"`` tails a raw envelope drop-dir. The
-       payload is every column but seq/table/op/pk. One unrouted sync
-       over a log without ``event_id`` normalizes once on the stream
-       instead (no batch step needs a raw row then);
+    1. slice the frame: rows of ``sync.table`` with a consumed ``op``
+       (the one place unconsumed kinds are dropped, P5). A payload
+       column named ``sync.pk`` (an envelope field) becomes the key;
+    2. ``full: false``: keep only rows past the recorded head;
     3. project the payload through the rule's ``fields`` map (P1);
     4. run the plugin chain — global, per-sync (U1, meili.py:95-106),
        then ``pre_batch`` (the CLI ``--plugin``);
@@ -279,24 +289,36 @@ def run_cdc_pipeline(
     index; a snapshot phase would read the log twice for the same final
     state (creates and deletes make the prior state irrelevant, and a
     pure-update key's snapshot row equals its last update). A
-    ``full: false`` sync tails from the log head (max ``event_id``),
-    recorded once at first start beside the checkpoint; in production
-    the log's own position API gives that head.
+    ``full: false`` sync tails from the log head (the frame's max
+    ``seq`` at first start), recorded once beside the checkpoint.
 
     ``progress`` (``make_progress(Settings.progress)``) is the ops
     mirror, published once per batch after every MERGE committed: the
-    max raw ``event_id`` per routed table when the log has one (consumed
-    or not, so ``check`` can compare it with the log head), else the max
-    normalized ``seq`` per normalized ``table``. Resume truth stays in
-    checkpointLocation; the store is never read on restart.
+    max ``seq`` per configured table over the batch's frame, consumed
+    kinds or not, so ``check`` can compare it with the log head. Resume
+    truth stays in checkpointLocation; the store is never read on restart.
     """
     if sink_format == "delta":
         from meilisync_spark.operators.table_format import _delta_table
 
         _delta_table()  # fail fast with install instructions, not mid-stream
-    normalize = normalizer or (
-        lambda raw, sync: normalize_events(raw, table=sync.table, pk_col=sync.pk)
-    )
+    tables = list(dict.fromkeys(settings.tables))
+    if not table_col and len(tables) > 1:
+        raise ValueError(f"syncs for tables {tables} need table_col to route the log")
+    if normalizer is None:
+        keys = {sync.table: sync.pk for sync in settings.syncs}
+        if len({(sync.table, sync.pk) for sync in settings.syncs}) > len(keys):
+            raise ValueError("the default normalizer keys each table by one pk")
+        table = F.col(table_col) if table_col else F.lit(tables[0])
+        pk = None
+        for t, key in keys.items():
+            pk = (F if pk is None else pk).when(table == t, F.col(key))
+        normalizer = lambda raw: classify_events(raw, table=table, pk_col=pk)  # noqa: E731
+
+    def frame(raw: DataFrame) -> DataFrame:
+        ev = normalizer(raw)
+        return ev if table_col else ev.withColumn("table", F.lit(tables[0]))
+
     extra = [pre_batch] if pre_batch is not None else []
     chains = [
         (sync, [*map(load_plugin, [*settings.plugins, *sync.plugins]), *extra])
@@ -311,8 +333,9 @@ def run_cdc_pipeline(
                 head_seq = json.load(fh)["head_seq"]
         elif not os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
             # fresh checkpoint: the current end of the log is the origin
-            # for every full:false sync (one column-pruned scan, once)
-            row = spark.read.parquet(events_path).agg(F.max("event_id")).first()
+            # for every full:false sync (one batch read, once)
+            log = _load_events(spark, spark.read, events_path, source_format, source_schema)
+            row = frame(log).agg(F.max("seq")).first()
             head_seq = row[0] if row[0] is not None else -1
             os.makedirs(checkpoint_dir, exist_ok=True)
             with open(marker, "w") as fh:
@@ -320,23 +343,15 @@ def run_cdc_pipeline(
         # else: pre-marker checkpoint mid-stream — keep legacy replay
         # behavior rather than guessing an origin after the fact
 
-    events = read_event_stream(
+    events = frame(read_event_stream(
         spark, events_path, max_files_per_trigger, source_format, source_schema
-    )
-    by_event_id = "event_id" in events.columns
-    if len(chains) == 1 and not table_col and not by_event_id:
-        # nothing in the batch needs a raw row (no routing, no raw
-        # position to publish): normalize once on the stream — planning
-        # a connector normalizer costs hundreds of ms of driver time,
-        # which a per-batch normalize would pay on every batch
-        events = normalize(events, settings.syncs[0])
-        normalize = lambda ev, sync: ev  # noqa: E731
+    ))
 
-    def apply_batch(raw: DataFrame, batch_id: int) -> None:
-        applied = []
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
         for sync, hooks in chains:
-            sub = raw.where(F.col(table_col) == sync.table) if table_col else raw
-            ev = normalize(sub, sync)
+            ev = batch.where((F.col("table") == sync.table) & F.col("op").isNotNull())
+            if sync.pk not in ENVELOPE_COLS and sync.pk in ev.columns:
+                ev = ev.withColumn("pk", F.col(sync.pk)).drop(sync.pk)
             index_path = os.path.join(settings.sink.index_path, sync.index_name)
             if not sync.full and head_seq is not None:
                 # full:false — tail only: history at/below the recorded
@@ -354,21 +369,13 @@ def run_cdc_pipeline(
                 index_path, sync.buckets if sync.buckets is not None else num_buckets
             )
             _apply_to_sink(spark, index_path, ev.drop("table"), sink_format, nb)
-            applied.append(ev)
         if progress is None:
             return
         # publish AFTER every sync's merge committed (same
         # apply-then-record order as the reference, main.py:110-120 — a
         # crash between the two re-applies, never skips)
-        if not by_event_id:
-            rows = [r for ev in applied
-                    for r in ev.groupBy("table").agg(F.max("seq")).collect()]
-        elif table_col:
-            rows = (raw.where(F.col(table_col).isin(settings.tables))
-                    .groupBy(table_col).agg(F.max("event_id")).collect())
-        else:
-            h = raw.agg(F.max("event_id")).first()[0]
-            rows = [(t, h) for t in settings.tables]
+        rows = (batch.where(F.col("table").isin(tables))
+                .groupBy("table").agg(F.max("seq")).collect())
         heads = {t: h for t, h in rows if h is not None}
         if heads:
             progress.set(**heads)

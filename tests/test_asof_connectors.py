@@ -169,7 +169,12 @@ def test_normalize_debezium_envelope(spark):
         (_dbz("c", None, {"id": 3, "name": "other"}, table="other"),),  # routed out (P3)
     ]
     df = spark.createDataFrame(rows, "value string")
-    out = normalize_debezium(df, payload_schema, pk="id", tables=["users"]).collect()
+    out = normalize_debezium(df, payload_schema, pk="id").collect()
+    # the other table's change comes out tagged with its own table:
+    # routing is the pipeline's slice, not the normalizer's
+    assert [(r.table, r.op, r.pk) for r in out if r.table != "users"] == [
+        ("other", "create", 3)]
+    out = [r for r in out if r.table == "users"]
     ops = sorted((r.op, r.pk) for r in out)
     assert ops == [("create", 1), ("create", 2), ("delete", 2), ("update", 1)]
     by_op = {(r.op, r.pk): r for r in out}
@@ -249,7 +254,10 @@ def test_normalize_mongo_change_stream_envelope(spark):
                    coll="other", i=6),),                          # routed out (P3)
     ]
     df = spark.createDataFrame(rows, "value string")
-    out = normalize_mongo_change_stream(df, payload_schema, tables=["users"]).collect()
+    out = normalize_mongo_change_stream(df, payload_schema).collect()
+    assert [(r.table, r.op, r.pk) for r in out if r.table != "users"] == [
+        ("other", "create", "c")]
+    out = [r for r in out if r.table == "users"]
     ops = sorted((r.op, r.pk) for r in out)
     assert ops == [("create", "a"), ("create", "b"), ("delete", "a"), ("update", "a")]
     by = {(r.op, r.pk): r for r in out}
@@ -331,7 +339,10 @@ def test_normalize_maxwell_envelope(spark):
         (_mxw("insert", {"id": 3, "name": "x"}, table="other"),),  # routed out
     ]
     df = spark.createDataFrame(rows, "value string")
-    out = normalize_maxwell(df, payload_schema, pk="id", tables=["users"]).collect()
+    out = normalize_maxwell(df, payload_schema, pk="id").collect()
+    assert [(r.table, r.op, r.pk) for r in out if r.table != "users"] == [
+        ("other", "create", 3)]
+    out = [r for r in out if r.table == "users"]
     ops = sorted((r.op, r.pk) for r in out)
     assert ops == [("create", 1), ("create", 2), ("delete", 2), ("update", 1)]
     by_op = {(r.op, r.pk): r for r in out}
@@ -415,7 +426,10 @@ def test_normalize_canal_envelope(spark):
         (_cnl("INSERT", [{"id": "7", "v": "0"}], table="other", mid=14),),
     ]
     df = spark.createDataFrame(rows, "value string")
-    out = normalize_canal(df, payload_schema, pk="id", tables=["users"]).collect()
+    out = normalize_canal(df, payload_schema, pk="id").collect()
+    assert [(r.table, r.op, r.pk) for r in out if r.table != "users"] == [
+        ("other", "create", 7)]
+    out = [r for r in out if r.table == "users"]
     assert sorted((r.op, r.pk) for r in out) == [
         ("create", 1), ("create", 2), ("delete", 2), ("update", 1)]
     by_seq = {r.seq: r for r in out}
@@ -504,10 +518,15 @@ def test_normalize_wal2json_envelope(spark):
         (_w2j([_w2j_row("insert", ["id", "v"], [3, 0.125])], nextlsn="0/10"),),
     ]
     df = spark.createDataFrame(rows, "value string")
-    out = normalize_wal2json(df, payload_schema, pk="id", tables=["users"]).collect()
+    out = normalize_wal2json(df, payload_schema, pk="id").collect()
+    lsn1 = (1 << 32) + 10  # "1/A"
+    # the other table's change comes out tagged with its own table at
+    # its own position; the users changes after it still parse
+    assert [(r.table, r.op, r.pk, r.seq) for r in out if r.table != "users"] == [
+        ("other", "create", 2, lsn1 * WAL2JSON_CHANGE_SHIFT + 1)]
+    out = [r for r in out if r.table == "users"]
     assert sorted((r.op, r.pk) for r in out) == [
         ("create", 1), ("create", 3), ("delete", 1), ("update", 1)]
-    lsn1 = (1 << 32) + 10  # "1/A"
     by_seq = {r.seq: r for r in out}
     assert by_seq[lsn1 * WAL2JSON_CHANGE_SHIFT + 0].payload.v == 1.5
     # the routed-out change still occupies position 1 — later changes
@@ -650,8 +669,10 @@ def test_normalize_wal2json_v2_envelope(spark):
         (_w2j_v2("C"),),  # commit — dropped
     ]
     df = spark.createDataFrame(rows, "value string")
-    out = normalize_wal2json_v2(df, payload_schema, pk="id",
-                                tables=["users"]).collect()
+    out = normalize_wal2json_v2(df, payload_schema, pk="id").collect()
+    assert [(r.table, r.op, r.pk) for r in out if r.table != "users"] == [
+        ("other", "create", 2)]
+    out = [r for r in out if r.table == "users"]
     assert sorted((r.op, r.pk) for r in out) == [
         ("create", 1), ("delete", 1), ("update", 1)]
     by_seq = {r.seq: r for r in out}

@@ -249,34 +249,168 @@ def test_cli_start_envelope_requires_schema(tmp_path):
     assert rc == 2
 
 
-def test_cli_start_envelope_conflicts_with_syncs_config(tmp_path, capsys):
-    """--envelope with a syncs-bearing settings file must error loudly
-    (rc 2), not silently read the drop dir as fixture events."""
-    from meilisync_spark.cli import main
+def _routed_changes(seed: int) -> list[tuple]:
+    """(ord, table, op, key, v) changes over two configured tables and
+    one unconfigured one (``audit``); users are keyed by ``id``, orders
+    by ``oid``. Keys repeat, so last-wins matters."""
+    import random
 
+    rng = random.Random(seed)
+    out = []
+    for i in range(90):
+        table = rng.choice(["users", "orders", "audit"])
+        out.append((i, table, rng.choice(["insert", "update", "delete"]),
+                    rng.randrange(8), round(rng.uniform(0, 100), 2)))
+    return out
+
+
+def _render_envelopes(changes: list[tuple], envelope: str) -> list[str]:
+    """One text line per Maxwell row change, or per wal2json v1
+    transaction of three changes (so transactions mix tables)."""
+    def row(table, key, v):
+        return {"oid": key, "v": v} if table == "orders" else {"id": key, "v": v}
+
+    if envelope == "maxwell":
+        return [json.dumps({"database": "app", "table": t, "type": op,
+                            "ts": 1700000000 + i, "position": f"master.000001:{i}",
+                            "data": row(t, k, v)}) for i, t, op, k, v in changes]
+    lines = []
+    for j in range(0, len(changes), 3):
+        tx = []
+        for _, t, op, k, v in changes[j:j + 3]:
+            r = row(t, k, v)
+            c = {"kind": op, "schema": "public", "table": t}
+            if op == "delete":
+                pk = next(iter(r))
+                c["oldkeys"] = {"keynames": [pk], "keytypes": ["bigint"],
+                                "keyvalues": [r[pk]]}
+            else:
+                c.update(columnnames=list(r), columntypes=["bigint", "double"],
+                         columnvalues=list(r.values()))
+            tx.append(c)
+        lines.append(json.dumps({"change": tx, "nextlsn": f"0/{16 * (j + 1):X}",
+                                 "timestamp": "2023-11-14 22:13:20+00"}))
+    return lines
+
+
+def _last_change_per_key(changes: list[tuple], table: str) -> set:
+    """DuckDB oracle: the last change per key of ``table``, deletes
+    removed."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.sql("CREATE TABLE ch (ord BIGINT, tbl VARCHAR, op VARCHAR, k BIGINT, v DOUBLE)")
+    con.executemany("INSERT INTO ch VALUES (?, ?, ?, ?, ?)", changes)
+    return set(con.sql(f"""
+        SELECT k, x.v FROM (
+            SELECT k, arg_max(struct_pack(op := op, v := v), ord) AS x
+            FROM ch WHERE tbl = '{table}' GROUP BY k
+        ) WHERE x.op <> 'delete'""").fetchall())
+
+
+@pytest.mark.parametrize("envelope", ["maxwell", "wal2json"])
+def test_cli_start_envelope_routes_syncs_config(spark, tmp_path, envelope):
+    """`start --config` over an envelope log routes each change to its
+    table's sync: two indexes, each keyed by its own sync's pk and equal
+    to a last-change-per-key oracle; the unconfigured table's changes
+    (inside the same wal2json transactions) reach no index and publish
+    no progress."""
+    changes = _routed_changes(7)
+    lines = _render_envelopes(changes, envelope)
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    half = len(lines) // 2
+    for i, part in enumerate([lines[:half], lines[half:]]):
+        path = drop / f"f{i}.jsonl"
+        path.write_text("\n".join(part) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    sink_root = tmp_path / "indexes"
+    progress = tmp_path / "progress.json"
     cfg = tmp_path / "config.yml"
     cfg.write_text("\n".join([
         "sink:",
-        f"  index_path: {tmp_path / 'indexes'}",
+        f"  index_path: {sink_root}",
+        "progress:",
+        "  type: file",
+        f"  path: {progress}",
         "sync:",
         "  - table: users",
-        "    pk: id",
+        "    full: true",
+        "  - table: orders",
+        "    pk: oid",
+        "    full: true",
+        "    index: orders_idx",
     ]))
     rc = main([
-        "start", "--events", str(tmp_path), "--checkpoint", str(tmp_path / "c"),
-        "--config", str(cfg),
-        "--source-format", "text", "--envelope", "maxwell",
-        "--payload-schema", "id long, v double",
+        "start", "--events", str(drop), "--checkpoint", str(tmp_path / "c"),
+        "--config", str(cfg), "--max-files", "1",
+        "--source-format", "text", "--envelope", envelope,
+        "--payload-schema", "id long, oid long, v double",
     ])
-    assert rc == 2
-    assert "cannot be combined" in capsys.readouterr().err
+    assert rc == 0
+    assert sorted(os.listdir(sink_root)) == ["orders_idx", "users"]
+    users = spark.read.parquet(str(sink_root / "users"))
+    orders = spark.read.parquet(str(sink_root / "orders_idx"))
+    assert {(r.pk, r.v) for r in users.collect()} == _last_change_per_key(changes, "users")
+    assert {(r.pk, r.v) for r in orders.collect()} == _last_change_per_key(changes, "orders")
+    assert "oid" not in orders.columns  # the sync's pk became the key
+    assert set(json.loads(progress.read_text())) == {"users", "orders"}
+
+
+def test_cli_start_envelope_tail_sync_records_head_in_seq_domain(spark, tmp_path):
+    """A `full: false` sync over a text envelope log records the log
+    head as the max normalized seq (a binlog position here), then
+    applies only the changes past it."""
+    changes = _routed_changes(11)
+    lines = _render_envelopes(changes, "maxwell")
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "f0.jsonl").write_text("\n".join(lines[:40]) + "\n")
+    os.utime(drop / "f0.jsonl", (1_700_000_000, 1_700_000_000))
+    sink_root = tmp_path / "indexes"
+    cfg = tmp_path / "config.yml"
+    cfg.write_text("\n".join([
+        "sink:",
+        f"  index_path: {sink_root}",
+        "sync:",
+        "  - table: users",
+        "    full: false",
+    ]))
+    argv = [
+        "start", "--events", str(drop), "--checkpoint", str(tmp_path / "c"),
+        "--config", str(cfg), "--source-format", "text", "--envelope", "maxwell",
+        "--payload-schema", "id long, oid long, v double",
+    ]
+    assert main(argv) == 0
+    with open(tmp_path / "c" / "head_marker.json") as fh:
+        # maxwell seq = binlog file number * 2^40 + offset
+        assert json.load(fh)["head_seq"] == (1 << 40) + 39
+    assert not os.path.exists(sink_root / "users")  # history skipped
+
+    (drop / "f1.jsonl").write_text("\n".join(lines[40:]) + "\n")
+    os.utime(drop / "f1.jsonl", (1_700_000_001, 1_700_000_001))
+    assert main(argv) == 0
+    got = {(r.pk, r.v) for r in spark.read.parquet(str(sink_root / "users")).collect()}
+    assert got == _last_change_per_key(changes[40:], "users")
+
+
+@pytest.mark.parametrize("fmt", ["json", "csv"])
+def test_cli_start_rejects_schemaless_source_formats(tmp_path, capsys, fmt):
+    """json/csv logs need a schema the CLI cannot pass: argparse refuses
+    them before Spark starts (the API keeps them, with a schema)."""
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "start", "--events", str(tmp_path), "--index", str(tmp_path / "i"),
+            "--checkpoint", str(tmp_path / "c"), "--source-format", fmt,
+        ])
+    assert exc.value.code == 2
+    assert "invalid choice" in capsys.readouterr().err
 
 
 def test_cli_start_buckets_conflicts_with_delta(tmp_path, capsys):
     """--buckets with --sink-format delta must error loudly (rc 2) —
     Delta manages its own layout, and silently dropping the flag would
-    let a user believe the table is pk-bucketed (fail-loud convention,
-    same as --envelope + syncs config)."""
+    let a user believe the table is pk-bucketed (fail-loud convention)."""
     rc = main([
         "start", "--events", str(tmp_path), "--index", str(tmp_path / "i"),
         "--checkpoint", str(tmp_path / "c"),

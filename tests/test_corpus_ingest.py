@@ -504,3 +504,37 @@ def test_compact_band_index_then_near_dedup_still_works(spark, tmp_path):
     assert sorted(
         r.doc_id for r in bands.select("doc_id").distinct().collect()
     ) == [1, 2, 3]
+
+
+def test_restart_over_single_file_source_keeps_index(spark, tmp_path):
+    """A single-file source is staged under a directory named by its
+    path, so a second run over the same checkpoint resumes (nothing new
+    to read) instead of failing on a new basePath, and leaves the index
+    as it was."""
+    import shutil
+
+    src = str(tmp_path / "docs.parquet")
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", src)
+    idx, ckpt = str(tmp_path / "corpus"), str(tmp_path / "ckpt")
+    cols = ["doc_id", "content_hash"]
+    run_corpus_ingest(spark, src, idx, ckpt)
+    before = sorted(spark.read.parquet(idx).select(*cols).collect())
+    assert before
+    run_corpus_ingest(spark, src, idx, ckpt)
+    assert sorted(spark.read.parquet(idx).select(*cols).collect()) == before
+
+
+def test_absent_index_read_emits_no_future_warning(spark, tmp_path):
+    """Reading an absent or marker-only index is "no index yet" without
+    touching a deprecated error accessor."""
+    import warnings
+
+    from meilisync_spark.streaming.corpus_ingest import _read_parquet_if_exists
+
+    markers = tmp_path / "markers"
+    markers.mkdir()
+    (markers / "_SUCCESS").write_text("")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert _read_parquet_if_exists(spark, str(tmp_path / "absent")) is None
+        assert _read_parquet_if_exists(spark, str(markers)) is None

@@ -1293,3 +1293,37 @@ def test_delete_everything_crash_before_drop_replays(spark, tmp_path, monkeypatc
     one = spark.createDataFrame([(0, 20, "create", 1.0)], schema)
     apply_changes_bucketed(spark, index, one, pk="pk", num_buckets=4)
     assert {r.pk for r in read_buckets(spark, index).collect()} == {0}
+
+
+def test_pipeline_normalizes_once_per_query(spark, tmp_path):
+    """The frame is planned once on the stream: over a 3-file log with
+    one file per batch, the normalizer is called once however many
+    batches run, and the index equals the default normalizer's."""
+    import duckdb
+
+    from meilisync_spark.sources.events import classify_events
+
+    drops = tmp_path / "drops"
+    drops.mkdir()
+    con = duckdb.connect()
+    for i in range(3):
+        path = drops / f"part-{i}.parquet"
+        con.sql(f"COPY (SELECT * FROM '{SF_SMOKE}/events.parquet' "
+                f"WHERE event_id % 3 = {i}) TO '{path}' (FORMAT PARQUET)")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    calls = []
+
+    def counting(raw):
+        calls.append(1)
+        return classify_events(raw, table="users", pk_col="user_id")
+
+    index, plain = str(tmp_path / "index"), str(tmp_path / "plain")
+    kw = dict(available_now=True, max_files_per_trigger=1, num_buckets=N_BUCKETS)
+    ckpt = tmp_path / "ckpt"
+    run_cdc_pipeline(spark, str(drops), Settings.for_index(index), str(ckpt),
+                     normalizer=counting, **kw)
+    assert len([c for c in os.listdir(ckpt / "commits") if c.isdigit()]) == 3
+    assert len(calls) == 1
+    run_cdc_pipeline(spark, str(drops), Settings.for_index(plain),
+                     str(tmp_path / "ckpt_p"), **kw)
+    assert _state(spark, index) == _state(spark, plain)

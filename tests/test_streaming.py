@@ -260,8 +260,8 @@ def test_maxwell_drop_dir_tails_end_to_end(spark, tmp_path):
         mxw(3, "update", 1, 1.5),
     ]) + "\n")
 
-    def norm(df, sync):
-        ev = normalize_maxwell(df, payload_schema, pk=sync.pk)
+    def norm(df):
+        ev = normalize_maxwell(df, payload_schema, pk="id")
         return ev.select("seq", "table", "op", "pk", F.col("payload.v").alias("v"))
 
     index = str(tmp_path / "index")

@@ -81,25 +81,24 @@ def main() -> None:
     for lf in logs:
         with open(lf) as fh:
             lines.extend(fh)
-    if True:
-        for line in lines:
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if ev.get("Event") == "SparkListenerJobStart":
-                props = ev.get("Properties") or {}
-                jobs.append({
-                    "id": ev["Job ID"],
-                    "t0": ev["Submission Time"],
-                    "desc": props.get("spark.job.description", ""),
-                    "site": ev.get("Stage Infos", [{}])[0].get("Stage Name", "")[:70]
-                    if ev.get("Stage Infos") else "",
-                })
-            elif ev.get("Event") == "SparkListenerJobEnd":
-                for j in jobs:
-                    if j["id"] == ev["Job ID"]:
-                        j["t1"] = ev["Completion Time"]
+    for line in lines:
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if ev.get("Event") == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs.append({
+                "id": ev["Job ID"],
+                "t0": ev["Submission Time"],
+                "desc": props.get("spark.job.description", ""),
+                "site": ev.get("Stage Infos", [{}])[0].get("Stage Name", "")[:70]
+                if ev.get("Stage Infos") else "",
+            })
+        elif ev.get("Event") == "SparkListenerJobEnd":
+            for j in jobs:
+                if j["id"] == ev["Job ID"]:
+                    j["t1"] = ev["Completion Time"]
 
     for name in names:
         a, b, wall = spans[name]
