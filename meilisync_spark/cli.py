@@ -32,11 +32,34 @@ from meilisync_spark.config import Settings, load_plugin
 from meilisync_spark.operators.check import count_check, read_index
 from meilisync_spark.operators.refresh import refresh_data
 from meilisync_spark.session import get_spark
+from meilisync_spark.sources import cdc_connectors as _cc
 from meilisync_spark.sources.parquet import load_path
 from meilisync_spark.streaming.pipeline import CatchUpTimeout, run_cdc_pipeline
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from meilisync_spark.pin import SER as _SER
+
+# --envelope NAME → its connector normalizer; wal2json reads format
+# version 1 or 2 from each message
+ENVELOPES = {
+    "maxwell": _cc.normalize_maxwell,
+    "canal": _cc.normalize_canal,
+    "debezium": _cc.normalize_debezium,
+    "mongo": _cc.normalize_mongo_change_stream,
+    "wal2json": _cc.normalize_wal2json,
+}
+
+
+def envelope_normalizer(envelope: str, payload_schema: str, pk: str):
+    """``start --envelope``'s normalizer: the connector's frame with its
+    payload flattened to columns (the pk field is the frame's ``pk``)."""
+    pschema = T.StructType.fromDDL(payload_schema)
+    payload_cols = [f"payload.{f.name}" for f in pschema.fields if f.name != pk]
+    norm_fn = ENVELOPES[envelope]
+    kw = {} if envelope == "mongo" else {"pk": pk}
+    return lambda df: norm_fn(df, pschema, **kw).select(
+        "seq", "table", "op", "pk", *payload_cols)
 
 
 def _settings(args: argparse.Namespace) -> Settings:
@@ -96,33 +119,11 @@ def _start(args: argparse.Namespace) -> int:
     normalizer = None
     if envelope:
         # raw-envelope drop-dir mode: the connector normalizer replaces
-        # classify_events and the payload columns come from the user's
-        # DDL schema (sources/cdc_connectors.py)
-        from pyspark.sql import types as _T
-
-        from meilisync_spark.sources import cdc_connectors as _cc
-
-        norm_fn = {
-            "maxwell": _cc.normalize_maxwell,
-            "canal": _cc.normalize_canal,
-            "debezium": _cc.normalize_debezium,
-            "mongo": _cc.normalize_mongo_change_stream,
-            # auto-dispatches v1 (change-array) vs v2 (action-per-change)
-            # per row, so a slot upgrade mid-retention keeps parsing
-            "wal2json": _cc.normalize_wal2json_auto,
-            "wal2json_v1": _cc.normalize_wal2json,
-            "wal2json_v2": _cc.normalize_wal2json_v2,
-        }[envelope]
+        # classify_events, payload columns from the user's DDL schema
         if not args.payload_schema:
             print("--envelope needs --payload-schema (DDL, e.g. 'id long, v double')")
             return 2
-        pschema = _T.StructType.fromDDL(args.payload_schema)
-        payload_cols = [f.name for f in pschema.fields if f.name != args.envelope_pk]
-        kw = {} if norm_fn is _cc.normalize_mongo_change_stream else {"pk": args.envelope_pk}
-
-        def normalizer(df):
-            return norm_fn(df, pschema, **kw).select(
-                "seq", "table", "op", "pk", *[f"payload.{c}" for c in payload_cols])
+        normalizer = envelope_normalizer(envelope, args.payload_schema, args.envelope_pk)
 
     if sink_format == "delta" and args.buckets:
         # fail loud: Delta manages its own file layout (MERGE rewrites
@@ -684,12 +685,10 @@ def build_parser() -> argparse.ArgumentParser:
                     help="index layout: parquet (bucketed/flat per --buckets) "
                          "or delta (transactional MERGE INTO per batch; needs "
                          "delta-spark on the session)")
-    st.add_argument("--envelope",
-                    choices=["maxwell", "canal", "debezium", "mongo",
-                             "wal2json", "wal2json_v1", "wal2json_v2"],
+    st.add_argument("--envelope", choices=list(ENVELOPES),
                     help="normalize raw CDC envelopes instead of fixture events "
-                         "(use with --source-format text; wal2json "
-                         "auto-detects format v1 vs v2 per row); with "
+                         "(use with --source-format text; wal2json reads "
+                         "format v1 or v2 from each message); with "
                          "--config each sync takes its table's changes")
     st.add_argument("--payload-schema", dest="payload_schema",
                     help="DDL row schema for --envelope, e.g. 'id long, v double'")

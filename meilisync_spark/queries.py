@@ -211,12 +211,12 @@ def q_wal2json_roundtrip(spark, sf_dir):
 @register(
     "wal2json_v2_roundtrip",
     _wal2json_v2_rt_sql(),
-    doc="Mixed wal2json v1+v2 roundtrip through the per-row format "
-        "dispatch (normalize_wal2json_auto): even batches rendered as "
-        "v1 transaction messages, odd as per-change v2 messages "
-        "(action/columns[{name,type,value}]/identity deletes, "
-        "per-change lsn) — certifies the v2 parser, the auto dispatch, "
-        "and the shared lsn*2^12 seq domain in one hash.",
+    doc="Mixed wal2json v1+v2 roundtrip through normalize_wal2json, "
+        "which reads the version from each message: even batches "
+        "rendered as v1 transaction messages, odd as per-change v2 "
+        "messages (action/columns[{name,type,value}]/identity deletes, "
+        "per-change lsn) — certifies the v2 branch, the per-message "
+        "version choice, and the shared lsn*2^12 seq domain in one hash.",
 )
 def q_wal2json_v2_roundtrip(spark, sf_dir):
     return _wal2json_v2_rt(_t(spark, sf_dir, "events"))

@@ -11,18 +11,33 @@ postgres.py:89-163, mongo.py:49-74). The Spark-native equivalents:
   concurrently; OFFSET pagination is O(n²) server work and serial).
   The ``fields`` projection happens source-side via ``dbtable`` as a
   subquery — same pushdown the reference builds into its SELECT list.
-- **CDC stream** → Kafka topics carrying Debezium envelopes
-  (``spark.readStream.format("kafka")``), the standard production
-  transport for binlog/wal2json; :func:`normalize_debezium` maps the
-  envelope onto the engine's normalized event schema (op
-  classification P4, op-kind filter P5, table routing P3 — same
-  contract as sources/events.py, so everything downstream — compaction,
-  MERGE apply, streaming shell — is transport-agnostic).
+- **CDC stream** → Kafka topics (``spark.readStream.format("kafka")``)
+  or a text drop-dir carrying source envelopes: Debezium, Maxwell,
+  Canal, Mongo change streams, wal2json (format v1 or v2).
 
-This container ships neither JDBC drivers nor Kafka jars, so the
-builders return (format, options) pairs and ``load()`` is a thin
-wrapper the tests don't execute; ``normalize_debezium`` is a pure
-DataFrame transform and IS tested hermetically on literal JSON.
+Every envelope normalizer is one skeleton (:func:`_normalize`), the
+same contract as sources/events.py, so everything downstream —
+routing, compaction, MERGE apply, streaming shell — is
+transport-agnostic:
+
+- ``from_json(value)`` runs once per message, bound to a lambda
+  variable (:func:`_bind`); a malformed message yields no change.
+- the format's ``build(v, offset)`` returns the message's changes as
+  ``array<struct<seq, ts, table, op, pk, payload>>`` — one element for
+  a one-change format, one per row for canal and wal2json v1 (numbered
+  by ``transform``'s index). ``offset`` is the Kafka offset, the seq
+  fallback every format shares; ``op`` comes from an op map
+  (:func:`_op_from_map`, P4), NULL for unconsumed kinds;
+  ``msg_seq·shift + pos`` packs go through :func:`_pack`, which fails
+  the batch instead of tying seqs; stringly rows are re-typed by
+  :func:`_typed`.
+- one ``inline``, then one ``op IS NOT NULL`` filter (P5). ``table`` is
+  each change's source table; routing (P3) is the pipeline's slice.
+
+JDBC drivers and the Kafka jars are not dependencies of this package,
+so the builders return (format, options) pairs and ``load()`` is a
+thin wrapper the tests don't execute; the normalizers are pure
+DataFrame transforms, tested hermetically on literal JSON.
 """
 
 from __future__ import annotations
@@ -115,6 +130,78 @@ def kafka_cdc_stream(spark: SparkSession, brokers: str, topics: str, **kw) -> Da
     return spark.readStream.format(fmt).options(**opts).load()
 
 
+# ---------------------------------------------------------------------------
+# The envelope skeleton: one path from raw message to normalized change
+# ---------------------------------------------------------------------------
+
+_CORRUPT = "_corrupt_record"
+
+
+def _bind(value: Column, fn) -> Column:
+    """``fn(value)`` with ``value`` evaluated once per row: a one-element
+    ``transform`` binds it to a lambda variable. Referenced field by
+    field instead, Catalyst's per-field schema pruning splits a
+    ``from_json`` into one parse per field, and alias substitution
+    copies the parse into pushed-down filters
+    (plans/r13/maxwell_roundtrip_before.txt)."""
+    return F.element_at(F.transform(F.array(value), fn), 1)
+
+
+def _normalize(df: DataFrame, value_schema: T.StructType, build) -> DataFrame:
+    """The one envelope path: parse ``value`` once, ``build(v, offset)``
+    the message's changes, ``inline`` them, drop unconsumed kinds (P5).
+    ``offset`` is the Kafka partition offset when the frame has one,
+    else a NULL literal that the optimizer folds out of the seq
+    ``coalesce``. A malformed message yields no change: the parse keeps
+    the fields it read before the error (a truncated line would carry
+    its op without its pk), so the corrupt-record marker drops it."""
+    offset = F.col("offset") if "offset" in df.columns else F.lit(None).cast("long")
+    schema = T.StructType(value_schema.fields + [T.StructField(_CORRUPT, T.StringType())])
+    parsed = F.from_json(F.col("value").cast("string"), schema,
+                         {"columnNameOfCorruptRecord": _CORRUPT})
+    changes = _bind(parsed, lambda v: F.when(
+        v.getField(_CORRUPT).isNull(), build(v, offset)))
+    return df.select(F.inline(changes)).where(F.col("op").isNotNull())
+
+
+def _change(seq: Column, ts: Column, table: Column, op: Column, pk: Column,
+            payload: Column) -> Column:
+    """One normalized change; NULL for an unconsumed kind, so its seq
+    pack and payload never evaluate (and never raise)."""
+    return F.when(op.isNotNull(), F.struct(
+        seq.alias("seq"), ts.alias("ts"), table.alias("table"), op.alias("op"),
+        pk.alias("pk"), payload.alias("payload")))
+
+
+def _op_from_map(op_src: Column, mapping: dict[str, str]) -> Column:
+    """Source op token → EventType via a when-fold (NULL for anything
+    not in the map — the P5 kind filter)."""
+    op: Column = F.lit(None).cast("string")
+    for src, dst in reversed(list(mapping.items())):
+        op = F.when(op_src == src, F.lit(dst)).otherwise(op)
+    return op
+
+
+def _pack(msg_seq: Column, pos: Column, shift: int, what: str) -> Column:
+    """``msg_seq·shift + pos``, failing the batch when ``pos ≥ shift``:
+    the position would alias into the next message's range, and tied
+    seqs make last-wins compaction (A5) pick an arbitrary winner."""
+    checked = F.when(pos < shift, pos).otherwise(F.raise_error(F.format_string(
+        f"{what} %s >= {shift}: the seq pack cannot totally order it",
+        pos.cast("string"))).cast("long"))
+    return msg_seq * F.lit(shift) + checked
+
+
+def _typed(row_map: Column, payload_schema: T.StructType, fn) -> Column:
+    """``fn(payload)`` for a stringly ``map<string,string>`` row (canal,
+    wal2json): the map is bound once and each field of
+    ``payload_schema`` cast out of it — Catalyst casts, per row, no
+    UDF."""
+    return _bind(row_map, lambda m: fn(F.struct(*[
+        F.element_at(m, f.name).cast(f.dataType).alias(f.name)
+        for f in payload_schema.fields])))
+
+
 def debezium_value_schema(payload_schema: T.StructType) -> T.StructType:
     """Schema of a Debezium message value for a table whose row type is
     ``payload_schema``. ``source.lsn`` (postgres) / ``source.pos``
@@ -153,47 +240,109 @@ def normalize_debezium(
     *,
     pk: str = "id",
 ) -> DataFrame:
-    """Kafka Debezium envelope → the engine's normalized event schema
-    ``(seq, ts, table, op, pk, payload struct)``.
+    """Kafka Debezium envelope → the normalized change frame.
 
-    - op classification (P4): Debezium c/r/u/d → create/update/delete;
-      unknown kinds dropped (P5) — note the engine *continues* past
-      them rather than aborting the batch (reference quirk Q2,
+    - op (P4): c/r/u/d → create/update/delete; unknown kinds dropped
+      (P5) and the engine continues past them (reference quirk Q2,
       postgres.py:96-98, deliberately not replicated).
     - payload: ``after`` for create/update, ``before`` for delete (the
       delete path only needs the pk — meilisync/meili.py:136-137).
-    - routing (P3): ``table`` is ``source.table``; the pipeline routes
-      each sync its table's rows (≡ binlog ``only_tables``,
-      mysql.py:92).
-    - ``seq`` (the last-wins total order, A5): the source's log
-      position — postgres ``source.lsn``, else mysql ``source.pos``,
-      else the Kafka partition offset when the frame carries one
-      (Debezium keys messages by pk, so a pk's events share a
-      partition and the offset totally orders them), else ``ts_ms``.
-      ts_ms alone is millisecond-granular and NOT unique per pk — two
-      same-key changes in one millisecond would make last-wins
-      arbitrary.
+    - ``table``: ``source.table``.
+    - ``seq``: postgres ``source.lsn``, else mysql ``source.pos``, else
+      the Kafka offset (Debezium keys messages by pk, so a pk's events
+      share a partition), else ``ts_ms`` — millisecond-granular and not
+      unique per pk, so only a last resort.
     """
-    v = F.from_json(F.col("value").cast("string"), debezium_value_schema(payload_schema))
-    p = v.getField("payload")
-    op_src = p.getField("op")
-    op: Column = F.lit(None).cast("string")
-    for src, dst in reversed(list(DEBEZIUM_OP_MAP.items())):
-        op = F.when(op_src == src, F.lit(dst)).otherwise(op)
-    payload = F.when(op_src == "d", p.getField("before")).otherwise(p.getField("after"))
-    source = p.getField("source")
-    seq_candidates = [source.getField("lsn"), source.getField("pos")]
-    if "offset" in df.columns:  # kafka frame
-        seq_candidates.append(F.col("offset"))
-    seq_candidates.append(p.getField("ts_ms"))
-    return df.select(
-        F.coalesce(*seq_candidates).alias("seq"),
-        F.timestamp_millis(p.getField("ts_ms")).alias("ts"),
-        source.getField("table").alias("table"),
-        op.alias("op"),
-        payload.getField(pk).alias("pk"),
-        payload.alias("payload"),
-    ).where(F.col("op").isNotNull())
+    def build(v, offset):
+        p = v.getField("payload")
+        src, op_src = p.getField("source"), p.getField("op")
+        payload = F.when(op_src == "d", p.getField("before")).otherwise(p.getField("after"))
+        return F.array(_change(
+            F.coalesce(src.getField("lsn"), src.getField("pos"), offset, p.getField("ts_ms")),
+            F.timestamp_millis(p.getField("ts_ms")), src.getField("table"),
+            _op_from_map(op_src, DEBEZIUM_OP_MAP), payload.getField(pk), payload))
+
+    return _normalize(df, debezium_value_schema(payload_schema), build)
+
+
+# Mongo change-stream operationType → EventType: exactly the three ops
+# the reference's $match pipeline admits (meilisync/source/mongo.py:44-50)
+MONGO_OP_MAP: dict[str, str] = {
+    "insert": "create",
+    "update": "update",
+    "delete": "delete",
+}
+
+# clusterTime packs as t·2^20 + i; the increment i is a uint32, so a
+# second with ≥ 2^20 operations fails the batch rather than tie seqs
+MONGO_INCREMENT_SHIFT = 1 << 20
+
+
+def mongo_change_stream_schema(payload_schema: T.StructType) -> T.StructType:
+    """Schema of a MongoDB change-stream event document (the shape the
+    reference's ``db.watch`` yields, meilisync/source/mongo.py:55-74).
+    ``updateDescription.updatedFields`` reuses ``payload_schema`` —
+    absent fields decode as NULL, which is exactly the sparse-update
+    payload the partial MERGE expects (Q4/S10)."""
+    return T.StructType(
+        [
+            T.StructField("operationType", T.StringType()),
+            T.StructField(
+                "clusterTime", T.StructType([T.StructField("t", T.LongType()),
+                                             T.StructField("i", T.LongType())])
+            ),
+            T.StructField(
+                "ns",
+                T.StructType(
+                    [T.StructField("db", T.StringType()),
+                     T.StructField("coll", T.StringType())]
+                ),
+            ),
+            T.StructField(
+                "documentKey", T.StructType([T.StructField("_id", T.StringType())])
+            ),
+            T.StructField("fullDocument", payload_schema),
+            T.StructField(
+                "updateDescription",
+                T.StructType([T.StructField("updatedFields", payload_schema)]),
+            ),
+        ]
+    )
+
+
+def normalize_mongo_change_stream(
+    df: DataFrame,
+    payload_schema: T.StructType,
+) -> DataFrame:
+    """Mongo change-stream envelope → the normalized change frame
+    (reference meilisync/source/mongo.py:55-74).
+
+    - op (P4): insert/update/delete; other operationTypes (drop,
+      rename, invalidate) dropped, as the reference's ``$match`` does
+      server-side (mongo.py:44).
+    - payload: ``fullDocument`` for insert,
+      ``updateDescription.updatedFields`` for update (the sparse Q4
+      payload, mongo.py:62-64), NULL for delete (only the pk,
+      mongo.py:65-67).
+    - pk: ``documentKey._id`` stringified on every op (F4, mongo.py:68).
+    - ``table``: ``ns.coll``.
+    - ``seq``: clusterTime ``t·2^20 + i`` (raising when ``i ≥ 2^20``),
+      else the Kafka offset.
+    """
+    def build(v, offset):
+        ct, op_src = v.getField("clusterTime"), v.getField("operationType")
+        payload = F.when(
+            op_src == "update", v.getField("updateDescription").getField("updatedFields")
+        ).when(op_src == "insert", v.getField("fullDocument"))
+        return F.array(_change(
+            F.coalesce(_pack(ct.getField("t"), F.coalesce(ct.getField("i"), F.lit(0)),
+                             MONGO_INCREMENT_SHIFT, "mongo clusterTime increment"),
+                       offset),
+            F.timestamp_seconds(ct.getField("t")), v.getField("ns").getField("coll"),
+            _op_from_map(op_src, MONGO_OP_MAP),
+            v.getField("documentKey").getField("_id").cast("string"), payload))
+
+    return _normalize(df, mongo_change_stream_schema(payload_schema), build)
 
 
 # Maxwell type → EventType. bootstrap-insert is Maxwell's snapshot
@@ -241,87 +390,37 @@ def normalize_maxwell(
     *,
     pk: str = "id",
 ) -> DataFrame:
-    """Maxwell envelope → the engine's normalized event schema
-    ``(seq, ts, table, op, pk, payload struct)`` — the same contract as
-    :func:`normalize_debezium`, so every downstream operator (routing
-    P3, compaction A5, MERGE apply S9-S11) is transport-agnostic.
-    Maxwell is the lightweight mysql-binlog-to-JSON daemon many shops
-    run instead of Debezium; the reference reads the binlog directly
-    (meilisync/source/mysql.py:81-126) — this is that stream one hop
-    downstream.
+    """Maxwell envelope (the mysql binlog → JSON daemon; the reference
+    reads the binlog itself, meilisync/source/mysql.py:81-126) → the
+    normalized change frame.
 
-    - op classification (P4): insert/bootstrap-insert/update/delete →
-      create/update/delete; other types (``table-create`` DDL,
-      ``bootstrap-start/complete`` markers) are dropped (P5), and the
-      engine continues past them (quirk Q2 not replicated).
-    - payload: ``data`` on every kind — Maxwell's delete carries the
-      full deleted row there (only the pk is consumed downstream,
-      meilisync/meili.py:136-137).
-    - ``seq`` (last-wins total order, A5): the binlog coordinate parsed
-      from ``position`` — ``file_number·2^40 + offset`` (the shift
-      clears even an oversized single-transaction binlog file, so the
-      pack is collision-free and totally ordered across file rolls);
-      falling back to the Kafka partition offset, then ``xid``, then
-      ``ts``. The Kafka offset outranks xid because a topic where only
-      SOME messages carry ``position`` (e.g. bootstrap-insert rows)
-      must keep its fallback rows in ONE monotone domain — the offset
-      is monotone for every message on the partition, while xid
-      interleaves a different counter. Note the positioned/unpositioned
-      domains themselves still differ: a deployment should be
-      homogeneous (either all rows carry ``position`` — normal Maxwell
-      — or none do); mixed streams order coherently only within each
-      domain. ts alone is second-granular — never sufficient for
-      same-pk ordering, same reasoning as normalize_debezium's ts_ms
-      fallback.
+    - op (P4): insert/bootstrap-insert/update/delete; other types
+      (``table-create`` DDL, ``bootstrap-start/complete`` markers)
+      dropped (P5).
+    - payload: ``data`` on every kind (a delete carries the deleted
+      row; only its pk is consumed, meilisync/meili.py:136-137).
+    - ``seq``: the binlog coordinate parsed from ``position`` as
+      ``file_number·2^40 + offset``, else the Kafka offset, else
+      ``xid``, else second-granular ``ts``. The offset outranks xid so
+      a topic where only some messages carry ``position`` keeps its
+      fallback rows in one monotone domain; positioned and
+      unpositioned rows still order coherently only within their own
+      domain, so a deployment should be homogeneous.
     """
-    # The parsed envelope is bound ONCE through a one-element
-    # ``transform`` lambda (the quality_keep/shingles_col idiom, round
-    # 13): referencing ``from_json(value).field`` per output column
-    # lets Catalyst's per-field schema pruning split the parse into
-    # ~8 separate from_json evaluations per row, and alias
-    # substitution then copies the whole render+parse chain into the
-    # pushed-down op filter — the composed roundtrip row ran the
-    # codec serially 3× below its spread exchange
-    # (plans/r13/maxwell_roundtrip_before.txt). With the lambda
-    # binding every output field reads one lambda variable: one parse
-    # per row by construction, and the substituted filter carries one
-    # parse, not three.
-    parsed = F.from_json(
-        F.col("value").cast("string"), maxwell_value_schema(payload_schema)
-    )
-    kafka_offset = F.col("offset") if "offset" in df.columns else None
-
-    def _build(v):
-        op: Column = F.lit(None).cast("string")
-        for src, dst in reversed(list(MAXWELL_OP_MAP.items())):
-            op = F.when(v.getField("type") == src, F.lit(dst)).otherwise(op)
+    def build(v, offset):
         pos = v.getField("position")
         file_num = F.regexp_extract(pos, r"\.(\d+):", 1)
-        offset = F.regexp_extract(pos, r":(\d+)$", 1)
-        pos_seq = F.when(
-            (file_num != "") & (offset != ""),
-            file_num.cast("long") * F.lit(MAXWELL_POS_FILE_SHIFT)
-            + offset.cast("long"),
-        )
-        seq_candidates = [pos_seq]
-        if kafka_offset is not None:  # kafka frame
-            seq_candidates.append(kafka_offset)
-        seq_candidates.extend([v.getField("xid"), v.getField("ts")])
-        return F.struct(
-            F.coalesce(*seq_candidates).alias("seq"),
-            F.timestamp_seconds(v.getField("ts")).alias("ts"),
-            v.getField("table").alias("table"),
-            op.alias("op"),
-            v.getField("data").getField(pk).alias("pk"),
-            v.getField("data").alias("payload"),
-        )
+        file_off = F.regexp_extract(pos, r":(\d+)$", 1)
+        pos_seq = F.when((file_num != "") & (file_off != ""), _pack(
+            file_num.cast("long"), file_off.cast("long"), MAXWELL_POS_FILE_SHIFT,
+            "maxwell binlog offset"))
+        data = v.getField("data")
+        return F.array(_change(
+            F.coalesce(pos_seq, offset, v.getField("xid"), v.getField("ts")),
+            F.timestamp_seconds(v.getField("ts")), v.getField("table"),
+            _op_from_map(v.getField("type"), MAXWELL_OP_MAP), data.getField(pk), data))
 
-    bound = F.element_at(F.transform(F.array(parsed), _build), 1)
-    return (
-        df.select(bound.alias("_norm"))
-        .select("_norm.*")
-        .where(F.col("op").isNotNull())
-    )
+    return _normalize(df, maxwell_value_schema(payload_schema), build)
 
 
 # Canal flat-message type → EventType (type is uppercase in canal-json)
@@ -365,113 +464,61 @@ def normalize_canal(
     *,
     pk: str = "id",
 ) -> DataFrame:
-    """Canal flat-message envelope → the engine's normalized event
-    schema ``(seq, ts, table, op, pk, payload struct)``.
+    """Canal flat-message envelope → the normalized change frame.
 
-    Two format quirks handled here and nowhere downstream:
-
-    - **batched rows**: one message carries an array of rows, so the
-      message is ``posexplode``d and the row's array position joins the
-      batch id in the total order: ``seq = id·2^20 + pos`` (statement
-      row counts are far below 2^20; the pack preserves binlog order
-      across and within batches). Kafka offset replaces a missing
-      ``id`` with the same pos pack.
-    - **stringly values**: canal-json renders every column value as a
-      string; the typed payload is rebuilt by casting each field of the
-      caller's ``payload_schema`` out of the row map — Catalyst casts,
-      per row, no UDF.
-
-    DDL messages (``isDdl: true``) and non-DML types are dropped (P5);
-    op classification (P4) is INSERT/UPDATE/DELETE → create/update/
-    delete; ``es`` (binlog event time) is the event timestamp — ``ts``
-    is the daemon's processing time, the wrong clock for event-time
-    semantics (T6).
+    - batched rows: one message carries an array of rows; row ``i``
+      gets ``seq = id·2^20 + i`` (the Kafka offset replaces a missing
+      ``id``), raising when a message holds ≥ 2^20 rows.
+    - stringly values: every column value is a string, re-typed
+      against ``payload_schema``.
+    - op (P4): INSERT/UPDATE/DELETE; DDL messages (``isDdl``) and other
+      types dropped (P5).
+    - ``ts``: ``es``, the binlog event time — ``ts`` is the daemon's
+      processing time, the wrong clock for event time (T6).
     """
-    # Parsed envelope bound once through a one-element transform (round
-    # 13, same idiom as normalize_maxwell): per-field references
-    # otherwise split the parse into ~6 pruned from_json evaluations
-    # per message, and the DML filter's alias substitution duplicated
-    # the parse again. The keep-flag rides the bound struct so the
-    # filter reads a struct field of the single parse.
-    parsed = F.from_json(F.col("value").cast("string"), canal_value_schema())
-    kafka_offset = F.col("offset") if "offset" in df.columns else None
+    def build(v, offset):
+        op = F.when(~F.coalesce(v.getField("isDdl"), F.lit(False)),
+                    _op_from_map(v.getField("type"), CANAL_OP_MAP))
+        msg_seq = F.coalesce(v.getField("id"), offset)
+        return F.transform(v.getField("data"), lambda row, i: _typed(
+            row, payload_schema, lambda p: _change(
+                _pack(msg_seq, i, CANAL_BATCH_SHIFT, "canal message has a row at position"),
+                F.timestamp_millis(v.getField("es")), v.getField("table"), op,
+                p.getField(pk), p)))
 
-    def _build(v):
-        op_src = v.getField("type")
-        op: Column = F.lit(None).cast("string")
-        for src, dst in reversed(list(CANAL_OP_MAP.items())):
-            op = F.when(op_src == src, F.lit(dst)).otherwise(op)
-        seq_base_candidates = [v.getField("id")]
-        if kafka_offset is not None:  # kafka frame
-            seq_base_candidates.append(kafka_offset)
-        return F.struct(
-            F.coalesce(*seq_base_candidates).alias("_msg_seq"),
-            F.timestamp_millis(v.getField("es")).alias("ts"),
-            v.getField("table").alias("table"),
-            op.alias("op"),
-            (
-                op.isNotNull()
-                & ~F.coalesce(v.getField("isDdl"), F.lit(False))
-            ).alias("_keep"),
-            v.getField("data").alias("_data"),
-        )
-
-    bound = F.element_at(F.transform(F.array(parsed), _build), 1)
-    exploded = (
-        df.select(bound.alias("_p"))
-        .where(F.col("_p").getField("_keep"))
-        .select(
-            F.col("_p").getField("_msg_seq").alias("_msg_seq"),
-            F.col("_p").getField("ts").alias("ts"),
-            F.col("_p").getField("table").alias("table"),
-            F.col("_p").getField("op").alias("op"),
-            F.posexplode(F.col("_p").getField("_data")).alias("_pos", "_row"),
-        )
-    )
-    typed = F.struct(
-        *[
-            F.element_at(F.col("_row"), f.name).cast(f.dataType).alias(f.name)
-            for f in payload_schema.fields
-        ]
-    )
-    return exploded.select(
-        (F.col("_msg_seq") * F.lit(CANAL_BATCH_SHIFT) + F.col("_pos")).alias("seq"),
-        "ts",
-        "table",
-        "op",
-        typed.getField(pk).alias("pk"),
-        typed.alias("payload"),
-    )
+    return _normalize(df, canal_value_schema(), build)
 
 
 # wal2json change kind → EventType: exactly the three kinds the
 # reference's _consumer admits (meilisync/source/postgres.py:104-119);
 # other kinds ("message" logical decodings, "truncate") are dropped.
+# Format version 2 names them I/U/D and adds B (begin), C (commit),
+# T (truncate) and M (message) records, all dropped alike.
 WAL2JSON_OP_MAP: dict[str, str] = {
     "insert": "create",
     "update": "update",
     "delete": "delete",
 }
+WAL2JSON_V2_OP_MAP: dict[str, str] = {
+    "I": "create",
+    "U": "update",
+    "D": "delete",
+}
 
-# Intra-transaction ordering: one wal2json (v1) message carries a whole
+# Intra-transaction ordering: one wal2json v1 message carries a whole
 # transaction's change array and one nextlsn, so the change's array
 # position joins the LSN in the total order. 2^12 positions leaves
 # 2^51 bytes (~2 PiB) of WAL-lifetime headroom in int64. v1 has NO
-# message size cap — a bulk transaction can exceed 4096 changes, and a
-# clamped tail position would silently tie seqs, making last-wins
-# compaction (A5, max_by) pick a nondeterministic winner for a pk
-# touched twice past position 4095. The normalizer therefore FAILS
-# LOUDLY on oversized transactions instead of clamping; v2 (one message
-# per change, its own lsn each) never hits this.
+# message size cap, so a change past position 4095 fails the batch
+# (see _pack); v2 (one message per change, its own lsn each) never
+# hits this.
 WAL2JSON_CHANGE_SHIFT = 1 << 12
 _LSN_LO_MOD = 1 << 32  # lsn = hi·2^32 + lo, both hex in "HI/LO"
 
 
 def _lsn_to_long(lsn: Column) -> Column:
     """Postgres "HI/LO" hex LSN → ``hi·2^32 + lo`` (NULL when the
-    string doesn't parse) — the ONE implementation both wal2json format
-    versions pack their seq from, so the shared total-order domain
-    cannot silently diverge between them."""
+    string doesn't parse)."""
     hi = F.regexp_extract(lsn, r"^([0-9A-Fa-f]+)/", 1)
     lo = F.regexp_extract(lsn, r"/([0-9A-Fa-f]+)$", 1)
     return F.when(
@@ -481,54 +528,40 @@ def _lsn_to_long(lsn: Column) -> Column:
     )
 
 
-def _op_from_map(op_src: Column, mapping: dict[str, str]) -> Column:
-    """Source op token → EventType via a when-fold (NULL for anything
-    not in the map — the P5 kind filter)."""
-    op: Column = F.lit(None).cast("string")
-    for src, dst in reversed(list(mapping.items())):
-        op = F.when(op_src == src, F.lit(dst)).otherwise(op)
-    return op
-
-
 def wal2json_value_schema() -> T.StructType:
-    """Schema of a wal2json (format version 1) message — the payload
-    the reference's replication consumer receives
-    (meilisync/source/postgres.py:89-121): one JSON object per
-    transaction with a ``change`` array; each change carries parallel
-    ``columnnames``/``columntypes``/``columnvalues`` arrays, deletes
-    carry ``oldkeys`` instead (REPLICA IDENTITY pk columns), and
-    ``nextlsn``/``timestamp`` appear under the ``include-lsn`` /
-    ``include-timestamp`` plugin options the reference turns on.
+    """Schema of a wal2json message of either format version — the
+    union of both, so one parse reads a mixed stream.
 
-    ``columnvalues`` are heterogeneous typed JSON (numbers unquoted) —
-    decoded as ``array<string>`` (Spark renders each scalar token as
-    its string form; doubles round-trip bit-exactly through the later
-    cast) and re-typed against the caller's payload schema, the same
-    stringly-value pattern as :func:`normalize_canal`."""
-    keys = T.StructType(
-        [
-            T.StructField("keynames", T.ArrayType(T.StringType())),
-            T.StructField("keytypes", T.ArrayType(T.StringType())),
-            T.StructField("keyvalues", T.ArrayType(T.StringType())),
-        ]
-    )
+    Version 1 (the reference's replication consumer,
+    meilisync/source/postgres.py:89-121): one object per transaction
+    with a ``change`` array; each change carries parallel
+    ``columnnames``/``columntypes``/``columnvalues`` arrays, deletes
+    carry ``oldkeys`` instead (REPLICA IDENTITY columns); ``nextlsn``
+    and ``timestamp`` come with the ``include-lsn`` /
+    ``include-timestamp`` options. Version 2: one object per change —
+    ``action`` one-letter kind, ``columns`` / ``identity`` as arrays of
+    ``{name, type, value}``, per-change ``lsn`` / ``timestamp``.
+
+    Values are heterogeneous typed JSON (numbers unquoted), decoded as
+    strings (Spark renders each scalar token as its string form;
+    doubles round-trip bit-exactly through the later cast) and re-typed
+    against the caller's payload schema."""
+    s = T.StringType()
+    strings = T.ArrayType(s)
+    keys = T.StructType([T.StructField(n, strings)
+                         for n in ("keynames", "keytypes", "keyvalues")])
     change = T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("schema", T.StringType()),
-            T.StructField("table", T.StringType()),
-            T.StructField("columnnames", T.ArrayType(T.StringType())),
-            T.StructField("columntypes", T.ArrayType(T.StringType())),
-            T.StructField("columnvalues", T.ArrayType(T.StringType())),
-            T.StructField("oldkeys", keys),
-        ]
+        [T.StructField(n, s) for n in ("kind", "schema", "table")]
+        + [T.StructField(n, strings)
+           for n in ("columnnames", "columntypes", "columnvalues")]
+        + [T.StructField("oldkeys", keys)]
     )
+    col = T.ArrayType(T.StructType([T.StructField(n, s) for n in ("name", "type", "value")]))
     return T.StructType(
-        [
-            T.StructField("change", T.ArrayType(change)),
-            T.StructField("nextlsn", T.StringType()),
-            T.StructField("timestamp", T.StringType()),
-        ]
+        [T.StructField("change", T.ArrayType(change))]
+        + [T.StructField(n, s)
+           for n in ("nextlsn", "timestamp", "action", "schema", "table", "lsn")]
+        + [T.StructField("columns", col), T.StructField("identity", col)]
     )
 
 
@@ -538,262 +571,65 @@ def normalize_wal2json(
     *,
     pk: str = "id",
 ) -> DataFrame:
-    """Raw wal2json envelope → the engine's normalized event schema
-    ``(seq, ts, table, op, pk, payload struct)`` — the direct parser
-    for the reference's own Postgres transport
-    (meilisync/source/postgres.py:100-121), for users tailing a
-    wal2json drop-dir/topic without Debezium in between. Same contract
-    as the other normalizers, so everything downstream (routing P3,
-    compaction A5, MERGE apply S9-S11) is transport-agnostic.
+    """Raw wal2json envelope, format version 1 or 2 per message (a
+    message without ``action`` is v1) → the normalized change frame —
+    the reference's own Postgres transport
+    (meilisync/source/postgres.py:100-121) without Debezium in between.
 
-    Reference parity, and the deliberate divergences:
-
-    - op classification (P4): insert/update/delete → create/update/
-      delete; other kinds (``truncate``, logical ``message``) dropped
-      (P5). The reference ``return``s out of the whole message when it
-      meets an unconfigured table, silently discarding the REST of that
-      transaction's changes (quirk Q2, postgres.py:95-96); here every
-      change comes out tagged with its own ``table`` and the pipeline
-      routes per change — deliberately not replicated.
-    - payload: ``columnnames``/``columnvalues`` zipped into a map and
-      re-typed against ``payload_schema`` with per-field Catalyst casts
-      (no UDF). Deletes fall back to ``oldkeys`` when columnvalues are
-      absent — the reference keeps only the FIRST oldkey
-      (postgres.py:108-112); here every oldkey column is mapped (a
-      strict superset; downstream consumes only the pk either way,
-      meilisync/meili.py:136-137).
-    - ``json``-typed columns: the reference ``json.loads``es them into
-      dicts (postgres.py:101-103); here they stay JSON strings in a
-      string-typed payload field (the engine's payload contract is
-      typed scalars — parse downstream with ``from_json`` when the
-      structure matters).
-    - ``seq`` (last-wins total order, A5): ``nextlsn`` parsed from its
-      ``HI/LO`` hex form into ``hi·2^32 + lo`` — the same position the
-      reference stores as resume progress (``start_lsn``,
-      postgres.py:117) — then packed with the change's position in the
-      transaction (``lsn·2^12 + pos``); falls back to the Kafka
-      partition offset, then epoch-micros of ``timestamp``.
-    - ``ts``: the commit ``timestamp`` string (include-timestamp), cast
-      with full microsecond + zone-offset fidelity.
+    - op (P4): insert/update/delete (v2: I/U/D); other kinds dropped
+      (P5). The reference ``return``s out of the whole message at an
+      unconfigured table, discarding the rest of the transaction (quirk
+      Q2, postgres.py:95-96); here every change comes out tagged with
+      its own ``table`` — deliberately not replicated.
+    - payload: column names and values zipped into a map and re-typed
+      against ``payload_schema``; a delete without values falls back to
+      its REPLICA IDENTITY columns (v1 ``oldkeys``, v2 ``identity``) —
+      every key column, where the reference keeps the first
+      (postgres.py:108-112). ``json`` columns stay JSON strings (the
+      reference ``json.loads``es them, postgres.py:101-103).
+    - ``seq``, one domain for both versions: a v1 change at position
+      ``i`` of its transaction is ``nextlsn·2^12 + i`` (nextlsn's
+      ``HI/LO`` hex as ``hi·2^32 + lo``, the reference's resume
+      position, postgres.py:117), falling back to the Kafka offset,
+      then epoch-micros of ``timestamp``; a v2 change is ``lsn·2^12``,
+      falling back to the Kafka offset, else failing the batch — v2
+      changes of one transaction share the commit timestamp, so it
+      cannot order them.
+    - ``ts``: ``timestamp``, with microseconds and zone offset.
     """
-    v = F.from_json(F.col("value").cast("string"), wal2json_value_schema())
-    lsn_seq = _lsn_to_long(v.getField("nextlsn"))
-    ts = v.getField("timestamp").cast("timestamp")
-    base_candidates = [lsn_seq]
-    if "offset" in df.columns:  # kafka frame
-        base_candidates.append(F.col("offset"))
-    base_candidates.append(F.unix_micros(ts))
-    exploded = df.select(
-        F.coalesce(*base_candidates).alias("_msg_seq"),
-        ts.alias("ts"),
-        F.posexplode(v.getField("change")).alias("_pos", "_c"),
-    )
-    c = F.col("_c")
-    op = _op_from_map(c.getField("kind"), WAL2JSON_OP_MAP)
-    ok = c.getField("oldkeys")
-    row_map = F.when(
-        F.size(c.getField("columnvalues")) > 0,
-        F.map_from_arrays(c.getField("columnnames"), c.getField("columnvalues")),
-    ).otherwise(
-        F.map_from_arrays(ok.getField("keynames"), ok.getField("keyvalues"))
-    )
-    typed = F.struct(
-        *[
-            F.element_at(row_map, f.name).cast(f.dataType).alias(f.name)
-            for f in payload_schema.fields
-        ]
-    )
-    # Positions ≥ 2^12 would alias under the seq pack (tied seqs ⇒
-    # nondeterministic last-wins winner); fail the batch loudly rather
-    # than corrupt final row state. See WAL2JSON_CHANGE_SHIFT.
-    checked_pos = F.when(
-        F.col("_pos") < WAL2JSON_CHANGE_SHIFT, F.col("_pos")
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                "wal2json transaction has a change at position %s >= %s: "
-                "the lsn*2^12+pos seq pack cannot totally order it. "
-                "Split the transaction (wal2json write-in-chunks) or "
-                "switch to format version 2 (one message per change).",
-                F.col("_pos").cast("string"),
-                F.lit(str(WAL2JSON_CHANGE_SHIFT)),
-            )
-        ).cast("int")
-    )
-    seq = F.col("_msg_seq") * F.lit(WAL2JSON_CHANGE_SHIFT) + checked_pos
-    return (
-        exploded.where(op.isNotNull())
-        .select(
-            seq.alias("seq"),
-            "ts",
-            c.getField("table").alias("table"),
-            op.alias("op"),
-            typed.getField(pk).alias("pk"),
-            typed.alias("payload"),
-        )
-    )
+    def change(seq, ts, table, op, row_map):
+        return _typed(row_map, payload_schema,
+                      lambda p: _change(seq, ts, table, op, p.getField(pk), p))
 
+    def as_map(cols):
+        return F.map_from_arrays(F.transform(cols, lambda c: c.getField("name")),
+                                 F.transform(cols, lambda c: c.getField("value")))
 
-# wal2json format version 2 action → EventType. v2 additionally emits
-# B (begin), C (commit), T (truncate), M (logical message) records —
-# all dropped, matching the v1 kind filter (P5).
-WAL2JSON_V2_OP_MAP: dict[str, str] = {
-    "I": "create",
-    "U": "update",
-    "D": "delete",
-}
-
-
-def wal2json_v2_value_schema() -> T.StructType:
-    """Schema of a wal2json **format version 2** message: one JSON
-    object per *change* (not per transaction) — ``action`` one-letter
-    kind, ``columns`` as an array of ``{name, type, value}`` objects
-    (v1's parallel arrays zipped), ``identity`` (REPLICA IDENTITY
-    columns, same shape) on updates/deletes, and per-change ``lsn`` /
-    ``timestamp`` under the ``include-lsn`` / ``include-timestamp``
-    options. This is the widely-deployed modern format the reference's
-    v1-only consumer (meilisync/source/postgres.py:100-121) cannot
-    parse.
-
-    ``value`` decodes as string exactly like v1's ``columnvalues``
-    (typed JSON scalars rendered to their string form; re-typed against
-    the caller's payload schema with Catalyst casts downstream)."""
-    col = T.StructType(
-        [
-            T.StructField("name", T.StringType()),
-            T.StructField("type", T.StringType()),
-            T.StructField("value", T.StringType()),
-        ]
-    )
-    return T.StructType(
-        [
-            T.StructField("action", T.StringType()),
-            T.StructField("schema", T.StringType()),
-            T.StructField("table", T.StringType()),
-            T.StructField("columns", T.ArrayType(col)),
-            T.StructField("identity", T.ArrayType(col)),
-            T.StructField("lsn", T.StringType()),
-            T.StructField("timestamp", T.StringType()),
-        ]
-    )
-
-
-def normalize_wal2json_v2(
-    df: DataFrame,
-    payload_schema: T.StructType,
-    *,
-    pk: str = "id",
-) -> DataFrame:
-    """wal2json format-version-2 envelope → the engine's normalized
-    event schema ``(seq, ts, table, op, pk, payload struct)``.
-
-    Same contract as :func:`normalize_wal2json` (v1); differences that
-    follow from the format:
-
-    - one message per change ⇒ no posexplode and no intra-transaction
-      position: ``seq = lsn · 2^12`` — the SAME packed domain as v1, so
-      a mixed v1/v2 stream (``normalize_wal2json_auto``) totally orders
-      consistently. Each v2 change carries its own LSN, so the pack is
-      collision-free without a position term (and the v1 >4096-change
-      failure mode cannot occur).
-    - payload: ``columns[{name,value}]`` → map; deletes carry only
-      ``identity`` (REPLICA IDENTITY columns) and fall back to it, the
-      analogue of v1's ``oldkeys``.
-    - op (P4/P5): I/U/D → create/update/delete; B/C/T/M records are
-      dropped.
-    """
-    # Two-level lambda binding (round 13, same idiom as
-    # normalize_maxwell): the OUTER transform binds the parsed envelope
-    # (one from_json per row — per-field schema pruning otherwise split
-    # it into ~10 separate parses), the INNER one binds the assembled
-    # row_map (otherwise re-expanded, from_json included, once per
-    # payload field by alias substitution inside the typed struct).
-    parsed = F.from_json(F.col("value").cast("string"), wal2json_v2_value_schema())
-    kafka_offset = F.col("offset") if "offset" in df.columns else None
-
-    def _as_map(cols: Column) -> Column:
-        return F.map_from_arrays(
-            F.transform(cols, lambda c: c.getField("name")),
-            F.transform(cols, lambda c: c.getField("value")),
-        )
-
-    def _build(v):
-        lsn_seq = _lsn_to_long(v.getField("lsn"))
+    def build(v, offset):
         ts = v.getField("timestamp").cast("timestamp")
-        # packed domain shared with v1 (lsn·2^12, position 0 — one
-        # change per message). Fallback ladder: Kafka offset (a real
-        # per-change total order), then FAIL LOUDLY. v1 can fall back
-        # to the commit timestamp because its array position
-        # disambiguates changes within a transaction; v2 without lsn
-        # has NOTHING to order two changes of one transaction — every
-        # change shares the commit timestamp, seqs tie, and last-wins
-        # compaction picks a nondeterministic winner. Silent wrong
-        # final row state is never acceptable (same stance as the v1
-        # >4096-position guard).
-        base_candidates = [lsn_seq]
-        if kafka_offset is not None:  # kafka frame
-            base_candidates.append(kafka_offset)
-        base_candidates.append(
-            F.raise_error(
-                F.lit(
-                    "wal2json v2 message carries no lsn and the frame has no "
-                    "Kafka offset: the commit timestamp cannot totally order "
-                    "multiple changes of one transaction (tied seqs make "
-                    "last-wins nondeterministic). Enable include-lsn on the "
-                    "replication slot, or consume through Kafka."
-                )
-            ).cast("long")
-        )
-        seq = F.coalesce(*base_candidates) * F.lit(WAL2JSON_CHANGE_SHIFT)
-        op = _op_from_map(v.getField("action"), WAL2JSON_V2_OP_MAP)
-        row_map = F.when(
-            F.size(v.getField("columns")) > 0, _as_map(v.getField("columns"))
-        ).otherwise(_as_map(v.getField("identity")))
+        v1_seq = F.coalesce(_lsn_to_long(v.getField("nextlsn")), offset, F.unix_micros(ts))
+        v1 = F.transform(v.getField("change"), lambda c, i: change(
+            _pack(v1_seq, i, WAL2JSON_CHANGE_SHIFT,
+                  "wal2json transaction (split it with write-in-chunks, or use "
+                  "format version 2) has a change at position"),
+            ts, c.getField("table"), _op_from_map(c.getField("kind"), WAL2JSON_OP_MAP),
+            F.when(F.size(c.getField("columnvalues")) > 0, F.map_from_arrays(
+                c.getField("columnnames"), c.getField("columnvalues"))
+            ).otherwise(F.map_from_arrays(c.getField("oldkeys").getField("keynames"),
+                                          c.getField("oldkeys").getField("keyvalues")))))
+        v2_seq = F.coalesce(_lsn_to_long(v.getField("lsn")), offset, F.raise_error(F.lit(
+            "wal2json v2 message carries no lsn and the frame has no Kafka offset: "
+            "the commit timestamp cannot order the changes of one transaction. "
+            "Enable include-lsn on the replication slot, or consume through Kafka."
+        )).cast("long"))
+        v2 = F.array(change(
+            v2_seq * F.lit(WAL2JSON_CHANGE_SHIFT), ts, v.getField("table"),
+            _op_from_map(v.getField("action"), WAL2JSON_V2_OP_MAP),
+            F.when(F.size(v.getField("columns")) > 0, as_map(v.getField("columns")))
+            .otherwise(as_map(v.getField("identity")))))
+        return F.when(v.getField("action").isNull(), v1).otherwise(v2)
 
-        def _typed(rm):
-            typed = F.struct(
-                *[
-                    F.element_at(rm, f.name).cast(f.dataType).alias(f.name)
-                    for f in payload_schema.fields
-                ]
-            )
-            return F.struct(
-                seq.alias("seq"),
-                ts.alias("ts"),
-                v.getField("table").alias("table"),
-                op.alias("op"),
-                typed.getField(pk).alias("pk"),
-                typed.alias("payload"),
-            )
-
-        return F.element_at(F.transform(F.array(row_map), _typed), 1)
-
-    bound = F.element_at(F.transform(F.array(parsed), _build), 1)
-    return (
-        df.select(bound.alias("_norm"))
-        .select("_norm.*")
-        .where(F.col("op").isNotNull())
-    )
-
-
-def normalize_wal2json_auto(
-    df: DataFrame,
-    payload_schema: T.StructType,
-    *,
-    pk: str = "id",
-) -> DataFrame:
-    """Per-row wal2json format dispatch: v1 messages carry a ``change``
-    array, v2 messages carry ``action`` — a user pointing the drop-dir
-    tail at either slot kind (or a stream that upgraded mid-retention)
-    parses correctly without declaring the version. The marker probe is
-    one cheap ``get_json_object``; each branch's full parse runs only
-    on its own rows (the filter sits under the parse), and both
-    branches emit the same ``lsn·2^12``-packed seq domain so the union
-    totally orders consistently."""
-    marker = F.get_json_object(F.col("value").cast("string"), "$.action")
-    v1 = normalize_wal2json(df.where(marker.isNull()), payload_schema, pk=pk)
-    v2 = normalize_wal2json_v2(df.where(marker.isNotNull()), payload_schema, pk=pk)
-    return v1.unionByName(v2)
+    return _normalize(df, wal2json_value_schema(), build)
 
 
 # ---------------------------------------------------------------------------
@@ -846,15 +682,12 @@ def maxwell_roundtrip(events: DataFrame) -> DataFrame:
     file·2^40+offset coordinate and the doubles must round-trip through
     JSON bit-exactly (Jackson shortest-repr)."""
     src = _rt_source(events)
-    op_src: Column = F.lit(None).cast("string")
-    for evt, mop in reversed(list(_RT_OPS.items())):
-        op_src = F.when(F.col("event_type") == evt, F.lit(mop)).otherwise(op_src)
     env = src.select(
         F.to_json(
             F.struct(
                 F.lit("app").alias("database"),
                 F.lit("users").alias("table"),
-                op_src.alias("type"),
+                _op_from_map(F.col("event_type"), _RT_OPS).alias("type"),
                 F.unix_timestamp("ts").alias("ts"),
                 F.col("event_id").alias("xid"),
                 F.format_string(
@@ -900,17 +733,11 @@ def canal_roundtrip(events: DataFrame) -> DataFrame:
     time into the ``data`` array, values rendered as strings the way
     canal-json does, message id = the batch's min event_id, ``es`` =
     the first row's event time) and normalized back via
-    :func:`normalize_canal`. Exercises the posexplode seq pack
+    :func:`normalize_canal`. Exercises the per-row seq pack
     (id·2^20+pos), the stringly-value re-typing, and the es-vs-ts clock
     choice — end to end against an oracle computed straight from the
     source columns."""
     src = _rt_source(events)
-    op_src: Column = F.lit(None).cast("string")
-    for evt, dst in reversed(
-        [("signup", "INSERT"), ("purchase", "UPDATE"), ("click", "UPDATE"),
-         ("error", "DELETE")]
-    ):
-        op_src = F.when(F.col("event_type") == evt, F.lit(dst)).otherwise(op_src)
     grouped = (
         src.withColumn("_batch", (F.col("event_id") / CANAL_RT_BATCH).cast("long"))
         # batch key is the RAW source op: a statement's rows share one
@@ -932,7 +759,10 @@ def canal_roundtrip(events: DataFrame) -> DataFrame:
     grouped = grouped.repartition(
         grouped.sparkSession.sparkContext.defaultParallelism
     )
-    env = grouped.withColumn("_ctype", op_src).select(
+    canal_ops = {evt: typ.upper() for evt, typ in _RT_OPS.items()}
+    env = grouped.withColumn(
+        "_ctype", _op_from_map(F.col("event_type"), canal_ops)
+    ).select(
         F.to_json(
             F.struct(
                 F.lit("app").alias("database"),
@@ -1024,16 +854,6 @@ def _w2j_num(c: Column) -> Column:
     return F.coalesce(c.cast("string"), F.lit("null"))
 
 
-def _w2j_kind_col() -> Column:
-    kind: Column = F.lit(None).cast("string")
-    for evt, w2j_kind in reversed(
-        [("signup", "insert"), ("purchase", "update"), ("click", "update"),
-         ("error", "delete")]
-    ):
-        kind = F.when(F.col("event_type") == evt, F.lit(w2j_kind)).otherwise(kind)
-    return kind
-
-
 def _w2j_v1_envelopes(src: DataFrame) -> DataFrame:
     """Render roundtrip-source rows as wal2json v1 transaction messages
     (``WAL2JSON_RT_BATCH`` changes per message; see
@@ -1050,7 +870,7 @@ def _w2j_v1_envelopes(src: DataFrame) -> DataFrame:
                 F.collect_list(F.struct("event_id", "user_id", "value", "k"))
             ).alias("_rows"),
         )
-        .withColumn("_kind", _w2j_kind_col())
+        .withColumn("_kind", _op_from_map(F.col("event_type"), _RT_OPS))
     )
 
     # same CPU-density fan-out as canal_roundtrip: the render below is
@@ -1062,7 +882,7 @@ def _w2j_v1_envelopes(src: DataFrame) -> DataFrame:
 
     _num = _w2j_num
 
-    def _change(r: Column) -> Column:
+    def _render(r: Column) -> Column:
         row_change = F.format_string(
             '{"kind":"%s","schema":"public","table":"users",'
             '"columnnames":["user_id","value","k"],'
@@ -1084,7 +904,7 @@ def _w2j_v1_envelopes(src: DataFrame) -> DataFrame:
     return grouped.select(
         F.concat(
             F.lit('{"change":['),
-            F.array_join(F.transform("_rows", _change), ","),
+            F.array_join(F.transform("_rows", _render), ","),
             F.lit('],"nextlsn":"'),
             F.format_string(
                 "%X/%X",
@@ -1135,37 +955,27 @@ def _w2j_v2_envelopes(src: DataFrame) -> DataFrame:
         ),
         tail,
     )
-    return src.withColumn("_kind", _w2j_kind_col()).select(
+    return src.withColumn("_kind", _op_from_map(F.col("event_type"), _RT_OPS)).select(
         F.when(F.col("_kind") == "delete", del_msg).otherwise(row_msg).alias("value")
     )
 
 
 def wal2json_v2_roundtrip(events: DataFrame) -> DataFrame:
     """(seq, ts, table, op, pk, value, k) — a MIXED-format wal2json
-    stream pushed through :func:`normalize_wal2json_auto`: even
+    stream pushed through :func:`normalize_wal2json`: even
     ``event_id // WAL2JSON_RT_BATCH`` batches render as v1 transaction
     messages (change array, nextlsn), odd batches as per-event v2
     messages (``action``/``columns[{name,type,value}]``/``identity``
-    deletes, per-change lsn). Certifies the v2 parser, the per-row
-    format dispatch, AND that both parsers land in one shared
+    deletes, per-change lsn). Certifies the v2 branch, the per-message
+    version choice, AND that both versions land in one shared
     ``lsn·2^12``-packed seq domain — end to end against an oracle
     computed straight from the source columns."""
-    from meilisync_spark.pin import SER as _SER
-
     src = _rt_source(events)
     parity = (F.col("event_id") / WAL2JSON_RT_BATCH).cast("long") % 2
     env = _w2j_v1_envelopes(src.where(parity == 0)).unionByName(
         _w2j_v2_envelopes(src.where(parity == 1))
     )
-    # pin the rendered envelopes: normalize_wal2json_auto forks the
-    # union into v1/v2 marker branches, and without a plan barrier each
-    # branch re-runs BOTH render subtrees with the marker probe's
-    # get_json_object substituted over the full to_json render — the
-    # row's decomposition showed three serial map stages re-rendering
-    # the same envelopes (round 13). The pin renders once; the auto
-    # dispatch then probes materialized strings.
-    env = env.localCheckpoint(False, storageLevel=_SER)
-    out = normalize_wal2json_auto(env, _RT_PAYLOAD, pk="user_id")
+    out = normalize_wal2json(env, _RT_PAYLOAD, pk="user_id")
     return out.select(
         "seq", "ts", "table", "op", "pk",
         F.col("payload").getField("value").alias("value"),
@@ -1233,103 +1043,3 @@ def wal2json_roundtrip_oracle_sql() -> str:
            CASE WHEN event_type = 'error' THEN NULL ELSE k END AS k
     FROM w
     """
-
-
-# Mongo change-stream operationType → EventType: exactly the three ops
-# the reference's $match pipeline admits (meilisync/source/mongo.py:44-50)
-MONGO_OP_MAP: dict[str, str] = {
-    "insert": "create",
-    "update": "update",
-    "delete": "delete",
-}
-
-
-def mongo_change_stream_schema(payload_schema: T.StructType) -> T.StructType:
-    """Schema of a MongoDB change-stream event document (the shape the
-    reference's ``db.watch`` yields, meilisync/source/mongo.py:55-74).
-    ``updateDescription.updatedFields`` reuses ``payload_schema`` —
-    absent fields decode as NULL, which is exactly the sparse-update
-    payload the partial MERGE expects (Q4/S10)."""
-    return T.StructType(
-        [
-            T.StructField("operationType", T.StringType()),
-            T.StructField(
-                "clusterTime", T.StructType([T.StructField("t", T.LongType()),
-                                             T.StructField("i", T.LongType())])
-            ),
-            T.StructField(
-                "ns",
-                T.StructType(
-                    [T.StructField("db", T.StringType()),
-                     T.StructField("coll", T.StringType())]
-                ),
-            ),
-            T.StructField(
-                "documentKey", T.StructType([T.StructField("_id", T.StringType())])
-            ),
-            T.StructField("fullDocument", payload_schema),
-            T.StructField(
-                "updateDescription",
-                T.StructType([T.StructField("updatedFields", payload_schema)]),
-            ),
-        ]
-    )
-
-
-def normalize_mongo_change_stream(
-    df: DataFrame,
-    payload_schema: T.StructType,
-) -> DataFrame:
-    """Mongo change-stream envelope → the engine's normalized event
-    schema ``(seq, ts, table, op, pk, payload struct)`` — completing
-    S4-S6's production trio beside :func:`normalize_debezium`.
-
-    Reference parity (meilisync/source/mongo.py:55-74):
-
-    - op classification (P4): insert/update/delete → create/update/
-      delete; other operationTypes (drop, rename, invalidate) are
-      filtered out — the reference's ``$match`` pipeline does the same
-      server-side (mongo.py:44).
-    - payload: ``fullDocument`` for insert,
-      ``updateDescription.updatedFields`` for update (the sparse
-      partial-update payload, Q4 — mongo.py:62-64), ``documentKey``
-      alone for delete (mongo.py:65-67: the delete path carries only
-      the pk).
-    - pk: ``documentKey._id`` stringified on every op, exactly the
-      reference's ``data["_id"] = str(change["documentKey"]["_id"])``
-      (mongo.py:68, F4 pk stringification).
-    - ``seq``: clusterTime (t, i) packed into one 64-bit position —
-      Mongo's own total order (t = epoch seconds, i = intra-second
-      counter); the Kafka partition offset, when the frame carries
-      one, is appended as a tiebreak-free fallback.
-    - routing (P3): ``table`` is ``ns.coll``; the pipeline routes each
-      sync its collection's rows, ≡ the reference's per-sync collection
-      routing.
-    """
-    v = F.from_json(
-        F.col("value").cast("string"), mongo_change_stream_schema(payload_schema)
-    )
-    op_src = v.getField("operationType")
-    op: Column = F.lit(None).cast("string")
-    for src, dst in reversed(list(MONGO_OP_MAP.items())):
-        op = F.when(op_src == src, F.lit(dst)).otherwise(op)
-    payload = (
-        F.when(op_src == "update", v.getField("updateDescription").getField("updatedFields"))
-        .when(op_src == "insert", v.getField("fullDocument"))
-        .otherwise(F.lit(None).cast(payload_schema))
-    )
-    ct = v.getField("clusterTime")
-    seq_candidates = [
-        ct.getField("t") * F.lit(2**20) + F.coalesce(ct.getField("i"), F.lit(0))
-    ]
-    if "offset" in df.columns:  # kafka frame
-        seq_candidates.append(F.col("offset"))
-    return df.select(
-        F.coalesce(*seq_candidates).alias("seq"),
-        F.timestamp_seconds(ct.getField("t")).alias("ts"),
-        v.getField("ns").getField("coll").alias("table"),
-        op.alias("op"),
-        # F4: pk stringification on every op kind (mongo.py:68)
-        v.getField("documentKey").getField("_id").cast("string").alias("pk"),
-        payload.alias("payload"),
-    ).where(F.col("op").isNotNull())

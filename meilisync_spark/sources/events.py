@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meilisync_spark.sources.cdc_connectors import _op_from_map
+
 # Source-native op → normalized op (EventType, meilisync/enums.py:4-7).
 # Ops absent from the map are not consumed (P5): `view` is a read-only
 # event kind, like binlog events outside Write/Update/Delete rows.
@@ -34,13 +36,6 @@ DEFAULT_OP_MAP: dict[str, str] = {
 }
 
 PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])
-
-
-def _op_expr(op_map: dict[str, str]) -> Column:
-    expr = F.lit(None).cast("string")
-    for src, dst in reversed(list(op_map.items())):
-        expr = F.when(F.col("event_type") == src, F.lit(dst)).otherwise(expr)
-    return expr
 
 
 def classify_events(
@@ -76,7 +71,7 @@ def classify_events(
         F.col("event_id").alias("seq"),
         F.col("ts"),
         (table if isinstance(table, Column) else F.lit(table)).alias("table"),  # P3
-        _op_expr(op_map).alias("op"),  # P4: op classification
+        _op_from_map(F.col("event_type"), op_map).alias("op"),  # P4
         (F.col(pk_col) if isinstance(pk_col, str) else pk_col).alias("pk"),
         F.col("value"),
         # F3: dynamic JSON payload → typed column

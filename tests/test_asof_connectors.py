@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import types as T
 
 from meilisync_spark.operators.asof import asof_join
@@ -650,7 +651,7 @@ def test_normalize_wal2json_v2_envelope(spark):
     pk); seq = lsn·2^12 (same packed domain as v1)."""
     from meilisync_spark.sources.cdc_connectors import (
         WAL2JSON_CHANGE_SHIFT,
-        normalize_wal2json_v2,
+        normalize_wal2json,
     )
 
     payload_schema = T.StructType(
@@ -669,7 +670,7 @@ def test_normalize_wal2json_v2_envelope(spark):
         (_w2j_v2("C"),),  # commit — dropped
     ]
     df = spark.createDataFrame(rows, "value string")
-    out = normalize_wal2json_v2(df, payload_schema, pk="id").collect()
+    out = normalize_wal2json(df, payload_schema, pk="id").collect()
     assert [(r.table, r.op, r.pk) for r in out if r.table != "users"] == [
         ("other", "create", 2)]
     out = [r for r in out if r.table == "users"]
@@ -695,7 +696,7 @@ def test_wal2json_v2_without_lsn_fails_loudly(spark):
 
     from meilisync_spark.sources.cdc_connectors import (
         WAL2JSON_CHANGE_SHIFT,
-        normalize_wal2json_v2,
+        normalize_wal2json,
     )
 
     payload_schema = T.StructType([T.StructField("id", T.LongType())])
@@ -706,20 +707,20 @@ def test_wal2json_v2_without_lsn_fails_loudly(spark):
     })
     plain = spark.createDataFrame([(msg,)], "value string")
     with pytest.raises(Exception, match="include-lsn"):
-        normalize_wal2json_v2(plain, payload_schema, pk="id").collect()
+        normalize_wal2json(plain, payload_schema, pk="id").collect()
     kafka = spark.createDataFrame([(msg, 41)], "value string, offset long")
-    out = normalize_wal2json_v2(kafka, payload_schema, pk="id").collect()
+    out = normalize_wal2json(kafka, payload_schema, pk="id").collect()
     assert [r.seq for r in out] == [41 * WAL2JSON_CHANGE_SHIFT]
 
 
 def test_normalize_wal2json_auto_mixed_stream(spark):
-    """Per-row format dispatch: a drop dir holding both v1 transaction
+    """Per-message format version: a drop dir holding both v1 transaction
     messages and v2 per-change messages normalizes into one stream in
     the shared lsn·2^12 seq domain — a slot upgrade mid-retention needs
     no operator change."""
     from meilisync_spark.sources.cdc_connectors import (
         WAL2JSON_CHANGE_SHIFT,
-        normalize_wal2json_auto,
+        normalize_wal2json,
     )
 
     payload_schema = T.StructType(
@@ -732,7 +733,7 @@ def test_normalize_wal2json_auto_mixed_stream(spark):
                  lsn="0/20"),),
         (_w2j_v2("D", identity=[("id", "bigint", 2)], lsn="0/30"),),
     ]
-    out = normalize_wal2json_auto(
+    out = normalize_wal2json(
         spark.createDataFrame(rows, "value string"), payload_schema, pk="id"
     ).collect()
     seqs = sorted(r.seq for r in out)
@@ -741,3 +742,63 @@ def test_normalize_wal2json_auto_mixed_stream(spark):
     by_seq = {r.seq: r for r in out}
     assert by_seq[32 * WAL2JSON_CHANGE_SHIFT].op == "update"
     assert by_seq[48 * WAL2JSON_CHANGE_SHIFT].op == "delete"
+
+
+def test_mongo_increment_past_shift_fails_loudly(spark):
+    """clusterTime packs as t·2^20 + i, but i is a uint32: (t, 2^20)
+    would tie with (t+1, 0) and last-wins would pick an arbitrary
+    winner, so an increment ≥ 2^20 fails the batch."""
+    from meilisync_spark.sources.cdc_connectors import (
+        MONGO_INCREMENT_SHIFT,
+        normalize_mongo_change_stream,
+    )
+
+    payload_schema = T.StructType([T.StructField("age", T.LongType())])
+    t = 1700000000
+    tie = spark.createDataFrame(
+        [(_mongo_cs("insert", key="a", full={"age": 1}, t=t, i=MONGO_INCREMENT_SHIFT),),
+         (_mongo_cs("update", key="a", updated={"age": 2}, t=t + 1, i=0),)],
+        "value string",
+    )
+    with pytest.raises(Exception, match="increment"):
+        normalize_mongo_change_stream(tie, payload_schema).collect()
+    ok = spark.createDataFrame(
+        [(_mongo_cs("insert", key="a", full={"age": 1}, t=t, i=MONGO_INCREMENT_SHIFT - 1),)],
+        "value string",
+    )
+    assert [r.seq for r in normalize_mongo_change_stream(ok, payload_schema).collect()] == [
+        t * MONGO_INCREMENT_SHIFT + MONGO_INCREMENT_SHIFT - 1]
+
+
+_BAD_BATCHES = {
+    # format: (normalizer name, unknown-kind line, valid line)
+    "debezium": ("normalize_debezium", _dbz("t", None, None),
+                 _dbz("c", None, {"id": 5})),
+    "maxwell": ("normalize_maxwell", _mxw("table-create", None),
+                _mxw("insert", {"id": 5}, position="m.000001:7")),
+    "canal": ("normalize_canal", _cnl("ALTER", None, is_ddl=True),
+              _cnl("INSERT", [{"id": "5"}])),
+    "mongo": ("normalize_mongo_change_stream", _mongo_cs("invalidate"),
+              _mongo_cs("insert", key="5", full={"id": 5})),
+    "wal2json": ("normalize_wal2json",
+                 _w2j([{"kind": "truncate", "schema": "public", "table": "users"}]),
+                 _w2j([_w2j_row("insert", ["id"], [5])])),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(_BAD_BATCHES))
+def test_malformed_and_unknown_lines_drop_without_failing_the_batch(spark, fmt):
+    """One batch of truncated JSON lines, an unknown-kind line and a
+    valid line yields exactly the valid change, and the batch does not
+    fail. The truncated lines are every proper prefix of the valid one:
+    the parse keeps the fields it read before the error, so some of
+    them carry an op without a pk (a maxwell prefix cut after ``type``
+    used to come out as a NULL-pk create)."""
+    from meilisync_spark.sources import cdc_connectors as cc
+
+    name, unknown, valid = _BAD_BATCHES[fmt]
+    payload_schema = T.StructType([T.StructField("id", T.LongType())])
+    lines = [valid[:cut] for cut in range(1, len(valid))] + [unknown, valid]
+    df = spark.createDataFrame([(x,) for x in lines], "value string")
+    out = getattr(cc, name)(df, payload_schema).collect()
+    assert [(r.table, r.op, str(r.pk)) for r in out] == [("users", "create", "5")]

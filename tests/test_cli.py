@@ -266,7 +266,10 @@ def _routed_changes(seed: int) -> list[tuple]:
 
 def _render_envelopes(changes: list[tuple], envelope: str) -> list[str]:
     """One text line per Maxwell row change, or per wal2json v1
-    transaction of three changes (so transactions mix tables)."""
+    transaction of three changes (so transactions mix tables). With
+    ``wal2json_mixed`` every other transaction is rendered as format-v2
+    messages instead, one per change, each at its own lsn inside the
+    transaction's range."""
     def row(table, key, v):
         return {"oid": key, "v": v} if table == "orders" else {"id": key, "v": v}
 
@@ -276,6 +279,16 @@ def _render_envelopes(changes: list[tuple], envelope: str) -> list[str]:
                             "data": row(t, k, v)}) for i, t, op, k, v in changes]
     lines = []
     for j in range(0, len(changes), 3):
+        if envelope == "wal2json_mixed" and j % 2:
+            for pos, (_, t, op, k, v) in enumerate(changes[j:j + 3]):
+                cols = [{"name": n, "type": "bigint", "value": x}
+                        for n, x in row(t, k, v).items()]
+                msg = {"action": op[0].upper(), "schema": "public", "table": t,
+                       "lsn": f"0/{16 * (j + 1) + pos:X}",
+                       "timestamp": "2023-11-14 22:13:20+00"}
+                msg.update({"identity": cols[:1]} if op == "delete" else {"columns": cols})
+                lines.append(json.dumps(msg))
+            continue
         tx = []
         for _, t, op, k, v in changes[j:j + 3]:
             r = row(t, k, v)
@@ -355,6 +368,43 @@ def test_cli_start_envelope_routes_syncs_config(spark, tmp_path, envelope):
     assert {(r.pk, r.v) for r in orders.collect()} == _last_change_per_key(changes, "orders")
     assert "oid" not in orders.columns  # the sync's pk became the key
     assert set(json.loads(progress.read_text())) == {"users", "orders"}
+
+
+def test_cli_start_wal2json_mixed_versions_equal_oracle(spark, tmp_path):
+    """`--envelope wal2json` over a text log mixing format-v1
+    transactions and format-v2 per-change messages: the one normalizer
+    reads each message's version, and the index equals a DuckDB
+    last-change-per-key oracle."""
+    changes = [c for c in _routed_changes(5) if c[1] == "users"]
+    lines = _render_envelopes(changes, "wal2json_mixed")
+    assert any('"action"' in x for x in lines) and any('"change"' in x for x in lines)
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "wal.jsonl").write_text("\n".join(lines) + "\n")
+    index = str(tmp_path / "index")
+    rc = main([
+        "start", "--events", str(drop), "--index", index,
+        "--checkpoint", str(tmp_path / "c"),
+        "--source-format", "text", "--envelope", "wal2json",
+        "--payload-schema", "id long, v double",
+    ])
+    assert rc == 0
+    got = {(r.pk, r.v) for r in spark.read.parquet(index).collect()}
+    assert got == _last_change_per_key(changes, "users")
+
+
+@pytest.mark.parametrize("envelope", ["wal2json_v1", "wal2json_v2"])
+def test_cli_start_rejects_wal2json_version_envelopes(tmp_path, capsys, envelope):
+    """`--envelope wal2json` reads the format version from each message,
+    so the two version-pinning choices are gone: argparse exits 2."""
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "start", "--events", str(tmp_path), "--index", str(tmp_path / "i"),
+            "--checkpoint", str(tmp_path / "c"), "--source-format", "text",
+            "--envelope", envelope, "--payload-schema", "id long",
+        ])
+    assert exc.value.code == 2
+    assert "invalid choice" in capsys.readouterr().err
 
 
 def test_cli_start_envelope_tail_sync_records_head_in_seq_domain(spark, tmp_path):

@@ -9,7 +9,10 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
+
 from meilisync_spark import queries as Q
+from meilisync_spark.cli import ENVELOPES, envelope_normalizer
 from tests.conftest import SF_SMOKE
 
 
@@ -434,3 +437,18 @@ def test_bucketed_apply_task_width_and_driver_listing(spark, tmp_path):
     for b in range(n_buckets):
         files = os.listdir(os.path.join(index, f"{BUCKET_COL}={b}"))
         assert len([f for f in files if f.endswith(".parquet")]) == 1, (b, files)
+
+
+@pytest.mark.parametrize("envelope", list(ENVELOPES))
+def test_envelope_normalizer_parses_each_message_once(spark, tmp_path, envelope):
+    """Every `start --envelope` format, with the CLI's payload flatten,
+    plans one file scan and one `from_json` outside it, and no
+    `get_json_object` probe: each message is parsed once, on one path
+    (the wal2json v1/v2 union used to fork the stream into two scans)."""
+    (tmp_path / "log.jsonl").write_text("{}\n")
+    norm = envelope_normalizer(envelope, "id long, v double", "id")
+    plan = norm(spark.read.text(str(tmp_path)))._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("\n")
+    assert sum("FileScan" in x for x in lines) == 1, plan
+    assert sum(x.count("from_json(") for x in lines if "FileScan" not in x) == 1, plan
+    assert "get_json_object" not in plan

@@ -455,8 +455,8 @@ def test_wal2json_normalizer_roundtrip_any_payload(spark, rows):
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 def test_wal2json_v2_auto_roundtrip_any_payload(spark, rows):
-    """The v2 twin of the adversarial roundtrip, pushed through the
-    AUTO dispatcher on a mixed stream: each payload rendered as its own
+    """The v2 twin of the adversarial roundtrip, pushed through
+    normalize_wal2json on a mixed stream: each payload rendered as its own
     format-v2 message (columns[{name,type,value}] by a real JSON
     encoder) plus one v1 transaction message carrying a delete —
     strings byte-equal, doubles bit-equal, both formats landing in the
@@ -468,7 +468,7 @@ def test_wal2json_v2_auto_roundtrip_any_payload(spark, rows):
 
     from meilisync_spark.sources.cdc_connectors import (
         WAL2JSON_CHANGE_SHIFT,
-        normalize_wal2json_auto,
+        normalize_wal2json,
     )
 
     schema = T.StructType([
@@ -498,7 +498,7 @@ def test_wal2json_v2_auto_roundtrip_any_payload(spark, rows):
         "nextlsn": "2/F",
         "timestamp": "2023-11-14 22:13:20.000123+00",
     }),))
-    out = normalize_wal2json_auto(
+    out = normalize_wal2json(
         spark.createDataFrame(msgs, "value string"), schema, pk="id"
     ).collect()
     base = 2 << 32
